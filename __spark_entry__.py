@@ -167,8 +167,7 @@ def q_prf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = ev.filter(F.col("event_id") % 2 == 0).select("user_id", "event_type")
     pred = ev.filter(F.col("event_id") % 2 == 1).select("user_id", "event_type")
     counters = eval_ops.prf_counters(gold, pred, ["user_id"], "event_type")
-    metrics = eval_ops.prf_metrics(counters, "event_type")
-    return counters.join(metrics, "event_type")
+    return eval_ops.prf_metrics(counters, "event_type")
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -174,6 +174,21 @@ def test_bigram_features_separate_order_dependent_labels(spark):
     assert acc(2) >= 0.95
 
 
+def test_perplexity_labels_leave_no_cache(spark, sf_dir):
+    """The scored table is pinned for the duration of the call only: the
+    session's cache manager is empty afterwards, and the labels are the
+    exact-percentile split of the LM nll."""
+    from x5_ner_spark.operators import lm
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    spark.catalog.clearCache()
+    lab = {r["doc_id"]: r["label"] for r in qt.perplexity_labels(docs).collect()}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    nll = {r["doc_id"]: r["nll"] for r in lm.lm_perplexity(docs).collect()}
+    thr = float(np.percentile(list(nll.values()), 50))
+    assert lab == {d: float(v <= thr) for d, v in nll.items()}
+
+
 def test_perplexity_labels_need_bigram_features(spark, sf_dir):
     """The CCNet-shape second labeling source, and the feature-order
     argument it demonstrates: the label IS a bigram-statistic (LM nll

@@ -319,6 +319,45 @@ def test_gopher_filters_rules_and_edges(spark):
     # map-only: no Exchange anywhere in the plan
     plan = text_stats.gopher_filters(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    # a caller's filter("keep") is pushed below the operator's projections;
+    # the token array must still be built once in the Filter and once in
+    # the projection, not once per reference to a named intermediate column
+    full = text_stats.gopher_filters(docs, carry=("text",))
+    kept = full.filter("keep")
+    opt = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("split(") <= 2, opt
+    assert sorted(kept.collect()) == sorted(r for r in full.collect() if r["keep"])
+
+
+def test_prf_counters_null_keys_match_oracle(spark, tmp_path):
+    """A NULL key present on both sides is one FP and one FN, not a TP, and
+    a NULL type gets zero counters — the DuckDB oracle's DISTINCT + JOIN …
+    USING semantics, run on the same events."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    # gold = even event ids, pred = odd (q_prf_eval's split)
+    events = [
+        (0, None, "a"), (6, None, "a"), (2, 1, "a"), (4, 2, "b"),  # gold
+        (1, None, "a"), (3, 1, "a"), (5, 3, "b"),                  # pred
+        (8, 4, None), (7, 4, None), (10, 5, None),                 # NULL type
+    ]
+    schema = "event_id long, user_id long, event_type string"
+    spark.createDataFrame(events, schema).write.parquet(str(tmp_path / "events.parquet"))
+    got = {
+        r["event_type"]: (r["tp"], r["fp"], r["fn"])
+        for r in entrymod.q_prf_eval(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE events ({schema.replace('long', 'BIGINT')})")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?)", events)
+    want = {
+        t: (tp, fp, fn)
+        for t, tp, fp, fn, *_ in con.execute(entrymod.oracle_sql()["prf_eval"]).fetchall()
+    }
+    assert want == {"a": (1, 1, 1), "b": (0, 1, 1), None: (0, 0, 0)}
+    assert got == want
 
 
 def test_canonical_urls_pinned_vectors(spark):

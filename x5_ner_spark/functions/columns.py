@@ -10,6 +10,8 @@ only applied to short keys (tokens/shingles), so it never dominates a scan.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -19,6 +21,16 @@ def portable_hash32(col: Column | str, salt: str = "") -> Column:
     if salt:
         c = F.concat(c.cast("string"), F.lit(salt))
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast("bigint")
+
+
+def bind_once(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``v`` a lambda variable holding ``value``, evaluated
+    ONCE per row (transform over a one-element array). Higher-order-function
+    lambdas run interpreted, with no common-subexpression elimination, so an
+    expensive array referenced several times inside a lambda body — or
+    pasted into a Filter by predicate pushdown when it is exposed as a named
+    column — is recomputed at every reference; a lambda variable is not."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def norm_basic_col(c: Column | str) -> Column:

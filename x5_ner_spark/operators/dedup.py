@@ -34,7 +34,9 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.columns import cosine_similarity_col, portable_hash32, simple_tokens_col
+from ..functions.columns import (
+    bind_once, cosine_similarity_col, portable_hash32, simple_tokens_col,
+)
 from ..functions.scan import scan_parallel
 
 LOCAL_JACCARD_DOCS = int(os.environ.get("X5_JACCARD_LOCAL_DOCS", "500000"))
@@ -125,16 +127,13 @@ def _sized_shingles(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, n_sh, shingle) rows — the per-doc distinct-set size rides
     every exploded row, so Jaccard needs no separate sizes aggregate and no
     post-join size lookups. Single evaluation of the shingle array: it is
-    bound ONCE as a lambda variable (transform over a one-element array),
-    and the struct explode carries (size, shingle) pairs out of it."""
-    bound = F.element_at(
-        F.transform(
-            F.array(F.array_distinct(_sh_expr(k))),
-            lambda sh: F.transform(
-                sh, lambda s: F.struct(F.size(sh).alias("n_sh"), s.alias("shingle"))
-            ),
+    bound ONCE as a lambda variable, and the struct explode carries
+    (size, shingle) pairs out of it."""
+    bound = bind_once(
+        F.array_distinct(_sh_expr(k)),
+        lambda sh: F.transform(
+            sh, lambda s: F.struct(F.size(sh).alias("n_sh"), s.alias("shingle"))
         ),
-        1,
     )
     return _with_tokens(docs, k).select(
         "doc_id", F.explode(bound).alias("x")

@@ -5,6 +5,8 @@ same query is ANSI-SQL-portable (no array columns needed in the shuffle).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -20,33 +22,42 @@ def prf_counters(gold: DataFrame, pred: DataFrame, keys: list[str], type_col: st
     both deduplicates within a side and computes membership flags; the
     second reduces per type. Identical counters (every type present on
     either side appears, zero-filled by the sums), ~half the wall time at
-    sf1.0, and two map-side-combinable shuffles at any scale."""
+    sf1.0, and two map-side-combinable shuffles at any scale.
+
+    NULLs follow the oracle's ``DISTINCT`` + ``JOIN … USING`` semantics: a
+    row with a NULL key or type never matches the other side, so a NULL
+    key present on both sides is one FP and one FN, not a TP (the side tag
+    joins the grouping key of such rows only; equal NULL rows of one side
+    still collapse, as under DISTINCT). A NULL type is listed with zero
+    counters, as the oracle's per-type LEFT JOINs on type leave it."""
     on = keys + [type_col]
     u = gold.select(*on).withColumn("_g", F.lit(1)).withColumn(
         "_p", F.lit(0)
     ).unionByName(
         pred.select(*on).withColumn("_g", F.lit(0)).withColumn("_p", F.lit(1))
     )
-    m = u.groupBy(*on).agg(
+    has_null = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in on])
+    m = u.groupBy(*on, F.when(has_null, F.col("_g")).alias("_side")).agg(
         F.max("_g").alias("_ig"), F.max("_p").alias("_ip")
     )
     ig, ip = F.col("_ig") == 1, F.col("_ip") == 1
+    typed = F.col(type_col).isNotNull()
     return m.groupBy(type_col).agg(
         F.sum((ig & ip).cast("int")).cast("bigint").alias("tp"),
-        F.sum((ip & ~ig).cast("int")).cast("bigint").alias("fp"),
-        F.sum((ig & ~ip).cast("int")).cast("bigint").alias("fn"),
+        F.sum((ip & ~ig & typed).cast("int")).cast("bigint").alias("fp"),
+        F.sum((ig & ~ip & typed).cast("int")).cast("bigint").alias("fn"),
     )
 
 
 def prf_metrics(counters: DataFrame, type_col: str) -> DataFrame:
     """A4: precision/recall/F1 per type, 0.0 on empty denominators
-    (ref eval_submission_on_train.py:114-131)."""
+    (ref eval_submission_on_train.py:114-131), appended to the counters."""
     tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
     p = F.when(tp + fp > 0, tp / (tp + fp)).otherwise(F.lit(0.0))
     r = F.when(tp + fn > 0, tp / (tp + fn)).otherwise(F.lit(0.0))
     f1 = F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0))
     return counters.select(
-        type_col,
+        "*",
         F.round(p, 4).alias("precision"),
         F.round(r, 4).alias("recall"),
         F.round(f1, 4).alias("f1"),

@@ -157,14 +157,17 @@ def perplexity_labels(
     directions)."""
     from . import lm
 
-    # persist the scored table: the percentile scalar and the label join
-    # both consume it, and without the pin the bigram-LM train+score
-    # pipeline runs TWICE end to end (ADVICE r8). The threshold action
-    # below materializes it; the returned frame reads the cached blocks.
-    # Unpersist is the caller's GC: the blocks are dropped with the plan.
+    # pin the scored table: the percentile scalar and the label join both
+    # consume it, and without the pin the bigram-LM train+score pipeline
+    # runs TWICE end to end (ADVICE r8). A LAZY localCheckpoint, as in
+    # text_stats.tfidf_top_terms, not .persist(): a persisted plan stays in
+    # the session's cache manager with nothing to unpersist it, and a later
+    # call on the same input would read it. The threshold action below
+    # materializes the checkpoint; the returned frame reads its blocks,
+    # which are dropped when the plan is GC'd.
     scored = lm.lm_perplexity(
         docs.select("doc_id", F.col(text_col).alias("text"))
-    ).persist()
+    ).localCheckpoint(eager=False)
     thr = scored.select(
         F.expr(f"percentile(nll, {float(keep_frac)!r})")
     ).first()[0]

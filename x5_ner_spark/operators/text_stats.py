@@ -8,10 +8,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.columns import portable_hash32, simple_tokens_col
+from ..functions.columns import bind_once, portable_hash32, simple_tokens_col
 from ..functions.scan import scan_parallel
 
 # tiny pinned English stopword list for the n-gram-free language heuristic
@@ -169,71 +169,76 @@ def gopher_filters(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     not replicated because the corpus schema's text is single-line;
     documented deviation."""
     docs = scan_parallel(docs)
-    toks = simple_tokens_col("text")
-    # token hashes are materialized as a NAMED column so the gram lambda's
-    # three element_at calls hit an evaluated array (referencing the
-    # transform expression directly would re-hash the whole token array per
-    # gram element)
-    d = docs.select(
-        "doc_id",
-        *carry,
-        toks.alias("toks"),
-        F.transform(toks, lambda t: F.xxhash64(t)).alias("_th"),
-    )
-    n_words = F.size("toks")
-    sum_len = F.aggregate(
-        F.transform("toks", lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-    )
-    alpha_words = F.size(F.filter("toks", lambda t: t.rlike(_LETTER_CLASS)))
-    stop_hits = F.size(
-        F.filter("toks", lambda t: F.lower(t).isin(EN_STOPWORDS + RU_STOPWORDS))
-    )
-    # duplicate-3-gram fraction over HASHED grams: xxhash64 over the three
-    # token hashes instead of per-gram slice+concat_ws strings — the string
-    # form's Scala collection churn was the measured allocation hotspot of
-    # this operator (jstack: IterableOnceOps.toArray; 1.7× interleaved on
-    # the dup stage, identical outputs on the sf corpus). The combiner is
-    # position-sensitive (xxhash64 folds its inputs sequentially) and uses
-    # NO arithmetic, so it is ANSI-safe (the r8 wrap-around-multiply mixer
-    # threw ARITHMETIC_OVERFLOW under spark.sql.ansi.enabled=true — the
-    # driver-gate default). A 64-bit gram collision would undercount
-    # distinct grams by 1 with probability ~n_grams²/2⁶⁵ per doc (~1e-13 at
-    # 10k words) — far below the 4-decimal rounding of the published
-    # fraction. The DuckDB oracle keeps exact string grams, so the gate
-    # would catch any systematic divergence.
-    idx = F.sequence(F.lit(0), n_words - 3)
-    grams = F.transform(
-        idx,
-        lambda i: F.xxhash64(
-            F.element_at("_th", i + 1),
-            F.element_at("_th", i + 2),
-            F.element_at("_th", i + 3),
+
+    def stats(toks: Column, th: Column) -> Column:
+        n_words = F.size(toks)
+        sum_len = F.aggregate(
+            F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
+        )
+        alpha_words = F.size(F.filter(toks, lambda t: t.rlike(_LETTER_CLASS)))
+        stop_hits = F.size(
+            F.filter(toks, lambda t: F.lower(t).isin(EN_STOPWORDS + RU_STOPWORDS))
+        )
+        # duplicate-3-gram fraction over HASHED grams: xxhash64 over the
+        # three token hashes instead of per-gram slice+concat_ws strings —
+        # the string form's Scala collection churn was the measured
+        # allocation hotspot of this operator (jstack:
+        # IterableOnceOps.toArray; 1.7× interleaved on the dup stage,
+        # identical outputs on the sf corpus). The combiner is
+        # position-sensitive (xxhash64 folds its inputs sequentially) and
+        # uses NO arithmetic, so it is ANSI-safe (the r8 wrap-around-multiply
+        # mixer threw ARITHMETIC_OVERFLOW under spark.sql.ansi.enabled=true —
+        # the driver-gate default). A 64-bit gram collision would undercount
+        # distinct grams by 1 with probability ~n_grams²/2⁶⁵ per doc (~1e-13
+        # at 10k words) — far below the 4-decimal rounding of the published
+        # fraction. The DuckDB oracle keeps exact string grams, so the gate
+        # would catch any systematic divergence.
+        grams = F.transform(
+            F.sequence(F.lit(0), n_words - 3),
+            lambda i: F.xxhash64(
+                F.element_at(th, i + 1),
+                F.element_at(th, i + 2),
+                F.element_at(th, i + 3),
+            ),
+        )
+        dup_frac = F.when(
+            n_words >= 3,
+            F.round(1.0 - F.size(F.array_distinct(grams)) / F.size(grams), 4),
+        ).otherwise(F.lit(0.0))
+        return F.struct(
+            n_words.alias("n_words"),
+            F.round(sum_len / n_words, 4).alias("mean_word_len"),
+            F.round(alpha_words / n_words, 4).alias("alpha_word_frac"),
+            dup_frac.alias("dup_3gram_frac"),
+            stop_hits.alias("stopword_hits"),
+        )
+
+    def with_keep(s: Column) -> Column:
+        return s.withField("keep", (
+            (s["n_words"] >= GOPHER_MIN_WORDS)
+            & (s["n_words"] <= GOPHER_MAX_WORDS)
+            & (s["mean_word_len"] >= GOPHER_MIN_MEAN_WORD_LEN)
+            & (s["mean_word_len"] <= GOPHER_MAX_MEAN_WORD_LEN)
+            & (s["alpha_word_frac"] >= GOPHER_MIN_ALPHA_WORD_FRAC)
+            & (s["dup_3gram_frac"] <= GOPHER_MAX_DUP_3GRAM_FRAC)
+            & (s["stopword_hits"] >= GOPHER_MIN_STOPWORD_HITS)
+        ))
+
+    # The token array and its hash array are each bound ONCE as lambda
+    # variables, and the statistics and ``keep`` come out of them as one
+    # struct: a caller's ``filter("keep")`` is pushed below the final
+    # projection and then reads one field of that struct, so each row is
+    # tokenized once in the Filter and once in the projection. Named
+    # intermediate columns would be pasted into the pushed Filter at every
+    # reference (18 tokenizations, and the token hashes rebuilt per gram).
+    g = bind_once(
+        simple_tokens_col("text"),
+        lambda toks: bind_once(
+            bind_once(F.transform(toks, lambda t: F.xxhash64(t)), lambda th: stats(toks, th)),
+            with_keep,
         ),
     )
-    dup_frac = F.when(
-        n_words >= 3,
-        F.round(1.0 - F.size(F.array_distinct(grams)) / F.size(grams), 4),
-    ).otherwise(F.lit(0.0))
-
-    d = d.select(
-        "doc_id",
-        *carry,
-        n_words.alias("n_words"),
-        F.round(sum_len / n_words, 4).alias("mean_word_len"),
-        F.round(alpha_words / n_words, 4).alias("alpha_word_frac"),
-        dup_frac.alias("dup_3gram_frac"),
-        stop_hits.alias("stopword_hits"),
-    )
-    rules = (
-        (F.col("n_words") >= GOPHER_MIN_WORDS)
-        & (F.col("n_words") <= GOPHER_MAX_WORDS)
-        & (F.col("mean_word_len") >= GOPHER_MIN_MEAN_WORD_LEN)
-        & (F.col("mean_word_len") <= GOPHER_MAX_MEAN_WORD_LEN)
-        & (F.col("alpha_word_frac") >= GOPHER_MIN_ALPHA_WORD_FRAC)
-        & (F.col("dup_3gram_frac") <= GOPHER_MAX_DUP_3GRAM_FRAC)
-        & (F.col("stopword_hits") >= GOPHER_MIN_STOPWORD_HITS)
-    )
-    return d.withColumn("keep", rules)
+    return docs.select("doc_id", *carry, g.alias("_g")).select("doc_id", *carry, "_g.*")
 
 
 # C4-style cleaning rules (Raffel et al. 2020 §2.2), adapted to single-line
