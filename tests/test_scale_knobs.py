@@ -115,14 +115,29 @@ def test_inverted_index_max_df_bounds_posting_lists(spark):
 # ----------------------- histogram-selection exact path (numeric profile)
 
 
+def _percentile_profile(df):
+    """numeric_profile's columns computed with the percentile() aggregate."""
+    from pyspark.sql import functions as F
+
+    return df.groupBy("g").agg(
+        F.round(F.min("v"), 4).alias("min_price"),
+        F.round(F.max("v"), 4).alias("max_price"),
+        F.expr("percentile(v, array(0.5D, 0.9D))").alias("a"),
+        F.count(F.lit(1)).alias("n_rows"),
+    ).select(
+        "g", "min_price", "max_price",
+        F.round(F.element_at("a", 1), 4).alias("median_price"),
+        F.round(F.element_at("a", 2), 4).alias("p90_price"),
+        "n_rows",
+    )
+
+
 def test_numeric_profile_histogram_matches_percentile_aggregate(spark):
     """r9: exact=True runs the 3-pass histogram-selection path; its output
     must equal the percentile() aggregate form on adversarial shapes
     (single value, duplicates, ties, skew, negative, even/odd counts) and
     fall back cleanly on null values / null group keys."""
     import random
-
-    from pyspark.sql import functions as F
 
     import x5_ner_spark.operators.text_stats as ts
 
@@ -138,23 +153,42 @@ def test_numeric_profile_histogram_matches_percentile_aggregate(spark):
     df = spark.createDataFrame(rows, "g string, v double")
     hist = ts._exact_percentiles_histogram(df, "g", "v", (0.5, 0.9), min_rows=0)
     assert hist is not None
-    agg = df.groupBy("g").agg(
-        F.round(F.min("v"), 4).alias("min_price"),
-        F.round(F.max("v"), 4).alias("max_price"),
-        F.expr("percentile(v, array(0.5D, 0.9D))").alias("a"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).select(
-        "g", "min_price", "max_price",
-        F.round(F.element_at("a", 1), 4).alias("median_price"),
-        F.round(F.element_at("a", 2), 4).alias("p90_price"),
-        "n_rows",
-    )
-    assert sorted(map(tuple, hist.collect())) == sorted(map(tuple, agg.collect()))
+    assert sorted(map(tuple, hist.collect())) == sorted(
+        map(tuple, _percentile_profile(df).collect()))
     # null group key → fallback (None), handled by the public operator
     df2 = spark.createDataFrame([(None, 1.0), ("a", 2.0)], "g string, v double")
     assert ts._exact_percentiles_histogram(df2, "g", "v", (0.5, 0.9), min_rows=0) is None
     prof = ts.numeric_profile(df2, "g", "v", exact=True).collect()
     assert len(prof) == 2
+
+
+def test_numeric_profile_pass_a_collect_is_bounded(spark, monkeypatch):
+    """With more groups than the histogram path serves, Pass A brings back
+    at most PROFILE_HIST_GROUPS + 1 rows before falling back, and the
+    profile equals the percentile() aggregate form."""
+    from pyspark.sql import functions as F
+
+    import x5_ner_spark.operators.text_stats as ts
+
+    df = spark.range(5000).select(
+        (F.col("id") % 1000).alias("g"), (F.col("id") * 0.37 % 11).alias("v")
+    )
+    sizes: list[int] = []
+    cls = type(df)  # the session's DataFrame class (classic or connect)
+    collect = cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    with monkeypatch.context() as mp:
+        mp.setattr(cls, "collect", spy)
+        prof = ts.numeric_profile(df, "g", "v", exact=True)
+    assert sizes and max(sizes) <= ts.PROFILE_HIST_GROUPS + 1, sizes
+    got = sorted(map(tuple, prof.collect()))
+    assert len(got) == 1000
+    assert got == sorted(map(tuple, _percentile_profile(df).collect()))
 
 
 # ----------------------------------- approx_percentile (numeric profile)

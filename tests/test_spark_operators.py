@@ -144,16 +144,26 @@ def test_overwrite_spans_for_keys(spark):
     assert out["сок"] == [(0, 3, "B-TYPE")]
 
 
+def _manifest_files(root: str) -> list[str]:
+    import os
+
+    from x5_ner_spark.pipeline import graph
+
+    return sorted(f for f in os.listdir(graph.manifest_path(root)) if f.endswith(".parquet"))
+
+
 def test_write_stage_crash_resume(spark, tmp_path):
     """A bucket dir without its manifest row (crash mid-write) is cleared and
-    rewritten on resume — no duplicate rows."""
-    import os
+    rewritten on resume — no duplicate rows, and the resumed call commits
+    exactly the missing bucket's manifest row in one file."""
     from x5_ner_spark.pipeline import graph
 
     df = spark.range(100).select(F.col("id"), F.col("id").cast("string").alias("k"))
     root = str(tmp_path / "g")
     graph.write_stage(df, root, "s", key="k", n_buckets=2)
     n0 = graph.read_stage(spark, root, "s").count()
+    full = sorted(map(tuple, graph.read_manifest(spark, root, "s")
+                      .select("part_id", "n_rows", "min_key", "max_key").collect()))
     # simulate crash: delete ONE bucket's manifest rows but keep its files
     m = spark.read.parquet(graph.manifest_path(root))
     kept = m.filter(F.col("part_id") != 0)
@@ -162,9 +172,43 @@ def test_write_stage_crash_resume(spark, tmp_path):
         graph.manifest_path(root)
     )
     assert graph.pending_parts(spark, root, "s", 2) == [0]
-    written = graph.write_stage(df, root, "s", key="k", n_buckets=2)
+    before = _manifest_files(root)
+    written = graph.write_stage(df, root, "s", key="k", n_buckets=2, run_id="resumed")
     assert written == [0]
     assert graph.read_stage(spark, root, "s").count() == n0  # no dupes
+    assert len(set(_manifest_files(root)) - set(before)) == 1
+    resumed = graph.read_manifest(spark, root, "s")
+    assert [r["part_id"] for r in resumed.filter(F.col("run_id") == "resumed").collect()] == [0]
+    assert sorted(map(tuple, resumed.select(
+        "part_id", "n_rows", "min_key", "max_key").collect())) == full
+    assert graph.pending_parts(spark, root, "s", 2) == []
+
+
+def test_write_stage_manifest_with_empty_bucket(spark, tmp_path):
+    """One manifest file per call, one row per bucket: an empty bucket gets
+    n_rows=0, the others the row count and key range of what landed."""
+    from x5_ner_spark.pipeline import graph
+
+    nb = 4
+    keyed = graph.with_bucket(
+        spark.range(40).select(F.col("id"), F.col("id").cast("string").alias("k")), "k", nb
+    )
+    df = keyed.filter(F.col("part_id") != 3).drop("part_id")
+    root = str(tmp_path / "g")
+    assert graph.write_stage(df, root, "s", key="k", n_buckets=nb) == [0, 1, 2, 3]
+    assert len(_manifest_files(root)) == 1
+    got = {r["part_id"]: (r["n_rows"], r["min_key"], r["max_key"])
+           for r in graph.read_manifest(spark, root, "s").collect()}
+    want = {r["part_id"]: (r["n"], r["lo"], r["hi"])
+            for r in graph.read_stage(spark, root, "s").groupBy("part_id").agg(
+                F.count(F.lit(1)).alias("n"), F.min("k").alias("lo"), F.max("k").alias("hi"),
+            ).collect()}
+    assert sorted(want) == [0, 1, 2]
+    assert got == {**want, 3: (0, None, None)}
+    assert graph.complete_stages(spark, root, "", nb) == ["s"]
+    # a second stage appends exactly one more manifest file
+    graph.write_stage(df, root, "t", key="k", n_buckets=nb)
+    assert len(_manifest_files(root)) == 2
 
 
 def test_near_dup_clusters_keeper_policy(spark):

@@ -231,8 +231,8 @@ def test_dedup_docs_keeps_one_canonical_page(spark, pages):
 
 def test_run_pipeline_dedup_flag(spark, pages):
     """run_pipeline(dedup=True) must drop the cloned page from BOTH the doc
-    table and the triple stage (the fused path re-reads pages — the url
-    semi-join is what keeps the two in sync)."""
+    table and the triple stage (the fused stage reads the kept docs, so the
+    two stay in sync)."""
     clone_html = pages.orderBy("url").limit(1).collect()[0]["html"]
     clones = spark.createDataFrame(
         [("dup://p1", None, bytes(clone_html), None, "ru")],

@@ -344,13 +344,17 @@ def triple_prf(teacher, student) -> dict:
     distillation comparison uses (returns the per-pred counter table too)."""
     from .eval_ops import prf_counters
 
-    counters = prf_counters(
+    # one row per predicate (bounded by PRED_BY_TYPE), collected once and
+    # summed here; the returned counter table is driver-built, so it holds
+    # no cache for the caller to release
+    rows = prf_counters(
         teacher, student, keys=["url", "subj", "obj"], type_col="pred"
-    ).persist()
-    tot = counters.agg(
-        F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn")
-    ).collect()[0]
-    tp, fp, fn = int(tot["tp"]), int(tot["fp"]), int(tot["fn"])
+    ).collect()
+    counters = student.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=["pred", "tp", "fp", "fn"]),
+        "pred string, tp long, fp long, fn long",
+    )
+    tp, fp, fn = (sum(r[c] for r in rows) for c in ("tp", "fp", "fn"))
     precision = tp / (tp + fp) if tp + fp else 0.0
     recall = tp / (tp + fn) if tp + fn else 0.0
     f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0

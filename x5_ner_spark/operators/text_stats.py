@@ -409,6 +409,9 @@ def _exact_percentiles_histogram(df, group_col, value_col, pcts,
             F.min("v").alias("mn"),
             F.max("v").alias("mx"),
         )
+        # one row past the guard is enough to fail it: the collect is
+        # bounded whatever the group count
+        .limit(PROFILE_HIST_GROUPS + 1)
         .collect()
     )
     if len(stats) > PROFILE_HIST_GROUPS or any(r["n"] == 0 for r in stats):

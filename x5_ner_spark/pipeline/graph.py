@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,6 +24,7 @@ MANIFEST_SCHEMA = (
     "stage string, part_id int, n_rows long, min_key string, max_key string, "
     "wall_s double, run_id string"
 )
+_MANIFEST_FIELDS = [f.split(" ") for f in MANIFEST_SCHEMA.split(", ")]
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -82,7 +84,11 @@ def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
     try:
         m = spark.read.schema(MANIFEST_SCHEMA).parquet(p)
     except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        # no manifest yet. The empty frame is planned on the JVM: an empty
+        # list- or pandas-built one is a Python RDD and wakes Python workers
+        m = spark.range(0).select(
+            *[F.lit(None).cast(t).alias(name) for name, t in _MANIFEST_FIELDS]
+        )
     return m.filter(F.col("stage") == stage)
 
 
@@ -167,27 +173,31 @@ def write_stage(
             F.col("part_id").isin(todo)
         )
     wall = time.time() - t0
-    stats = written.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min(F.col(key).cast("string")).alias("min_key"),
-        F.max(F.col(key).cast("string")).alias("max_key"),
-    )
+    # at most len(todo) rows come back: one per written bucket
+    stats = {
+        r["part_id"]: (r["n_rows"], r["min_key"], r["max_key"])
+        for r in written.groupBy("part_id").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min(F.col(key).cast("string")).alias("min_key"),
+            F.max(F.col(key).cast("string")).alias("max_key"),
+        ).collect()
+    }
     # EVERY todo bucket gets a manifest row, including legitimately EMPTY
     # ones (n_rows=0): complete_stages requires all n_buckets rows, and a
     # skewed/converged stage (e.g. a CC frontier hashing into few buckets)
     # would otherwise never register as complete — silently disabling
     # resume for exactly the runs that need it
-    todo_df = spark.createDataFrame([(int(p),) for p in todo], "part_id int")
-    stats = todo_df.join(stats, "part_id", "left").select(
-        "part_id",
-        F.coalesce("n_rows", F.lit(0)).cast("long").alias("n_rows"),
-        "min_key", "max_key",
+    rows = [
+        (stage, int(p), *stats.get(p, (0, None, None)), float(wall), run_id)
+        for p in todo
+    ]
+    # pandas-built, so it plans as a LocalTableScan: a list-built frame is
+    # a Python RDD that runs Python workers for a table with no Python logic
+    manifest = spark.createDataFrame(
+        pd.DataFrame(rows, columns=[name for name, _ in _MANIFEST_FIELDS]),
+        MANIFEST_SCHEMA,
     )
-    manifest = stats.select(
-        F.lit(stage).alias("stage"), "part_id", "n_rows", "min_key", "max_key",
-        F.lit(float(wall)).alias("wall_s"), F.lit(run_id).alias("run_id"),
-    )
-    manifest.write.mode("append").parquet(manifest_path(root))
+    manifest.coalesce(1).write.mode("append").parquet(manifest_path(root))
     return todo
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import argparse
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,8 +40,11 @@ def default_alias_dict(spark: SparkSession) -> DataFrame:
     for a in ambiguous:
         rows.append((a, eid, "DUP", 0.5))
         eid += 1
+    # pandas-built: a LocalTableScan, where a list-built frame would be a
+    # Python RDD that wakes Python workers at every broadcast of it
     return spark.createDataFrame(
-        rows, "alias_norm string, entity_id long, entity_kind string, prior double"
+        pd.DataFrame(rows, columns=["alias_norm", "entity_id", "entity_kind", "prior"]),
+        "alias_norm string, entity_id long, entity_kind string, prior double",
     )
 
 
@@ -108,12 +112,26 @@ def run_pipeline(
     dominate, classifier second): pages scoring below ``quality_min`` under
     the operators/quality_train checkpoint are dropped before inference.
     The filter is a map-only Column expression — zero extra shuffles on the
-    ingestion path (train the checkpoint with ``--fit-quality``)."""
+    ingestion path (train the checkpoint with ``--fit-quality``).
+
+    Each intermediate is computed once. Under ``dedup`` the extracted docs
+    are persisted (the dedup signatures, rescore sets and keeper picks all
+    read them), and the kept docs, which carry their text, feed the fused
+    stage directly. The candidate table is persisted, so canonicalization
+    and the node and edge tables share one alias-dictionary join.
+
+    Cache ownership: every cache this function creates is released before
+    it returns, except the triple stage's. With ``out_root`` that one is
+    released too. On the library path (no ``out_root``) the caller owns
+    ``out["triples"].unpersist()``, once finished with the returned frames;
+    the others are uncached plans, and those built on the triples read its
+    cache."""
     docs = extract.run(pages)
+    owned = []  # caches released before returning
     if dedup:
+        docs = docs.persist()
+        owned.append(docs)
         docs = dedup_docs(docs, max_bucket=dedup_max_bucket)
-        # the fused triple stage re-reads PAGES; restrict it to the kept urls
-        pages = pages.join(docs.select("url"), "url", "left_semi")
     if quality_npz:
         from ..operators import quality_train as QT
 
@@ -121,7 +139,6 @@ def run_pipeline(
         docs = docs.filter(
             QT.quality_score_col(qw, qb, ngrams=qng) >= float(quality_min)
         )
-        pages = pages.join(docs.select("url"), "url", "left_semi")
     lex = brand_lexicon if brand_lexicon is not None else [b for b in BRANDS]
     # `men` is a lazy plan for callers that want the span table; triple
     # production itself uses the fused single-Arrow-stage path (pipeline/
@@ -132,11 +149,17 @@ def run_pipeline(
     men = mentions.run(docs.select("url", "text"), lex, spark, emission_npz=emission_npz)
     from . import fused
 
-    trip = fused.fused_triples(pages, frozenset(lex), emission_npz=emission_npz).persist()
+    # a filtered docs table already carries its extracted text, which the
+    # fused stage keeps (it extracts only null/empty text)
+    src = docs if dedup or quality_npz else pages
+    trip = fused.fused_triples(src, frozenset(lex), emission_npz=emission_npz).persist()
 
     adict = alias_dict if alias_dict is not None else default_alias_dict(spark)
     ments = candidates.mention_table(trip)
-    cand = candidates.run(ments, adict)
+    # filled by the canonicalization signature job below; the node and edge
+    # tables reuse it
+    cand = candidates.run(ments, adict).persist()
+    owned.append(cand)
     linked = linking.run(cand)
 
     # similarity edges come from the FULL candidate set (an ambiguous alias
@@ -177,9 +200,9 @@ def run_pipeline(
         graph.write_stage(kg_edges, out_root, "edges", key="subj", n_buckets=n_buckets, run_id=run_id)
         # all downstream actions are done — release the cached blocks so
         # repeated invocations in one session don't accumulate storage
-        trip.unpersist()
-    # library path (no out_root): callers own trip.unpersist() once finished
-    # with the returned DataFrames
+        owned.append(trip)
+    for df in owned:
+        df.unpersist()
     return out
 
 
