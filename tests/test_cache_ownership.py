@@ -83,3 +83,56 @@ def test_triple_prf_leaves_no_cache(spark):
     assert sorted(map(tuple, res["counters"].collect())) == sorted(map(tuple, want.collect()))
     assert res["counters"].schema == want.schema
     assert _cache_empty(spark)
+
+
+def _fail_ctx_head(spark, tmp_path):
+    from x5_ner_spark.core.ctx_transformer import write_ctx_checkpoint
+    from x5_ner_spark.operators.ctx_train import fit_ctx_head
+
+    ckpt = write_ctx_checkpoint(str(tmp_path / "ctx.npz"), ["молоко", "вода"])
+    # label 99 is outside the 9 BIO classes: the kernel's indexing raises
+    feats = spark.createDataFrame([([0.1] * 32, 99)], "feat array<double>, label long")
+    fit_ctx_head(feats, ckpt, str(tmp_path / "head.npz"), iters=2)
+
+
+def _fail_emission(spark, tmp_path):
+    from x5_ner_spark.operators.emission_train import fit_npz_emission
+
+    train = spark.createDataFrame(
+        [("молоко", False, 99)], "token string, cont boolean, label_idx long"
+    )
+    fit_npz_emission(train, str(tmp_path / "em.npz"), iters=2)
+
+
+def _fail_crf(spark, tmp_path):
+    from x5_ner_spark.operators.emission_train import fit_crf_npz
+
+    seqs = spark.createDataFrame(
+        [(["молоко", "вода"], [False, False], [0, 99])],
+        "tokens array<string>, conts array<boolean>, tags array<long>",
+    )
+    fit_crf_npz(seqs, str(tmp_path / "crf.npz"), iters=2)
+
+
+def _fail_quality(spark, tmp_path):
+    from x5_ner_spark.operators.quality_train import fit_from_features
+
+    # bucket 99 is past dim=8: the sparse kernel's weight lookup raises
+    feats = spark.createDataFrame(
+        [([0, 99], 1.0), ([1], 0.0)], "buckets array<int>, label double"
+    )
+    fit_from_features(feats, dim=8, iters=2)
+
+
+@pytest.mark.parametrize(
+    "fit", [_fail_emission, _fail_crf, _fail_ctx_head, _fail_quality],
+    ids=["emission", "crf", "ctx_head", "quality"],
+)
+def test_trainer_releases_training_set_when_a_pass_raises(spark, tmp_path, fit):
+    """A gradient pass that raises on an executor (a local master does not
+    retry the task) propagates to the caller, and the trainer still
+    unpersists the training table it cached."""
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        fit(spark, tmp_path)
+    assert _cache_empty(spark)

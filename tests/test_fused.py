@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from x5_ner_spark.pipeline import extract, fused, mentions, triples
@@ -103,3 +104,24 @@ def test_fused_triples_and_log_matches_standalone(spark):
     got_log = sorted(tuple(r) for r in log.collect())
     assert got_log == want_log and len(want_log) > 10
     combined.unpersist()
+
+
+def test_bad_inference_arguments_fail_at_plan_build(spark):
+    """A bad ``decode`` or ``long_doc`` is refused when the plan is built,
+    by every inference entry point, and without a checkpoint (the chunked
+    wrapper that also checks ``long_doc`` only runs on a provider)."""
+    from x5_ner_spark.operators.decision_log import decision_log
+    from x5_ner_spark.operators.span_udfs import make_mentions_udf
+
+    pages = pages_df(spark, 5)
+    docs = spark.createDataFrame([(1, "молоко")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="decode"):
+        make_mentions_udf(decode="viterbi")
+    with pytest.raises(ValueError, match="long_doc"):
+        make_mentions_udf(long_doc="windowd")
+    with pytest.raises(ValueError, match="long_doc"):
+        fused.fused_triples(pages, long_doc="windowd")
+    with pytest.raises(ValueError, match="long_doc"):
+        fused.fused_triples_and_log(pages, long_doc="windowd")
+    with pytest.raises(ValueError, match="long_doc"):
+        decision_log(docs, long_doc="windowd")

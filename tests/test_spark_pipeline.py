@@ -199,6 +199,7 @@ def test_graph_write_and_resume(spark, pages, tmp_path):
 
 def test_full_pipeline_smoke(spark, pages):
     out = run_pipeline(spark, pages)
+    assert set(out) == {"docs", "triples", "linked", "components", "nodes", "edges"}
     assert out["triples"].count() > 0
     assert out["linked"].count() > 0
     assert set(out["triples"].columns) == {"subj", "pred", "obj", "url"}

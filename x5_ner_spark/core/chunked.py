@@ -155,13 +155,17 @@ class ChunkedSeqProvider:
         return out
 
 
+def check_long_doc(long_doc: str) -> None:
+    if long_doc not in ("truncate", "windowed"):
+        raise ValueError(f"long_doc must be 'truncate' or 'windowed', got {long_doc!r}")
+
+
 def maybe_chunked(provider, long_doc: str = "truncate", stride: int | None = None):
     """Provider-layer knob: ``long_doc='windowed'`` wraps a sequence-level
     provider in :class:`ChunkedSeqProvider`; ``'truncate'`` (the reference's
     pinned behavior, infer.py:165-171) returns it unchanged. Word-level
     providers have no truncation and pass through under either setting."""
-    if long_doc not in ("truncate", "windowed"):
-        raise ValueError(f"long_doc must be 'truncate' or 'windowed', got {long_doc!r}")
+    check_long_doc(long_doc)
     if long_doc == "windowed" and getattr(provider, "seq_level", False):
         return ChunkedSeqProvider(provider, stride)
     return provider

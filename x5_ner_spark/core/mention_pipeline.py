@@ -11,6 +11,7 @@ the reference's working batch path scripts/make_submission_from_val.py:38-48
 from __future__ import annotations
 
 from .cascade import decide_word_labels
+from .chunked import check_long_doc, maybe_chunked
 from .numeric import tokenize_with_offsets
 from .postprocess import postprocess
 from .spans import BIO_TAGS as _BIO_TAGS
@@ -345,6 +346,48 @@ def crf_mention_spans_batch(
             ])
         out.append(postprocess(t, raw) if raw else [])
     return out
+
+
+def mention_detector(
+    brand_lexicon=frozenset(),
+    *,
+    decode: str = "cascade",
+    emission_npz: str | None = None,
+    long_doc: str = "truncate",
+    chunk_stride: int | None = None,
+):
+    """The per-worker set-up every Arrow inference entry point shares.
+
+    Call it where the plan is built: a bad ``decode`` or ``long_doc`` fails
+    there, before any job runs. It returns ``load``, which a worker calls
+    once per partition. ``load()`` unwraps ``brand_lexicon`` (a frozenset,
+    or a ``sparkContext.broadcast`` handle), builds its sorted list, gets
+    the ``emission_npz`` provider (read once per worker process by
+    ``provider_for``; chunked under ``long_doc='windowed'``, core/chunked.py)
+    and returns ``detect(texts, logs=None)``: the final spans of each text,
+    by the cascade or, under ``decode='crf'``, by Viterbi."""
+    if decode not in ("cascade", "crf"):
+        raise ValueError(f"decode must be 'cascade' or 'crf', got {decode!r}")
+    check_long_doc(long_doc)
+
+    def load():
+        lex = brand_lexicon.value if hasattr(brand_lexicon, "value") else brand_lexicon
+        lex = frozenset(lex or [])
+        lex_list = sorted(lex)
+        provider = None
+        if emission_npz is not None:
+            from .emission import provider_for
+
+            provider = maybe_chunked(provider_for(emission_npz), long_doc, chunk_stride)
+        if decode == "crf":
+            return lambda texts, logs=None: crf_mention_spans_batch(
+                texts, provider=provider, logs=logs
+            )
+        return lambda texts, logs=None: final_mention_spans_batch(
+            texts, lex, lex_list, logs=logs, provider=provider
+        )
+
+    return load
 
 
 def decision_log_rows(

@@ -16,9 +16,10 @@ Two-phase plan, because the expensive part is the forward pass:
    subtoken-mean aggregation pairs with), each with the piece's frozen
    post-final-LN feature row. Persisted; d=32 doubles per piece.
 2. ``fit_ctx_head`` — iterative softmax-CE on the cached features:
-   per-partition (loss, dW, db) sums via mapInPandas, driver GD update —
-   the classic MLlib full-batch shape (same as emission_train), but each
-   iteration now touches only the tiny feature table, never the encoder.
+   per-partition (loss, dW, db) sums in the shared gradient pass
+   (operators/gradient.py), driver GD update — the classic MLlib
+   full-batch shape (same as emission_train), but each iteration now
+   touches only the tiny feature table, never the encoder.
 
 The trained head is saved as a full ctx checkpoint (all encoder arrays
 copied, head replaced) so ``provider_for`` serves it unchanged.
@@ -27,6 +28,7 @@ copied, head replaced) so ``provider_for`` serves it unchanged.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -34,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.spans import BIO_TAGS
+from .gradient import gradient_sums, training_set
 
 N_CLASSES = len(BIO_TAGS)
 
@@ -183,86 +186,62 @@ def fit_ctx_head(
     cheap lever)."""
     if soft and class_weight is not None:
         raise ValueError("soft targets and class_weight are mutually exclusive")
+    if class_weight not in (None, "balanced"):
+        raise ValueError(f"class_weight must be 'balanced' or None, got {class_weight!r}")
     with np.load(ckpt_path, allow_pickle=False) as z:
         arrays = {k: z[k] for k in z.files}
     w = arrays["head_w"].astype("float64")
     b = arrays["head_b"].astype("float64")
-
-    data = features.persist()
-    n_rows = data.count()
-    if n_rows == 0:
-        data.unpersist()
-        raise ValueError("empty feature table")
-
-    cw: np.ndarray | None = None
-    if class_weight == "balanced":
-        counts = {
-            int(r["label"]): int(r["cnt"])
-            for r in data.groupBy("label").agg(
-                F.count(F.lit(1)).alias("cnt")
-            ).collect()
-        }
-        cw = np.zeros(N_CLASSES)
-        for c, cnt in counts.items():
-            cw[c] = n_rows / (N_CLASSES * cnt)
-    elif class_weight is not None:
-        raise ValueError(f"class_weight must be 'balanced' or None, got {class_weight!r}")
-
     d = w.shape[0]
-    vel = np.zeros(d * N_CLASSES + N_CLASSES)
-    for _ in range(iters):
-        w_snap, b_snap = w.copy(), b.copy()
 
-        def grad_part(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
+    def grad_part(w_snap, b_snap, cw, batches):
+        loss, gw, gb, n = 0.0, np.zeros((d, N_CLASSES)), np.zeros(N_CLASSES), 0
+        for pdf in (rb.to_pandas() for rb in batches):
+            if not len(pdf):
+                continue
+            f = np.array([np.asarray(x, dtype="float64") for x in pdf["feat"]])
+            if soft:
+                q = np.array(
+                    [np.asarray(x, dtype="float64") for x in pdf["q"]]
+                )
+                pl, pgw, pgb = soft_ce_loss_and_grads(f, q, w_snap, b_snap)
+                ln = len(q)
+            else:
+                y = pdf["label"].to_numpy().astype("int64")
+                pl, pgw, pgb = softmax_head_loss_and_grads(
+                    f, y, w_snap, b_snap, cw
+                )
+                ln = len(y)
+            loss += pl
+            gw += pgw
+            gb += pgb
+            n += ln
+        return (n, loss, np.concatenate([gw.ravel(), gb])) if n else None
 
-            loss, gw, gb, n = 0.0, np.zeros((d, N_CLASSES)), np.zeros(N_CLASSES), 0
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                f = np.array([np.asarray(x, dtype="float64") for x in pdf["feat"]])
-                if soft:
-                    q = np.array(
-                        [np.asarray(x, dtype="float64") for x in pdf["q"]]
-                    )
-                    pl, pgw, pgb = soft_ce_loss_and_grads(f, q, w_snap, b_snap)
-                    ln = len(q)
-                else:
-                    y = pdf["label"].to_numpy().astype("int64")
-                    pl, pgw, pgb = softmax_head_loss_and_grads(
-                        f, y, w_snap, b_snap, cw
-                    )
-                    ln = len(y)
-                loss += pl
-                gw += pgw
-                gb += pgb
-                n += ln
-            yield pd.DataFrame(
-                {"pid": [TaskContext.get().partitionId()],
-                 "loss": [loss], "n": [n],
-                 "g": [list(np.concatenate([gw.ravel(), gb]))]}
+    with training_set(features) as (data, n_rows):
+        cw: np.ndarray | None = None
+        if class_weight == "balanced":
+            counts = {
+                int(r["label"]): int(r["cnt"])
+                for r in data.groupBy("label").agg(
+                    F.count(F.lit(1)).alias("cnt")
+                ).collect()
+            }
+            cw = np.zeros(N_CLASSES)
+            for c, cnt in counts.items():
+                cw[c] = n_rows / (N_CLASSES * cnt)
+
+        vel = np.zeros(d * N_CLASSES + N_CLASSES)
+        for _ in range(iters):
+            tot_n, tot_loss, g = gradient_sums(
+                data, partial(grad_part, w.copy(), b.copy(), cw), len(vel)
             )
-
-        parts = data.mapInPandas(
-            grad_part, "pid int, loss double, n long, g array<double>"
-        ).collect()
-        # float sums are order-sensitive: sum in partition-id order so the
-        # trained head is bit-reproducible for a fixed partitioning of
-        # `features` (ADVICE r7; same discipline as emission_train)
-        parts.sort(key=lambda r: r["pid"])
-        tot_loss = sum(r["loss"] for r in parts)
-        tot_n = sum(r["n"] for r in parts)
-        g = np.zeros(d * N_CLASSES + N_CLASSES)
-        for r in parts:
-            if r["n"]:
-                g += np.asarray(r["g"])
-        g /= tot_n
-        vel = momentum * vel + g
-        w -= lr * vel[: d * N_CLASSES].reshape(d, N_CLASSES)
-        b -= lr * vel[d * N_CLASSES :]
-        if loss_history is not None:
-            loss_history.append(tot_loss / tot_n)
-    data.unpersist()
+            g /= tot_n
+            vel = momentum * vel + g
+            w -= lr * vel[: d * N_CLASSES].reshape(d, N_CLASSES)
+            b -= lr * vel[d * N_CLASSES :]
+            if loss_history is not None:
+                loss_history.append(tot_loss / tot_n)
 
     arrays["head_w"] = w.astype("float32")
     arrays["head_b"] = b.astype("float32")

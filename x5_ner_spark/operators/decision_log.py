@@ -16,24 +16,26 @@ Scale shape: map-only over the documents scan (no shuffle); output is
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.mention_pipeline import final_mention_spans_batch
+from ..core.mention_pipeline import mention_detector
 
-LOG_COLUMNS = [
-    "doc_id", "token_text", "start", "end", "label", "reason",
-    "p_brand", "p_type", "in_lex", "fuzzy_hit", "pure_lat", "short_lat",
-    "has_vowel", "p_brand_sum", "p_type_sum", "p_o",
-]
-LOG_SCHEMA = (
-    "doc_id long, token_text string, start int, end int, label string, "
-    "reason string, p_brand double, p_type double, in_lex boolean, "
-    "fuzzy_hit boolean, pure_lat boolean, short_lat boolean, "
-    "has_vowel boolean, p_brand_sum double, p_type_sum double, p_o double"
+# the 15 per-word fields of a decision-log record, in schema order
+LOG_FIELDS_DDL = (
+    "token_text string, start int, end int, label string, reason string, "
+    "p_brand double, p_type double, in_lex boolean, fuzzy_hit boolean, "
+    "pure_lat boolean, short_lat boolean, has_vowel boolean, "
+    "p_brand_sum double, p_type_sum double, p_o double"
 )
+LOG_FIELDS = [f.split(" ")[0] for f in LOG_FIELDS_DDL.split(", ")]
+LOG_COLUMNS = ["doc_id", *LOG_FIELDS]
+LOG_SCHEMA = "doc_id long, " + LOG_FIELDS_DDL
+# record dict → the tuple of its LOG_FIELDS values
+log_values = itemgetter(*LOG_FIELDS)
 
 
 def decision_log(
@@ -58,42 +60,21 @@ def decision_log(
     there). ``long_doc='windowed'`` + ``chunk_stride`` apply the chunked
     long-document wrapper to sequence-level checkpoints, as in
     fused_triples (core/chunked.py)."""
-    if decode not in ("cascade", "crf"):
-        raise ValueError(f"decode must be 'cascade' or 'crf', got {decode!r}")
-    lex_handle = brand_lexicon
+    load = mention_detector(
+        brand_lexicon, decode=decode, emission_npz=emission_npz,
+        long_doc=long_doc, chunk_stride=chunk_stride,
+    )
 
     def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = lex_handle.value if hasattr(lex_handle, "value") else lex_handle
-        lex = frozenset(lex)
-        lex_list = sorted(lex)
-        provider = None
-        if emission_npz is not None:
-            from ..core.chunked import maybe_chunked
-            from ..core.emission import provider_for
-
-            provider = maybe_chunked(
-                provider_for(emission_npz), long_doc, chunk_stride
-            )
+        detect = load()
         for pdf in pdfs:
-            texts = ["" if t is None else t for t in pdf["_log_text"]]
             logs: list[list[dict]] = []
-            if decode == "crf":
-                from ..core.mention_pipeline import crf_mention_spans_batch
-
-                crf_mention_spans_batch(texts, provider=provider, logs=logs)
-            else:
-                final_mention_spans_batch(texts, lex, lex_list, logs=logs,
-                                          provider=provider)
-            rows = []
-            for did, recs in zip(pdf["_log_id"], logs):
-                for r in recs:
-                    rows.append((
-                        did, r["token_text"], r["start"], r["end"], r["label"],
-                        r["reason"], r["p_brand"], r["p_type"], r["in_lex"],
-                        r["fuzzy_hit"], r["pure_lat"], r["short_lat"],
-                        r["has_vowel"], r["p_brand_sum"], r["p_type_sum"],
-                        r["p_o"],
-                    ))
+            detect(["" if t is None else t for t in pdf["_log_text"]], logs)
+            rows = [
+                (did, *log_values(r))
+                for did, recs in zip(pdf["_log_id"], logs)
+                for r in recs
+            ]
             yield pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     keyed = docs.select(
@@ -112,13 +93,9 @@ def write_decision_log_csv(log: DataFrame, path: str, error_col: str | None = No
     reference's pandas index — else (text, start, end); bools/floats
     serialized to the reference's literal forms). Round-trip tested against
     core ``serialize_log_row`` lines (tests/test_decision_log.py)."""
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import Window
 
-    cols = [
-        "text", "token_text", "start", "end", "label", "reason", "p_brand",
-        "p_type", "in_lex", "fuzzy_hit", "pure_lat", "short_lat", "has_vowel",
-        "p_brand_sum", "p_type_sum", "p_o", "error",
-    ]
+    cols = ["text", *LOG_FIELDS, "error"]
     df = log
     order_first = F.col("doc_id") if "doc_id" in df.columns else F.col("text")
     if "text" not in df.columns:

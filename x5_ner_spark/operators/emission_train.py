@@ -3,10 +3,11 @@ remaining half; ref analog ner/train.py:31-108 trains the token classifier
 and saves a checkpoint the inference path loads).
 
 Shape: full-batch gradient descent, the canonical MLlib pattern — per
-iteration ONE Spark job computes per-partition (loss, gradient) sums inside
-``mapInPandas`` (pure-numpy math shared with core/emission.py, so the
-trained weights serve through the exact forward they were trained with);
-the driver sums the handful of partition rows, applies the update, and the
+iteration ONE Spark job computes per-partition (loss, gradient) sums in the
+shared gradient pass (operators/gradient.py; pure-numpy math shared with
+core/emission.py, so the trained weights serve through the exact forward
+they were trained with); the driver sums the handful of partition rows,
+applies the update, and the
 next iteration broadcasts the new weights via closure capture. Gradient
 state per partition is one flattened float64 array (~8.5k values at the
 default sizes) — the shuffle-free aggregation that scales to any corpus
@@ -20,31 +21,31 @@ train → checkpoint → load → infer loop that tests verify end to end.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import emission as E
-
-_GRAD_SCHEMA = "pid int, n long, loss double, grad array<double>"
-
-
-def _flatten(grads: dict) -> np.ndarray:
-    return np.concatenate(
-        [grads["w1"].ravel(), grads["b1"].ravel(),
-         grads["w2"].ravel(), grads["b2"].ravel()]
-    )
+from .gradient import gradient_sums, training_set
 
 
-def _unflatten(vec: np.ndarray, params: dict) -> dict:
-    out = {}
+_MLP_KEYS = ("w1", "b1", "w2", "b2")
+_CRF_KEYS = _MLP_KEYS + ("start", "trans", "end")
+
+
+def _flatten(grads: dict, keys: tuple) -> np.ndarray:
+    return np.concatenate([np.asarray(grads[k]).ravel() for k in keys])
+
+
+def _descend(params: dict, g: np.ndarray, keys: tuple, lr: float) -> None:
+    """params[k] -= lr · (k's slice of the flat gradient ``g``)."""
     off = 0
-    for k in ("w1", "b1", "w2", "b2"):
+    for k in keys:
         size = params[k].size
-        out[k] = vec[off : off + size].reshape(params[k].shape)
+        params[k] = params[k] - lr * g[off : off + size].reshape(params[k].shape)
         off += size
-    return out
 
 
 def teacher_labels(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -113,9 +114,6 @@ def teacher_sequences(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_CRF_KEYS = ("w1", "b1", "w2", "b2", "start", "trans", "end")
-
-
 def fit_crf_npz(
     seqs: DataFrame,
     out_path: str,
@@ -129,10 +127,10 @@ def fit_crf_npz(
     """JOINT gradient training of the emission MLP and the linear-chain CRF
     (start/trans/end) by exact NLL — the full analog of the reference's
     encoder+CRF training loop (ner/train.py:31-62), distributed the same
-    way as :func:`fit_npz_emission`: per-partition (nll, gradient) sums via
-    mapInPandas (forward-backward per sequence, chain rule through the MLP
-    via core.emission.mlp_backward), driver update, weights rebroadcast by
-    closure. Saves an npz holding BOTH the provider weights and the CRF
+    way as :func:`fit_npz_emission`: per-partition (nll, gradient) sums in
+    the shared gradient pass (forward-backward per sequence, chain rule
+    through the MLP via core.emission.mlp_backward), driver update, weights
+    rebroadcast by closure. Saves an npz holding BOTH the provider weights and the CRF
     parameters (load via :func:`load_crf_params_npz` for
     ``crf_mention_spans_batch``)."""
     from ..core.crf import crf_nll_and_grads
@@ -144,66 +142,40 @@ def fit_crf_npz(
     params["trans"] = np.zeros((c, c))
     params["end"] = np.zeros(c)
 
-    data = seqs.select("tokens", "conts", "tags").persist()
-    n_seqs = data.count()
-    if n_seqs == 0:
-        data.unpersist()
-        raise ValueError("empty training set")
+    def grad_part(snapshot: dict, batches):
+        tot_loss, tot_n, acc = 0.0, 0, None
+        for pdf in (b.to_pandas() for b in batches):
+            for tokens, conts, tags in zip(pdf["tokens"], pdf["conts"], pdf["tags"]):
+                keys = [(str(t), bool(ct)) for t, ct in zip(tokens, conts)]
+                if not keys:
+                    continue
+                x = E.featurize_batch(keys, snapshot["n_features"])
+                h_pre, h, logits = E.mlp_forward(snapshot, x)
+                nll, g = crf_nll_and_grads(
+                    logits, np.asarray(tags, dtype="int64"),
+                    snapshot["start"], snapshot["trans"], snapshot["end"],
+                )
+                mg = E.mlp_backward(snapshot, x, h_pre, h, g["emissions"])
+                vec = _flatten({**mg, "start": g["start"],
+                                "trans": g["trans"], "end": g["end"]}, _CRF_KEYS)
+                acc = vec if acc is None else acc + vec
+                tot_loss += nll
+                tot_n += len(keys)  # token count: the normalization unit
+        return None if acc is None else (tot_n, tot_loss, acc)
 
-    sizes = {k: params[k].size for k in _CRF_KEYS}
-
-    def flatten(g: dict) -> np.ndarray:
-        return np.concatenate([np.asarray(g[k]).ravel() for k in _CRF_KEYS])
-
-    for _ in range(iters):
-        snapshot = {k: (v.copy() if hasattr(v, "copy") else v) for k, v in params.items()}
-
-        def grad_part(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tot_loss, tot_n, acc = 0.0, 0, None
-            for pdf in pdfs:
-                for tokens, conts, tags in zip(pdf["tokens"], pdf["conts"], pdf["tags"]):
-                    keys = [(str(t), bool(ct)) for t, ct in zip(tokens, conts)]
-                    if not keys:
-                        continue
-                    x = E.featurize_batch(keys, snapshot["n_features"])
-                    h_pre, h, logits = E.mlp_forward(snapshot, x)
-                    nll, g = crf_nll_and_grads(
-                        logits, np.asarray(tags, dtype="int64"),
-                        snapshot["start"], snapshot["trans"], snapshot["end"],
-                    )
-                    mg = E.mlp_backward(snapshot, x, h_pre, h, g["emissions"])
-                    vec = flatten({**mg, "start": g["start"],
-                                   "trans": g["trans"], "end": g["end"]})
-                    acc = vec if acc is None else acc + vec
-                    tot_loss += nll
-                    tot_n += len(keys)  # token count: the normalization unit
-            if acc is not None:
-                from pyspark import TaskContext
-
-                yield pd.DataFrame({
-                    "pid": [TaskContext.get().partitionId()],
-                    "n": [tot_n], "loss": [tot_loss], "grad": [acc.tolist()],
-                })
-
-        rows = data.mapInPandas(grad_part, _GRAD_SCHEMA).collect()
-        rows.sort(key=lambda r: r["pid"])
-        g = np.zeros(sum(sizes.values()))
-        loss_sum = 0.0
-        n_tokens = 0
-        for r in rows:
-            g += np.asarray(r["grad"])
-            loss_sum += r["loss"]
-            n_tokens += r["n"]
-        # per-TOKEN normalization: sequence lengths vary, so per-sequence
-        # averaging would scale the effective step with document length
-        g /= max(n_tokens, 1)
-        if loss_history is not None:
-            loss_history.append(loss_sum / max(n_tokens, 1))
-        off = 0
-        for k in _CRF_KEYS:
-            params[k] = params[k] - lr * g[off : off + sizes[k]].reshape(params[k].shape)
-            off += sizes[k]
-    data.unpersist()
+    with training_set(seqs.select("tokens", "conts", "tags")) as (data, _):
+        for _ in range(iters):
+            snapshot = {k: (v.copy() if hasattr(v, "copy") else v) for k, v in params.items()}
+            n_tokens, loss_sum, g = gradient_sums(
+                data, partial(grad_part, snapshot),
+                sum(params[k].size for k in _CRF_KEYS),
+            )
+            # per-TOKEN normalization: sequence lengths vary, so per-sequence
+            # averaging would scale the effective step with document length
+            g /= max(n_tokens, 1)
+            if loss_history is not None:
+                loss_history.append(loss_sum / max(n_tokens, 1))
+            _descend(params, g, _CRF_KEYS, lr)
 
     np.savez(
         out_path,
@@ -239,50 +211,32 @@ def fit_npz_emission(
     per-partition gradient sums are added in sorted partition order before
     the update. Returns the saved path."""
     params = E.init_mlp_params(n_features, hidden, seed)
+
+    def grad_part(snapshot: dict, batches):
+        tot_loss, tot_n, acc = 0.0, 0, None
+        for pdf in (b.to_pandas() for b in batches):
+            if not len(pdf):
+                continue
+            keys = list(zip(pdf["token"].astype(str), pdf["cont"].astype(bool)))
+            x = E.featurize_batch(keys, snapshot["n_features"])
+            y = pdf["label_idx"].to_numpy().astype("int64")
+            loss, grads = E.mlp_loss_and_grads(snapshot, x, y)
+            vec = _flatten(grads, _MLP_KEYS)
+            acc = vec if acc is None else acc + vec
+            tot_loss += loss
+            tot_n += len(pdf)
+        return None if acc is None else (tot_n, tot_loss, acc)
+
     # materialize once: every iteration re-reads the same rows
-    data = train.select("token", "cont", "label_idx").persist()
-    n_total = data.count()
-    if n_total == 0:
-        data.unpersist()
-        raise ValueError("empty training set")
-
-    for _ in range(iters):
-        snapshot = {k: (v.copy() if hasattr(v, "copy") else v) for k, v in params.items()}
-
-        def grad_part(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            tot_loss, tot_n, acc = 0.0, 0, None
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                keys = list(zip(pdf["token"].astype(str), pdf["cont"].astype(bool)))
-                x = E.featurize_batch(keys, snapshot["n_features"])
-                y = pdf["label_idx"].to_numpy().astype("int64")
-                loss, grads = E.mlp_loss_and_grads(snapshot, x, y)
-                vec = _flatten(grads)
-                acc = vec if acc is None else acc + vec
-                tot_loss += loss
-                tot_n += len(pdf)
-            if acc is not None:
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                yield pd.DataFrame(
-                    {"pid": [pid], "n": [tot_n], "loss": [tot_loss],
-                     "grad": [acc.tolist()]}
-                )
-
-        rows = data.mapInPandas(grad_part, _GRAD_SCHEMA).collect()
-        rows.sort(key=lambda r: r["pid"])  # deterministic sum order
-        g = np.zeros(sum(params[k].size for k in ("w1", "b1", "w2", "b2")))
-        loss_sum = 0.0
-        for r in rows:
-            g += np.asarray(r["grad"])
-            loss_sum += r["loss"]
-        g /= n_total
-        if loss_history is not None:
-            loss_history.append(loss_sum / n_total)
-        grads = _unflatten(g, params)
-        for k in ("w1", "b1", "w2", "b2"):
-            params[k] = params[k] - lr * grads[k]
-    data.unpersist()
+    with training_set(train.select("token", "cont", "label_idx")) as (data, _):
+        for _ in range(iters):
+            snapshot = {k: (v.copy() if hasattr(v, "copy") else v) for k, v in params.items()}
+            n_total, loss_sum, g = gradient_sums(
+                data, partial(grad_part, snapshot),
+                sum(params[k].size for k in _MLP_KEYS),
+            )
+            g /= n_total
+            if loss_history is not None:
+                loss_history.append(loss_sum / n_total)
+            _descend(params, g, _MLP_KEYS, lr)
     return E.save_params_npz(params, out_path)

@@ -5,8 +5,8 @@ keep pages scoring above a threshold). The reference repo has no analog;
 this is a beyond-reference addition in the same class as operators/dedup.py
 and lm.py, built on the repo's feature-table + distributed-GD pattern
 (ctx_train: one expensive featurize pass → persisted feature table →
-cheap per-iteration gradient jobs; emission_train: per-partition numpy
-gradient sums inside ``mapInPandas``, pid-sorted driver reduction).
+cheap per-iteration gradient jobs; operators/gradient.py: per-partition
+numpy gradient sums, pid-sorted driver reduction).
 
 Training featurizes ONCE with the SAME native Column expression serving
 uses (``bucket_set_col``: lower → split → array_distinct → portable-hash →
@@ -40,14 +40,14 @@ curated positives exist (swap in Wikipedia-vs-crawl labels at production).
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import portable_hash32, simple_tokens_col
-
-_GRAD_SCHEMA = "pid int, n long, loss double, grad array<double>"
+from .gradient import gradient_sums, training_set
 
 __all__ = [
     "hash_bucket",
@@ -267,76 +267,48 @@ def fit_from_features(
 ) -> tuple[np.ndarray, float]:
     """(buckets, label) → (w, b) by full-batch gradient descent over the
     persisted feature table: each iteration is one cheap Spark job
-    computing per-partition sparse (loss, grad) sums in numpy inside
-    mapInArrow — no tokenization or hashing on the iteration path, and no
-    per-row Python: the Arrow ListArray's values/offsets ARE the (flat,
-    lens) representation the sparse kernel consumes (zero-copy; a
+    computing per-partition sparse (loss, grad) sums in numpy inside the
+    shared gradient pass (operators/gradient.py) — no tokenization or
+    hashing on the iteration path, and no per-row Python: the Arrow
+    ListArray's values/offsets ARE the (flat, lens) representation the
+    sparse kernel consumes (zero-copy; a
     mapInPandas draft spent ~0.4 s/iteration per 240k rows just looping
     rows to rebuild them). The driver adds partial gradients in sorted-pid
     order (bit reproducible across reruns of one partitioning) and applies
     the update. Gradient traffic per iteration = partitions × (dim + 2)
     doubles — independent of corpus size, the same scaling argument as
     fit_npz_emission."""
-    feats = features.persist()
-    n_total = feats.count()
-    if n_total == 0:
-        feats.unpersist()
-        raise ValueError("empty training set")
+
+    def grad_part(w_snap, b_snap, batches):
+        tot_loss, tot_n = 0.0, 0
+        acc_w = np.zeros(dim + 1, dtype=np.float64)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            col = batch.column(0)  # buckets: ListArray
+            offs = np.asarray(col.offsets)
+            flat = np.asarray(col.values, dtype=np.int64)[offs[0]: offs[-1]]
+            lens = np.diff(offs).astype(np.int64)
+            y = np.asarray(batch.column(1), dtype=np.float64)
+            loss, gw, gb = _sparse_loss_and_grads(w_snap, b_snap, flat, lens, y)
+            acc_w[:dim] += gw
+            acc_w[dim] += gb
+            tot_loss += loss
+            tot_n += batch.num_rows
+        return (tot_n, tot_loss, acc_w) if tot_n else None
 
     w = np.zeros(dim, dtype=np.float64)
     b = 0.0
-    for _ in range(iters):
-        w_snap, b_snap = w.copy(), b
-
-        def grad_part(batches):
-            import pyarrow as pa
-
-            tot_loss, tot_n = 0.0, 0
-            acc_w = np.zeros(dim + 1, dtype=np.float64)
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                col = batch.column(0)  # buckets: ListArray
-                offs = np.asarray(col.offsets)
-                flat = np.asarray(col.values, dtype=np.int64)[offs[0]: offs[-1]]
-                lens = np.diff(offs).astype(np.int64)
-                y = np.asarray(batch.column(1), dtype=np.float64)
-                loss, gw, gb = _sparse_loss_and_grads(
-                    w_snap, b_snap, flat, lens, y
-                )
-                acc_w[:dim] += gw
-                acc_w[dim] += gb
-                tot_loss += loss
-                tot_n += batch.num_rows
-            if tot_n:
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                yield pa.RecordBatch.from_pydict(
-                    {"pid": [pid], "n": [tot_n], "loss": [tot_loss],
-                     "grad": [acc_w.tolist()]},
-                    schema=pa.schema(
-                        [("pid", pa.int32()), ("n", pa.int64()),
-                         ("loss", pa.float64()),
-                         ("grad", pa.list_(pa.float64()))]
-                    ),
-                )
-
-        rows = feats.select("buckets", "label").mapInArrow(
-            grad_part, _GRAD_SCHEMA
-        ).collect()
-        rows.sort(key=lambda r: r["pid"])
-        g = np.zeros(dim + 1, dtype=np.float64)
-        loss_sum = 0.0
-        for r in rows:
-            g += np.asarray(r["grad"], dtype=np.float64)
-            loss_sum += r["loss"]
-        g /= float(n_total)
-        if loss_history is not None:
-            loss_history.append(loss_sum / n_total + 0.5 * l2 * float(w @ w))
-        w = w - lr * (g[:dim] + l2 * w)
-        b = b - lr * g[dim]
-    feats.unpersist()
+    with training_set(features.select("buckets", "label")) as (feats, _):
+        for _ in range(iters):
+            n_total, loss_sum, g = gradient_sums(
+                feats, partial(grad_part, w.copy(), b), dim + 1
+            )
+            g /= float(n_total)
+            if loss_history is not None:
+                loss_history.append(loss_sum / n_total + 0.5 * l2 * float(w @ w))
+            w = w - lr * (g[:dim] + l2 * w)
+            b = b - lr * g[dim]
     return w, b
 
 

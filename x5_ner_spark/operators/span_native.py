@@ -43,21 +43,6 @@ def sorted_distinct(spans: Column | str) -> Column:
     return F.array_sort(F.array_distinct(c))
 
 
-def spans_intersect(a: Column, b: Column) -> Column:
-    """U2: row-level entity-set intersection (ref eval_submission_on_train.py:105)."""
-    return F.array_intersect(a, b)
-
-
-def spans_except(a: Column, b: Column) -> Column:
-    """U2: row-level entity-set difference."""
-    return F.array_except(a, b)
-
-
-def substring_for_span(text: Column, start: Column, end: Column) -> Column:
-    """Surface form of a span (1-based substring arithmetic)."""
-    return F.substring(text, start + 1, end - start)
-
-
 def explode_spans(df: DataFrame, spans_col: str = "spans", id_col: str = "doc_id") -> DataFrame:
     """Nested → exploded span table (doc_id, start, end, tag) for windowed
     BIO merging at corpus scale."""
@@ -86,8 +71,9 @@ def bio_merge_windowed(exploded: DataFrame, id_col: str = "doc_id") -> DataFrame
     Precondition: spans within a document are non-overlapping (true for the
     engine's post-processed mention output, which is sorted+collapsed). With
     overlapping spans the running-max island test can merge across an island
-    the reference's sequential fold would split — for those use the exact
-    per-row bio_merge_udf (arrays are small within one document).
+    the reference's sequential fold would split — for those apply the exact
+    per-row ``core.spans.bio_to_entities`` (arrays are small within one
+    document).
     """
     w = Window.partitionBy(id_col).orderBy("start", "end")
     e = exploded.withColumn(

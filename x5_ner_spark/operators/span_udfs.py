@@ -11,8 +11,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -23,14 +21,8 @@ from pyspark.sql.types import (
 )
 
 from ..core.html_text import extract_text
-from ..core.mention_pipeline import (
-    detect_mention_spans,
-    final_mention_spans,
-    triples_from_spans,
-)
-from ..core.numeric import numeric_spans
-from ..core.postprocess import postprocess
-from ..core.spans import bio_to_entities, parse_annotation, serialize_spans
+from ..core.mention_pipeline import mention_detector, triples_from_spans
+from ..core.spans import parse_annotation, serialize_spans
 
 SPAN_STRUCT = StructType(
     [
@@ -74,15 +66,8 @@ def extract_text_udf(html: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield batch.map(extract_text)
 
 
-@pandas_udf(SPAN_ARRAY)
-def numeric_spans_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Numeric preprocessor spans (ref preprocess_query semantics)."""
-    for batch in texts:
-        yield batch.map(lambda t: _spans_to_rows(numeric_spans(t)) if t else [])
-
-
 def make_mentions_udf(
-    brand_lexicon=frozenset(), *, postprocessed: bool = True, decode: str = "cascade",
+    brand_lexicon=frozenset(), *, decode: str = "cascade",
     emission_npz: str | None = None, long_doc: str = "truncate",
     chunk_stride: int | None = None,
 ):
@@ -107,68 +92,25 @@ def make_mentions_udf(
     (core/chunked.py). 'truncate' (default) is the reference's pinned
     behavior; word-level providers are unaffected by either.
 
-    The heavy state (sorted lexicon list) is materialized ONCE per Python
-    worker per partition via the iterator form — the Spark analog of the
+    Arguments are checked here, on the driver; the worker state (sorted
+    lexicon list, provider) is built once per partition by the shared
+    ``core.mention_pipeline.mention_detector`` — the Spark analog of the
     reference's lazy model singleton (service/app.py:20-34)."""
-
-    from ..core.mention_pipeline import crf_mention_spans_batch, final_mention_spans_batch
+    load = mention_detector(
+        brand_lexicon, decode=decode, emission_npz=emission_npz,
+        long_doc=long_doc, chunk_stride=chunk_stride,
+    )
 
     @pandas_udf(SPAN_ARRAY)
     def mentions(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        lex = brand_lexicon.value if hasattr(brand_lexicon, "value") else brand_lexicon
-        lex = frozenset(lex)
-        lex_list = sorted(lex)
-        provider = None
-        if emission_npz is not None:
-            from ..core.chunked import maybe_chunked
-            from ..core.emission import provider_for
-
-            provider = maybe_chunked(
-                provider_for(emission_npz), long_doc, chunk_stride
-            )
+        detect = load()
         for batch in texts:
-            if decode == "crf":
-                spans = crf_mention_spans_batch(
-                    ["" if t is None else t for t in batch], provider=provider
-                )
-                yield pd.Series([_spans_to_rows(s) for s in spans])
-            elif postprocessed:
-                # batched N3 shape: one vectorized model call per micro-batch
-                # of words across the whole Arrow batch
-                spans = final_mention_spans_batch(
-                    ["" if t is None else t for t in batch], lex, lex_list,
-                    provider=provider,
-                )
-                yield pd.Series([_spans_to_rows(s) for s in spans])
-            else:
-                yield batch.map(
-                    lambda t: _spans_to_rows(detect_mention_spans(t, lex, lex_list))
-                    if t
-                    else []
-                )
+            # batched N3 shape: one vectorized model call per micro-batch
+            # of words across the whole Arrow batch
+            spans = detect(["" if t is None else t for t in batch])
+            yield pd.Series([_spans_to_rows(s) for s in spans])
 
     return mentions
-
-
-@pandas_udf(SPAN_ARRAY)
-def postprocess_udf(
-    texts: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    """(text, raw spans) → post-processed spans. Input spans are rows of
-    struct(start, end, tag)."""
-    for text_s, spans_s in texts:
-        out = []
-        for t, spans in zip(text_s, spans_s):
-            out.append(_spans_to_rows(postprocess(t or "", _rows_to_tuples(spans))))
-        yield pd.Series(out)
-
-
-@pandas_udf(SPAN_ARRAY)
-def bio_merge_udf(spans_col: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """BIO chain merge within a row (ner/utils.py:31-80 semantics). The
-    cross-row/window variant lives in operators/windows.py (W2)."""
-    for spans_s in spans_col:
-        yield spans_s.map(lambda spans: _spans_to_rows(bio_to_entities(_rows_to_tuples(spans))))
 
 
 @pandas_udf(StringType())
@@ -197,8 +139,3 @@ def triples_udf(cols: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Seri
             )
         yield pd.Series(out)
 
-
-def spans_sorted_distinct(col: Column) -> Column:
-    """Native A9/U3/O2: array_sort(array_distinct(spans)) — struct ordering is
-    field-order lexicographic, matching the reference (s, e, tag) sort."""
-    return F.array_sort(F.array_distinct(col))

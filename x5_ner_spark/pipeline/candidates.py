@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .mentions import _lex_norm_col
+from ..functions.columns import lex_norm_col
 
 
 def mention_table(triples: DataFrame) -> DataFrame:
@@ -22,7 +22,7 @@ def mention_table(triples: DataFrame) -> DataFrame:
     return (
         triples.select(
             F.col("obj").alias("mention"),
-            _lex_norm_col(F.col("obj")).alias("mention_norm"),
+            lex_norm_col(F.col("obj")).alias("mention_norm"),
             F.col("pred"),
         )
         .filter(F.length("mention_norm") > 0)

@@ -14,16 +14,93 @@ ingestion use.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.html_text import extract_text
-from ..core.mention_pipeline import final_mention_spans_batch, triples_from_spans
+from ..core.mention_pipeline import mention_detector, triples_from_spans
+from ..operators.decision_log import LOG_FIELDS, LOG_FIELDS_DDL, log_values
 
 TRIPLES_SCHEMA = "subj string, pred string, obj string, url string"
+TRIPLES_AND_LOG_SCHEMA = (
+    "rec_type string, url string, subj string, pred string, obj string, "
+    + LOG_FIELDS_DDL
+)
+_TRIPLES_AND_LOG_COLUMNS = ["rec_type", "url", "subj", "pred", "obj", *LOG_FIELDS]
+
+
+def _map_pages(
+    pages: DataFrame,
+    emit: Callable[[Callable, list, list], pd.DataFrame],
+    schema: str,
+    brand_lexicon,
+    balance: bool,
+    num_partitions: int | None,
+    emission_npz: str | None,
+    long_doc: str,
+    chunk_stride: int | None,
+) -> DataFrame:
+    """The one Arrow stage behind both fused entry points: project pages to
+    (url, html, text), optionally round-robin them, and per Arrow batch hand
+    ``emit(detect, urls, docs)`` the non-blank documents — the stored text,
+    or the text extracted from html when it is null or empty."""
+    load = mention_detector(
+        brand_lexicon, emission_npz=emission_npz, long_doc=long_doc,
+        chunk_stride=chunk_stride,
+    )
+    cols = pages.select(
+        "url",
+        "html" if "html" in pages.columns else F.lit(None).cast("binary").alias("html"),
+        F.col("text") if "text" in pages.columns else F.lit("").alias("text"),
+    )
+    if balance:
+        n = num_partitions or int(
+            pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+        cols = cols.repartition(n)
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        detect = load()
+        for pdf in batches:
+            urls, docs = [], []
+            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
+                # same fallback predicate as extract.run: only null/empty
+                # text triggers extraction (whitespace-only text stays as-is)
+                t = text if isinstance(text, str) and len(text) > 0 else extract_text(html)
+                if not t or not t.strip():
+                    continue
+                urls.append(url)
+                docs.append(t)
+            yield emit(detect, urls, docs)
+
+    return cols.mapInPandas(gen, schema=schema)
+
+
+def _triples_frame(detect, urls: list, docs: list) -> pd.DataFrame:
+    out: dict[str, list] = {"subj": [], "pred": [], "obj": [], "url": []}
+    for url, t, spans in zip(urls, docs, detect(docs)):
+        for subj, pred, obj in triples_from_spans(url, t, spans):
+            out["subj"].append(subj)
+            out["pred"].append(pred)
+            out["obj"].append(obj)
+            out["url"].append(url)
+    return pd.DataFrame(out, columns=["subj", "pred", "obj", "url"])
+
+
+def _triples_and_log_frame(detect, urls: list, docs: list) -> pd.DataFrame:
+    logs: list[list[dict]] = []
+    spans_per_doc = detect(docs, logs)
+    rows: list[tuple] = []
+    none15 = (None,) * len(LOG_FIELDS)
+    for url, t, spans, recs in zip(urls, docs, spans_per_doc, logs):
+        for subj, pred, obj in triples_from_spans(url, t, spans):
+            rows.append(("triple", url, subj, pred, obj) + none15)
+        for r in recs:
+            rows.append(("log", url, None, None, None, *log_values(r)))
+    return pd.DataFrame(rows, columns=_TRIPLES_AND_LOG_COLUMNS)
 
 
 def fused_triples(
@@ -55,62 +132,10 @@ def fused_triples(
     — full web pages get analyzed past the reference's 160-piece truncation
     (ref infer.py:165-171; VERDICT r7 #1). Default 'truncate' = pinned
     reference behavior."""
-    cols = pages.select(
-        "url",
-        "html" if "html" in pages.columns else F.lit(None).cast("binary").alias("html"),
-        F.col("text") if "text" in pages.columns else F.lit("").alias("text"),
+    return _map_pages(
+        pages, _triples_frame, TRIPLES_SCHEMA, brand_lexicon, balance,
+        num_partitions, emission_npz, long_doc, chunk_stride,
     )
-    if balance:
-        n = num_partitions or int(
-            pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        cols = cols.repartition(n)
-    lex_source = brand_lexicon
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = lex_source.value if hasattr(lex_source, "value") else lex_source
-        lex = frozenset(lex or [])
-        lex_list = sorted(lex)
-        provider = None
-        if emission_npz is not None:
-            from ..core.chunked import maybe_chunked
-            from ..core.emission import provider_for
-
-            provider = maybe_chunked(
-                provider_for(emission_npz), long_doc, chunk_stride
-            )
-        for pdf in batches:
-            urls, docs = [], []
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                # same fallback predicate as extract.run: only null/empty
-                # text triggers extraction (whitespace-only text stays as-is)
-                t = text if isinstance(text, str) and len(text) > 0 else extract_text(html)
-                if not t or not t.strip():
-                    continue
-                urls.append(url)
-                docs.append(t)
-            spans_per_doc = final_mention_spans_batch(
-                docs, lex, lex_list, provider=provider
-            )
-            out: dict[str, list] = {"subj": [], "pred": [], "obj": [], "url": []}
-            for url, t, spans in zip(urls, docs, spans_per_doc):
-                for subj, pred, obj in triples_from_spans(url, t, spans):
-                    out["subj"].append(subj)
-                    out["pred"].append(pred)
-                    out["obj"].append(obj)
-                    out["url"].append(url)
-            yield pd.DataFrame(out, columns=["subj", "pred", "obj", "url"])
-
-    return cols.mapInPandas(gen, schema=TRIPLES_SCHEMA)
-
-
-TRIPLES_AND_LOG_SCHEMA = (
-    "rec_type string, url string, subj string, pred string, obj string, "
-    "token_text string, start int, end int, label string, reason string, "
-    "p_brand double, p_type double, in_lex boolean, fuzzy_hit boolean, "
-    "pure_lat boolean, short_lat boolean, has_vowel boolean, "
-    "p_brand_sum double, p_type_sum double, p_o double"
-)
 
 
 def fused_triples_and_log(
@@ -133,60 +158,10 @@ def fused_triples_and_log(
     actions (otherwise each action re-executes the stage — standard Spark).
     Split with :func:`split_triples_and_log`. Row content is equality-tested
     against fused_triples and operators.decision_log."""
-    cols = pages.select(
-        "url",
-        "html" if "html" in pages.columns else F.lit(None).cast("binary").alias("html"),
-        F.col("text") if "text" in pages.columns else F.lit("").alias("text"),
+    return _map_pages(
+        pages, _triples_and_log_frame, TRIPLES_AND_LOG_SCHEMA, brand_lexicon,
+        balance, num_partitions, emission_npz, long_doc, chunk_stride,
     )
-    if balance:
-        n = num_partitions or int(
-            pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        cols = cols.repartition(n)
-    lex_source = brand_lexicon
-    out_cols = [c.split(" ")[0] for c in TRIPLES_AND_LOG_SCHEMA.split(", ")]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = lex_source.value if hasattr(lex_source, "value") else lex_source
-        lex = frozenset(lex or [])
-        lex_list = sorted(lex)
-        provider = None
-        if emission_npz is not None:
-            from ..core.chunked import maybe_chunked
-            from ..core.emission import provider_for
-
-            provider = maybe_chunked(
-                provider_for(emission_npz), long_doc, chunk_stride
-            )
-        for pdf in batches:
-            urls, docs = [], []
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                t = text if isinstance(text, str) and len(text) > 0 else extract_text(html)
-                if not t or not t.strip():
-                    continue
-                urls.append(url)
-                docs.append(t)
-            logs: list[list[dict]] = []
-            spans_per_doc = final_mention_spans_batch(
-                docs, lex, lex_list, logs=logs, provider=provider
-            )
-            rows: list[tuple] = []
-            none15 = (None,) * 15
-            for url, t, spans, recs in zip(urls, docs, spans_per_doc, logs):
-                for subj, pred, obj in triples_from_spans(url, t, spans):
-                    rows.append(("triple", url, subj, pred, obj) + none15)
-                for r in recs:
-                    rows.append((
-                        "log", url, None, None, None,
-                        r["token_text"], r["start"], r["end"], r["label"],
-                        r["reason"], r["p_brand"], r["p_type"], r["in_lex"],
-                        r["fuzzy_hit"], r["pure_lat"], r["short_lat"],
-                        r["has_vowel"], r["p_brand_sum"], r["p_type_sum"],
-                        r["p_o"],
-                    ))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return cols.mapInPandas(gen, schema=TRIPLES_AND_LOG_SCHEMA)
 
 
 def split_triples_and_log(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -195,9 +170,5 @@ def split_triples_and_log(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     triples = combined.filter(F.col("rec_type") == "triple").select(
         "subj", "pred", "obj", "url"
     )
-    log = combined.filter(F.col("rec_type") == "log").select(
-        "url", "token_text", "start", "end", "label", "reason",
-        "p_brand", "p_type", "in_lex", "fuzzy_hit", "pure_lat", "short_lat",
-        "has_vowel", "p_brand_sum", "p_type_sum", "p_o",
-    )
+    log = combined.filter(F.col("rec_type") == "log").select("url", *LOG_FIELDS)
     return triples, log

@@ -15,13 +15,6 @@ from pyspark.sql import functions as F
 
 from ..operators.span_udfs import make_mentions_udf
 
-# native normalization used by lexicon build (F1/F3 as Column expressions)
-_NOT_ALNUM = "[^0-9a-zA-Zа-я]+"
-
-
-def _lex_norm_col(c):
-    return F.regexp_replace(F.translate(F.lower(F.trim(c)), "ё", "е"), _NOT_ALNUM, "")
-
 
 def build_brand_lexicon(
     annotated: DataFrame, text_col: str = "text", spans_col: str = "spans",
@@ -82,5 +75,5 @@ def run(
             docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
         docs = docs.repartition(n)
-    udf = make_mentions_udf(lex, postprocessed=True, emission_npz=emission_npz)
+    udf = make_mentions_udf(lex, emission_npz=emission_npz)
     return docs.withColumn("spans", udf(F.col("text")))

@@ -15,7 +15,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import candidates, canonicalize, extract, graph, linking, mentions, triples
+from ..functions.columns import lex_norm_col
+from . import candidates, canonicalize, extract, graph, linking
 from .fixtures import BRANDS
 
 
@@ -98,7 +99,8 @@ def run_pipeline(
     quality_npz: str | None = None,
     quality_min: float = 0.5,
 ) -> dict[str, DataFrame]:
-    """Returns the stage DataFrames; writes stage tables + manifests when
+    """Returns the stage DataFrames (``docs``, ``triples``, ``linked``,
+    ``components``, ``nodes``, ``edges``); writes stage tables + manifests when
     ``out_root`` is given (checkpoint-resume per graph.write_stage).
 
     ``dedup=True`` inserts the near-dup page filter (:func:`dedup_docs`)
@@ -140,13 +142,12 @@ def run_pipeline(
             QT.quality_score_col(qw, qb, ngrams=qng) >= float(quality_min)
         )
     lex = brand_lexicon if brand_lexicon is not None else [b for b in BRANDS]
-    # `men` is a lazy plan for callers that want the span table; triple
-    # production itself uses the fused single-Arrow-stage path (pipeline/
-    # fused.py — row-identical, one JVM↔Python hop) and is persisted once so
-    # canonicalization's iterative actions and the caller's writes don't
-    # re-run inference (on a cluster, write_stage's Iceberg tables play this
-    # role; in-memory persist covers the library path)
-    men = mentions.run(docs.select("url", "text"), lex, spark, emission_npz=emission_npz)
+    # triple production uses the fused single-Arrow-stage path (pipeline/
+    # fused.py — row-identical to the staged path, one JVM↔Python hop) and
+    # is persisted once so canonicalization's iterative actions and the
+    # caller's writes don't re-run inference (on a cluster, write_stage's
+    # Iceberg tables play this role; in-memory persist covers the library
+    # path). Called through the module attribute, where tracers wrap it.
     from . import fused
 
     # a filtered docs table already carries its extracted text, which the
@@ -185,13 +186,13 @@ def run_pipeline(
     )
     kg_edges = trip.join(
         F.broadcast(link_sel),
-        (candidates._lex_norm_col(trip.obj) == F.col("link_mn"))
+        (lex_norm_col(trip.obj) == F.col("link_mn"))
         & (trip.pred == F.col("link_pred")),
         "left",
     ).select("subj", "pred", "obj", "entity_id", "url")
 
     out = {
-        "docs": docs, "mentions": men, "triples": trip, "linked": linked,
+        "docs": docs, "triples": trip, "linked": linked,
         "components": comp, "nodes": ent_nodes, "edges": kg_edges,
     }
     if out_root:

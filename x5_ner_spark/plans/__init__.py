@@ -8,17 +8,3 @@ from pyspark.sql import DataFrame
 def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    plan = executed_plan(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
-
-
-def join_strategies(df: DataFrame) -> list[str]:
-    plan = executed_plan(df)
-    return [
-        s
-        for s in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-                  "BroadcastNestedLoopJoin", "CartesianProduct")
-        if s in plan
-    ]
