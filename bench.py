@@ -200,7 +200,6 @@ def run_headline(master: str, include_pipeline: bool = True) -> dict:
 
     extras: dict[str, float] = {}
     if include_pipeline:
-        from x5_ner_spark.pipeline import extract, mentions, triples
         from x5_ner_spark.pipeline.fixtures import pages_df
         from x5_ner_spark.pipeline.runner import run_pipeline
 

@@ -1,0 +1,75 @@
+"""No module-level import in the package goes unused.
+
+An AST scan over ``x5_ner_spark/**/*.py``: every name a module binds with a
+top-level ``import`` / ``from … import`` must be read somewhere in that
+module. ``__init__.py`` files (re-export surfaces), ``from __future__``
+imports and names listed in ``__all__`` are exempt.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parent.parent / "x5_ner_spark"
+
+
+def _top_level_imports(body):
+    """Import nodes at module level, including those under a top-level
+    ``if`` / ``try`` (never inside a function or class)."""
+    for node in body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            yield node
+        elif isinstance(node, (ast.If, ast.Try)):
+            for block in (node.body, node.orelse, getattr(node, "handlers", []),
+                          getattr(node, "finalbody", [])):
+                for sub in block:
+                    if isinstance(sub, ast.ExceptHandler):
+                        yield from _top_level_imports(sub.body)
+                    else:
+                        yield from _top_level_imports([sub])
+
+
+def _bound_names(node):
+    if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+        return
+    for alias in node.names:
+        if alias.name == "*":
+            continue
+        if alias.asname:
+            yield alias.asname
+        elif isinstance(node, ast.Import):
+            yield alias.name.split(".")[0]
+        else:
+            yield alias.name
+
+
+def _used_names(tree):
+    return {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+
+
+def _exported(tree):
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            return set(ast.literal_eval(node.value))
+    return set()
+
+
+def unused_imports(path: Path) -> list[str]:
+    tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+    used = _used_names(tree) | _exported(tree)
+    return [
+        f"{path.relative_to(PKG.parent)}:{node.lineno} {name}"
+        for node in _top_level_imports(tree.body)
+        for name in _bound_names(node)
+        if name not in used
+    ]
+
+
+def test_no_unused_module_level_imports():
+    files = sorted(p for p in PKG.rglob("*.py") if p.name != "__init__.py")
+    assert files
+    hits = [hit for p in files for hit in unused_imports(p)]
+    assert hits == [], "unused imports:\n" + "\n".join(hits)

@@ -1,6 +1,6 @@
 """Plan-shape regression guards (VERDICT r5 #2).
 
-BENCH/plans_r7.txt records the audited physical plans, but a file is not a
+BENCH/plans_r9.txt records the audited physical plans, but a file is not a
 gate: these tests pin each headline query's shuffle-Exchange and broadcast
 operator counts so a change that adds a shuffle or demotes a broadcast join
 fails `pytest tests/` instead of waiting for a round-over-round plan diff.

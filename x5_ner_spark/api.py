@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from .core.mention_pipeline import final_mention_spans
 from .core.spans import Span, serialize_spans
-from .operators.span_udfs import make_mentions_udf, serialize_spans_udf
+from .operators.span_udfs import serialize_spans_udf
 from .pipeline import extract, runner, triples as triples_stage
 from .pipeline.mentions import run as mentions_run
 

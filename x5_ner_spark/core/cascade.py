@@ -62,10 +62,6 @@ def _looks_like_type_word(word: str) -> bool:
     return t in TYPE_HINTS and t not in STOPWORDS and not t.isdigit()
 
 
-def _fallback_label(p_type: float, base_label: str = "B-TYPE") -> str:
-    return base_label if p_type >= 0.15 else "O"
-
-
 def _decide_one_word(
     token_text: str,
     p: tuple,

@@ -13,7 +13,6 @@ transparent heuristic biases. Swapping in a real checkpoint only changes
 from __future__ import annotations
 
 import hashlib
-import math
 from functools import lru_cache
 
 from .cascade import STOPWORDS, TYPE_HINTS

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -21,6 +21,14 @@ def portable_hash32(col: Column | str, salt: str = "") -> Column:
     if salt:
         c = F.concat(c.cast("string"), F.lit(salt))
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast("bigint")
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """A 0-row frame with DDL ``schema`` ("name type, ..."), planned on the
+    JVM. An empty list- or pandas-built frame is a Python RDD (``Scan
+    ExistingRDD``) and wakes Python workers on every action."""
+    fields = (f.split(" ") for f in schema.split(", "))
+    return spark.range(0).select(*[F.lit(None).cast(t).alias(n) for n, t in fields])
 
 
 def bind_once(value: Column, body: Callable[[Column], Column]) -> Column:

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.columns import (
-    bind_once, cosine_similarity_col, portable_hash32, simple_tokens_col,
+    bind_once, cosine_similarity_col, empty_frame, portable_hash32,
+    simple_tokens_col,
 )
 from ..functions.scan import scan_parallel
 
@@ -184,15 +185,15 @@ def _jaccard_pairs_bincount(d: DataFrame, k: int, threshold: float) -> DataFrame
     out_schema = "id_a long, id_b long, n_inter long, na long, nb long"
     pdf = _hashed_shingle_sets(d, k).toPandas()
     n = len(pdf)
-    empty = spark.createDataFrame([], "id_a long, id_b long, jaccard double")
+    pairs_schema = "id_a long, id_b long, jaccard double"
     if n < 2:
-        return empty
+        return empty_frame(spark, pairs_schema)
     order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
     doc_ids = pdf["doc_id"].to_numpy()[order].astype(np.int64)
     arrs = pdf["sh"].to_numpy()[order]
     lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=n)
     if int(lens.sum()) == 0:
-        return empty
+        return empty_frame(spark, pairs_schema)
     flat = np.concatenate([np.asarray(a, dtype=np.int64) for a in arrs])
     doc_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=doc_off[1:])

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.columns import empty_frame
+
 LOCAL_FINISH_EDGES = int(os.environ.get("X5_CC_LOCAL_FINISH_EDGES", "2000000"))
 """Frontier size (edges) at or below which :func:`connected_components`
 finishes with a driver-side union-find instead of more star rounds. Each
@@ -112,7 +114,7 @@ def _finish_local(e: DataFrame, rounds: int, resume_info: dict | None) -> DataFr
         resume_info["rounds"] = rounds
         resume_info["local_finish_edges"] = int(len(pdf))
     if not len(pdf):
-        return spark.createDataFrame([], "node long, component long")
+        return empty_frame(spark, "node long, component long")
     src = pdf["src"].to_numpy(dtype=np.int64)
     dst = pdf["dst"].to_numpy(dtype=np.int64)
     nodes = np.unique(np.concatenate([src, dst]))

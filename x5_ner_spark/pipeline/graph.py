@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.columns import empty_frame
+
 MANIFEST_SCHEMA = (
     "stage string, part_id int, n_rows long, min_key string, max_key string, "
     "wall_s double, run_id string"
@@ -83,12 +85,8 @@ def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
     p = manifest_path(root)
     try:
         m = spark.read.schema(MANIFEST_SCHEMA).parquet(p)
-    except Exception:
-        # no manifest yet. The empty frame is planned on the JVM: an empty
-        # list- or pandas-built one is a Python RDD and wakes Python workers
-        m = spark.range(0).select(
-            *[F.lit(None).cast(t).alias(name) for name, t in _MANIFEST_FIELDS]
-        )
+    except Exception:  # no manifest yet
+        m = empty_frame(spark, MANIFEST_SCHEMA)
     return m.filter(F.col("stage") == stage)
 
 

@@ -225,10 +225,9 @@ def near_dup_edges_stream(
     silently discards such pairs (inner-join semantics, correct when the
     contract holds); pass ``unmatched='null'`` to route them to the output
     with ``jaccard IS NULL`` instead — the triage signal for
-    snapshot-lag monitoring (same pattern as media decode's
-    on_error='null'). At production scale the static side is the growing
-    Iceberg table — each micro-batch rescores only its few candidate pairs
-    against two doc_id-keyed lookups."""
+    snapshot-lag monitoring. At production scale the static side is the
+    growing Iceberg table — each micro-batch rescores only its few
+    candidate pairs against two doc_id-keyed lookups."""
     if unmatched not in ("drop", "null"):
         raise ValueError(f"unmatched must be 'drop' or 'null', got {unmatched!r}")
     from ..operators.dedup import shingle_sets

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import extract, mentions, triples
+from ..pipeline import extract, mentions
 
 
 def stream_pages(
@@ -109,42 +109,3 @@ def stream_triples_and_log(
     return fused_triples_and_log(
         pages_stream, brand_lexicon, balance=False, emission_npz=emission_npz
     )
-
-
-def stream_media(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 4
-) -> DataFrame:
-    """File-source stream over a media-table directory (MEDIA_SCHEMA
-    parquet) — the ingest shape for a continuously-crawled multimodal
-    corpus."""
-    from ..operators.multimodal import MEDIA_SCHEMA
-
-    return (
-        spark.readStream.schema(MEDIA_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def stream_media_features(
-    media_stream: DataFrame, decode: str = "real", on_error: str = "null"
-) -> DataFrame:
-    """media stream → whole-file content features. extract_features is
-    map-only mapInPandas (payload never shuffles, no state), so the batch
-    operator composes directly onto any trigger; on_error='null' is the
-    production default — one malformed payload must not kill the query."""
-    from ..operators.multimodal import extract_features
-
-    return extract_features(media_stream, decode=decode, on_error=on_error)
-
-
-def stream_frame_features(
-    media_stream: DataFrame, every_s: float = 1.0, on_error: str = "null"
-) -> DataFrame:
-    """video rows of a media stream → one feature row per sampled frame
-    (VERDICT r5 #8): the same extract_frame_features plan as batch — one
-    sample-table parse per video, frames decoded inside the scan partition,
-    registered codecs carried in the closure — composed onto the stream."""
-    from ..operators.multimodal import extract_frame_features
-
-    return extract_frame_features(media_stream, every_s=every_s, on_error=on_error)
