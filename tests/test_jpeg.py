@@ -117,21 +117,6 @@ def test_byte_stuffing_roundtrip():
         assert np.abs(out.astype(int) - img.astype(int)).max() <= 4
 
 
-def test_jpeg_through_extract_features(spark):
-    from x5_ner_spark.core import media as M
-    from x5_ner_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
-
-    img = _gradient(16, 16)
-    payload = encode_jpeg(img, subsampling="4:2:0")
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(payload), "image/jpeg", 16, 16, None)],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(df, decode="real").collect()[0]
-    want = M.image_feature(decode_jpeg(payload))
-    assert np.allclose(np.array(row["feature"]), np.array(want), atol=1e-6)
-
-
 # ------------------------------------------------------------- progressive
 
 
