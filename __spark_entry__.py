@@ -14,11 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from x5_ner_spark.functions.columns import (
-    cosine_similarity_col,
-    portable_hash32,
-    simple_tokens_col,
-)
+from x5_ner_spark.functions.columns import portable_hash32, simple_tokens_col
 from x5_ner_spark.functions.scan import scan_parallel
 from x5_ner_spark.operators import (
     crf_train,

@@ -30,19 +30,6 @@ def test_dataframe_paths_agree(spark):
     assert ann["u2"].startswith("[(0, 6, 'B-TYPE')")
 
 
-def test_jaccard_df_cap_drops_boilerplate(spark):
-    from x5_ner_spark.operators.dedup import jaccard_pairs
-
-    # every doc shares the boilerplate prefix; pairs survive without the cap
-    # and disappear when the hot shingle is dropped
-    rows = [(i, "common header boilerplate text unique" + str(i) + " tail" + str(i) + " x" + str(i)) for i in range(10)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    with_pairs = jaccard_pairs(docs, k=3, threshold=0.2)
-    without = jaccard_pairs(docs, k=3, threshold=0.2, df_cap_fraction=0.2)
-    assert with_pairs.count() > 0
-    assert without.count() == 0
-
-
 def test_lexicon_build_to_engine_roundtrip(spark, tmp_path):
     """A1 lexicon build → S5 write/read → engine consumes it (the reference's
     build_brand_lexicon.py → infer.py flow, end-to-end in Spark)."""

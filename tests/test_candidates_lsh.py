@@ -4,8 +4,6 @@ against the exact banded join on fixture data."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from x5_ner_spark.pipeline import candidates
 
 

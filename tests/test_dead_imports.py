@@ -1,9 +1,11 @@
-"""No module-level import in the package goes unused.
+"""No module-level import in the package or its launchers goes unused,
+and only the deployment-settings modules read the environment.
 
-An AST scan over ``x5_ner_spark/**/*.py``: every name a module binds with a
-top-level ``import`` / ``from … import`` must be read somewhere in that
-module. ``__init__.py`` files (re-export surfaces), ``from __future__``
-imports and names listed in ``__all__`` are exempt.
+An AST scan over ``x5_ner_spark/**/*.py``, ``__spark_entry__.py``, the
+``bench*.py`` and ``kg_submit.py`` launchers and ``tools/*.py``: every name
+a module binds with a top-level ``import`` / ``from … import`` must be read
+somewhere in that module. ``__init__.py`` files (re-export surfaces),
+``from __future__`` imports and names listed in ``__all__`` are exempt.
 """
 
 from __future__ import annotations
@@ -11,7 +13,12 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "x5_ner_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "x5_ner_spark"
+LAUNCHERS = ["__spark_entry__.py", "bench.py", "bench_extra.py", "kg_submit.py"]
+# deployment settings (cores, driver memory, Spark conf overrides); every
+# other path choice in the package depends on its input alone
+ENV_READERS = {"session.py", "sources/config.py"}
 
 
 def _top_level_imports(body):
@@ -61,7 +68,7 @@ def unused_imports(path: Path) -> list[str]:
     tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
     used = _used_names(tree) | _exported(tree)
     return [
-        f"{path.relative_to(PKG.parent)}:{node.lineno} {name}"
+        f"{path.relative_to(ROOT)}:{node.lineno} {name}"
         for node in _top_level_imports(tree.body)
         for name in _bound_names(node)
         if name not in used
@@ -70,6 +77,33 @@ def unused_imports(path: Path) -> list[str]:
 
 def test_no_unused_module_level_imports():
     files = sorted(p for p in PKG.rglob("*.py") if p.name != "__init__.py")
-    assert files
+    files += [ROOT / name for name in LAUNCHERS] + sorted((ROOT / "tools").glob("*.py"))
+    assert all(p.is_file() for p in files)
     hits = [hit for p in files for hit in unused_imports(p)]
     assert hits == [], "unused imports:\n" + "\n".join(hits)
+
+
+def _env_reads(tree):
+    """Line numbers of ``os.environ`` / ``os.getenv`` references."""
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr in ("environ", "getenv")
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        ):
+            yield node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module == "os" and any(
+            a.name in ("environ", "getenv") for a in node.names
+        ):
+            yield node.lineno
+
+
+def test_only_deployment_settings_read_the_environment():
+    hits = [
+        f"{rel}:{line}"
+        for p in sorted(PKG.rglob("*.py"))
+        if (rel := p.relative_to(PKG).as_posix()) not in ENV_READERS
+        for line in _env_reads(ast.parse(p.read_text(encoding="utf-8")))
+    ]
+    assert hits == [], "environment reads outside session/config:\n" + "\n".join(hits)

@@ -2,13 +2,11 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from x5_ner_spark.operators import eval_ops
 from x5_ner_spark.operators.span_udfs import SPAN_ARRAY
 from x5_ner_spark.operators.split import (
-    combo_label_col,
     largest_remainder_quotas,
     stratified_split,
 )

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from x5_ner_spark.pipeline import extract, fused, mentions, triples
 from x5_ner_spark.pipeline.fixtures import BRANDS, pages_df

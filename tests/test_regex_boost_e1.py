@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 from x5_ner_spark.core.regex_boost import boost_percent
-from x5_ner_spark.core.spans import serialize_spans
 from tests.conftest import has_reference, load_reference_module
 
 CASES = [

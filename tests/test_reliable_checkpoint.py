@@ -9,6 +9,7 @@ iterative stages too.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -16,10 +17,11 @@ def _cc(edges, **kw):
     """connected_components pinned to the ITERATIVE path: these tests are
     about round checkpoints/resume, which the hybrid local finisher (see
     canonicalize.LOCAL_FINISH_EDGES) would answer before any round runs."""
-    from x5_ner_spark.pipeline.canonicalize import connected_components
+    from x5_ner_spark.pipeline import canonicalize
 
-    kw.setdefault("local_finish_edges", 0)
-    return connected_components(edges, **kw)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(canonicalize, "LOCAL_FINISH_EDGES", 0)
+        return canonicalize.connected_components(edges, **kw)
 
 
 def _chain_edges(spark, n=30):

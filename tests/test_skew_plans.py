@@ -263,7 +263,7 @@ def test_near_dup_clusters_lsh_recall_vs_exact(spark):
     assert len(lsh_dropped & exact_dropped) / max(len(exact_dropped), 1) >= 0.9
 
 
-def test_cc_hub_skew_rounds_and_salted_path(spark):
+def test_cc_hub_skew_rounds_and_salted_path(spark, monkeypatch):
     """SURVEY §7.4(5) promised hub-skew stress: one node carries ~10% of all
     edges. CC round count must stay O(log n) (the hub is star-shaped already;
     the ring backbone is the long-diameter part), AQE skew handling is on in
@@ -271,7 +271,7 @@ def test_cc_hub_skew_rounds_and_salted_path(spark):
     hub-key distribution."""
     import math
 
-    from x5_ner_spark.pipeline.canonicalize import connected_components
+    from x5_ner_spark.pipeline import canonicalize
     from x5_ner_spark.pipeline.fixtures import hub_edges_df
     from x5_ner_spark.pipeline.skew import salted_count
 
@@ -282,8 +282,9 @@ def test_cc_hub_skew_rounds_and_salted_path(spark):
     assert hub_deg / total >= 0.08, (hub_deg, total)  # the skew is real
 
     info: dict = {}
-    # local_finish_edges=0: this test is ABOUT the iterative rounds
-    comp = connected_components(edges, resume_info=info, local_finish_edges=0)
+    # no local finish: this test is ABOUT the iterative rounds
+    monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", 0)
+    comp = canonicalize.connected_components(edges, resume_info=info)
     rows = comp.collect()
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)  # ring+hub: one component
@@ -312,13 +313,13 @@ def test_tfidf_idf_join_is_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan[:2000]
 
 
-def test_iterative_loops_release_superseded_blocks(spark):
+def test_iterative_loops_release_superseded_blocks(spark, monkeypatch):
     """VERDICT r3 #4: CC and PageRank must not pin every round's
     localCheckpoint blocks for the app's lifetime. After a multi-round run,
     the number of cached RDDs attributable to the loop must be bounded by a
     small constant (the live frontier), not grow with round count."""
     from x5_ner_spark.operators.graph_ops import pagerank
-    from x5_ner_spark.pipeline.canonicalize import connected_components
+    from x5_ner_spark.pipeline import canonicalize
     from x5_ner_spark.pipeline.fixtures import hub_edges_df
 
     sc = spark.sparkContext
@@ -330,7 +331,8 @@ def test_iterative_loops_release_superseded_blocks(spark):
     n = 2048
     edges = hub_edges_df(spark, n, hub_share=0.1)
     info: dict = {}
-    comp = connected_components(edges, resume_info=info, local_finish_edges=0)
+    monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", 0)
+    comp = canonicalize.connected_components(edges, resume_info=info)
     assert comp.count() == n
     assert info["rounds"] >= 3  # the loop really iterated
     after_cc = n_cached()

@@ -4,8 +4,6 @@ connected components vs union-find, and checkpoint-resume."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,19 +111,17 @@ def _union_find_components(edges, nodes):
     [(0, i) for i in range(1, 50)] + [(100, 101)],           # hub star
     [],
 ])
-def test_connected_components_vs_union_find(spark, edges, local_finish):
+def test_connected_components_vs_union_find(spark, monkeypatch, edges, local_finish):
+    if local_finish is not None:
+        monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", local_finish)
     if not edges:
         df = spark.createDataFrame([], "src long, dst long")
-        assert canonicalize.connected_components(
-            df, local_finish_edges=local_finish
-        ).count() == 0
+        assert canonicalize.connected_components(df).count() == 0
         return
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["node"]: r["component"]
-        for r in canonicalize.connected_components(
-            df, local_finish_edges=local_finish
-        ).collect()
+        for r in canonicalize.connected_components(df).collect()
     }
     nodes = sorted({x for e in edges for x in e})
     want = _union_find_components([e for e in edges if e[0] != e[1]], nodes)
@@ -135,8 +131,8 @@ def test_connected_components_vs_union_find(spark, edges, local_finish):
             assert got[n] == want[n], (n, got.get(n), want[n])
 
 
-def test_cc_local_finish_gate_boundary_and_markers(spark):
-    """The hybrid finisher fires exactly at frontier ≤ local_finish_edges —
+def test_cc_local_finish_gate_boundary_and_markers(spark, monkeypatch):
+    """The hybrid finisher fires exactly at frontier ≤ LOCAL_FINISH_EDGES —
     immediately when the input already fits (rounds == 0), mid-iteration
     once a star round contracts under the bar — and stamps resume_info so
     runs are auditable. All paths must agree exactly."""
@@ -147,10 +143,11 @@ def test_cc_local_finish_gate_boundary_and_markers(spark):
     )  # 40-edge chain; star rounds contract it fast
 
     def run(threshold):
+        monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", threshold)
         info: dict = {}
         rows = sorted(
             map(tuple, canonicalize.connected_components(
-                edges, resume_info=info, local_finish_edges=threshold
+                edges, resume_info=info
             ).collect())
         )
         return rows, info
@@ -168,9 +165,10 @@ def test_cc_local_finish_gate_boundary_and_markers(spark):
         [(i, j) for i in range(20) for j in range(i + 1, 20)],
         "src long, dst long",
     )
+    monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", 100)
     info: dict = {}
     mid = sorted(map(tuple, canonicalize.connected_components(
-        clique, resume_info=info, local_finish_edges=100
+        clique, resume_info=info
     ).collect()))
     assert info["rounds"] >= 1 and info["local_finish_edges"] <= 100
     assert mid == [(n, 0) for n in range(20)]

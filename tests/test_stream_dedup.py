@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from x5_ner_spark.operators.dedup import (
     minhash_candidate_pairs,

@@ -32,19 +32,16 @@ unchanged frame.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-SCAN_TARGET_BYTES = int(os.environ.get("X5_SCAN_TARGET_BYTES", str(96 << 10)))
+SCAN_TARGET_BYTES = 96 << 10
 """Stat-bytes per repartition target partition (96 KB parquet ≈ one
-task-worth of decompressed map work). Raise on clusters where the valve
-should fire less eagerly; 0 disables the valve."""
+task-worth of decompressed map work)."""
 
 _NATURAL_SPLIT_BYTES = 128 << 20  # default spark.sql.files.maxPartitionBytes
 
 
-def scan_parallel(df: DataFrame, factor: int = 2) -> DataFrame:
+def scan_parallel(df: DataFrame) -> DataFrame:
     """Repartition ``df`` toward the session's core count IF its optimizer
     size estimate says the scan cannot have enough natural splits;
     otherwise return it unchanged (see module docstring). Row-level
@@ -52,8 +49,6 @@ def scan_parallel(df: DataFrame, factor: int = 2) -> DataFrame:
     per-row projection whose result is partitioning-independent, and
     round-robin repartition is deterministic under Spark's
     sort-before-repartition default."""
-    if not SCAN_TARGET_BYTES:
-        return df
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
     try:
@@ -65,7 +60,7 @@ def scan_parallel(df: DataFrame, factor: int = 2) -> DataFrame:
         return df
     if size >= cores * _NATURAL_SPLIT_BYTES:
         return df  # big input: natural splits cover the cores
-    want = min(factor * cores, -(-size // SCAN_TARGET_BYTES))
+    want = min(2 * cores, -(-size // SCAN_TARGET_BYTES))
     if want <= 2:
         return df  # too small for the exchange to pay for itself
     return df.repartition(want)

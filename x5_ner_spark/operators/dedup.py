@@ -29,8 +29,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,7 +38,7 @@ from ..functions.columns import (
 )
 from ..functions.scan import scan_parallel
 
-LOCAL_JACCARD_DOCS = int(os.environ.get("X5_JACCARD_LOCAL_DOCS", "500000"))
+LOCAL_JACCARD_DOCS = 500_000
 """Corpus size (docs) at or below which :func:`jaccard_pairs` runs the
 broadcast-postings kernel instead of the shared-shingle self-join — the
 same bounded-hybrid pattern as the CC driver finisher
@@ -55,8 +53,7 @@ broadcasts them (tens of MB), and counts pair intersections with
 vectorized numpy inside parallel tasks, emitting ONLY threshold
 survivors. Nothing quadratic ever crosses an exchange. Above the bound
 the exact self-join shape still runs (jaccard_pairs is the documented
-oracle-only variant; the 100 TB path is near_dup_clusters_lsh). 0
-disables the kernel."""
+oracle-only variant; the 100 TB path is near_dup_clusters_lsh)."""
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -297,56 +294,21 @@ def _jaccard_pairs_bincount(d: DataFrame, k: int, threshold: float) -> DataFrame
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame, k: int = 3, threshold: float = 0.5, sample_mod: int = 1,
-    df_cap_fraction: float | None = None,
-) -> DataFrame:
-    """n-gram Jaccard near-dup pairs via shared-shingle blocking:
-    |A∩B| from the shingle join, |A∪B| = |A|+|B|−|A∩B|. Quadratic blowup is
-    bounded because only docs sharing a shingle ever meet. Set sizes ride
-    the join rows (two ints) and the self-join reads ONE repartition
-    exchange from both sides — total: one corpus exchange plus the pair
-    groupBy (the old shape had 11 exchanges: a corpus-wide distinct, a
-    sizes aggregate, and two size lookup joins, all gone).
-
-    ``df_cap_fraction``: at web scale, boilerplate shingles appear in a huge
-    fraction of documents and quadratically dominate the self-join; setting
-    e.g. 0.001 drops shingles present in >0.1% of docs BEFORE the join (one
-    extra groupBy). Off by default (exact semantics for the oracle gate).
-    The cap also defuses the one skew risk of partitioning by shingle: a
-    boilerplate shingle's rows all hash to one partition until it is
-    dropped."""
-    d = docs
-    if sample_mod > 1:
-        d = d.filter(F.col("doc_id") % sample_mod == 0)
-    if df_cap_fraction is None and LOCAL_JACCARD_DOCS and (
-        d.count() <= LOCAL_JACCARD_DOCS
-    ):
-        # bounded-hybrid kernel (LOCAL_JACCARD_DOCS): identical output,
-        # nothing quadratic crosses an exchange; the count gate is
-        # metadata-only on parquet sources
-        return _jaccard_pairs_bincount(d, k, threshold)
-    src = _sized_shingles(d, k)
-    if df_cap_fraction is not None:
-        n_docs = d.count()
-        cap = max(int(n_docs * df_cap_fraction), 2)
-        hot = (
-            src.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > cap)
-            .select("shingle")
-        )
-        capped = src.join(F.broadcast(hot), "shingle", "left_anti")
-        # set sizes change when boilerplate shingles are removed: recompute
-        # them post-cap (matches the old sizes-after-filter semantics; only
-        # the capped/at-scale path pays the extra aggregate)
-        sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh_capped"))
-        src = (
-            capped.drop("n_sh")
-            .join(sizes, "doc_id")
-            .select("doc_id", F.col("n_sh_capped").alias("n_sh"), "shingle")
-        )
-    src = src.repartition("shingle")  # ONE exchange, reused by both join sides
+def jaccard_pairs(docs: DataFrame, k: int = 3, threshold: float = 0.5) -> DataFrame:
+    """n-gram Jaccard near-dup pairs. Up to :data:`LOCAL_JACCARD_DOCS` docs
+    the broadcast-postings kernel runs (:func:`_jaccard_pairs_bincount`);
+    above it, shared-shingle blocking: |A∩B| from the shingle join,
+    |A∪B| = |A|+|B|−|A∩B|. Quadratic blowup is bounded because only docs
+    sharing a shingle ever meet. Set sizes ride the join rows (two ints)
+    and the self-join reads ONE repartition exchange from both sides —
+    total: one corpus exchange plus the pair groupBy (the old shape had 11
+    exchanges: a corpus-wide distinct, a sizes aggregate, and two size
+    lookup joins, all gone). Both paths emit identical rows."""
+    if docs.count() <= LOCAL_JACCARD_DOCS:
+        # the count gate is metadata-only on parquet sources
+        return _jaccard_pairs_bincount(docs, k, threshold)
+    # ONE exchange, reused by both join sides
+    src = _sized_shingles(docs, k).repartition("shingle")
     a = src.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("na"), "shingle")
     b = src.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("nb"), "shingle")
     inter = (

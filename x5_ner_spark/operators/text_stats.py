@@ -6,8 +6,6 @@ whole-stage codegen) — zero Python in the hot path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -360,7 +358,7 @@ def numeric_profile(
 PROFILE_HIST_GROUPS = 64
 PROFILE_HIST_BUCKETS = 65536
 PROFILE_HIST_COLLECT = 2_000_000
-PROFILE_HIST_MIN_ROWS = int(os.environ.get("X5_PROFILE_HIST_MIN_ROWS", "2000000"))
+PROFILE_HIST_MIN_ROWS = 2_000_000
 """Total-row threshold below which the histogram path yields back to the
 percentile() aggregate: the three-pass structure has ~2 s of fixed job
 cost, so it only wins once the aggregate's per-group value map gets big
@@ -368,8 +366,7 @@ cost, so it only wins once the aggregate's per-group value map gets big
 2.2 s; sf1.0 6M rows — agg 8.5 s vs hist 3.0 s)."""
 
 
-def _exact_percentiles_histogram(df, group_col, value_col, pcts,
-                                 min_rows: int | None = None):
+def _exact_percentiles_histogram(df, group_col, value_col, pcts):
     """Exact per-group order statistics via histogram selection — three
     bounded passes instead of Spark's ``percentile()`` aggregate, whose
     per-group value→count map (4.6M entries per group at sf1.0) is built,
@@ -416,8 +413,7 @@ def _exact_percentiles_histogram(df, group_col, value_col, pcts,
     )
     if len(stats) > PROFILE_HIST_GROUPS or any(r["n"] == 0 for r in stats):
         return None
-    floor = PROFILE_HIST_MIN_ROWS if min_rows is None else min_rows
-    if sum(r["n"] for r in stats) < floor:
+    if sum(r["n"] for r in stats) < PROFILE_HIST_MIN_ROWS:
         return None  # below the crossover the aggregate form is faster
     # null group keys break the map-literal lookup; NaN values break both
     # the bucket arithmetic and the local sort — rare shapes, fall back

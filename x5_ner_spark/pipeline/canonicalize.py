@@ -18,14 +18,12 @@ plan doesn't grow across iterations.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import empty_frame
 
-LOCAL_FINISH_EDGES = int(os.environ.get("X5_CC_LOCAL_FINISH_EDGES", "2000000"))
+LOCAL_FINISH_EDGES = 2_000_000
 """Frontier size (edges) at or below which :func:`connected_components`
 finishes with a driver-side union-find instead of more star rounds. Each
 star round is a full Spark job whose cost has a fixed scheduler floor — at
@@ -35,8 +33,7 @@ costs the same at 2 and at 8 cores). The near-dup edge list is tiny
 relative to the corpus (rescored TRUE pairs only), so at 100 TB the same
 hybrid applies: iterate while the frontier is big — each round contracts
 it toward one edge per non-root node — and collect the moment it fits.
-The collect is bounded by construction: 2 longs/row → ≤ ~32 MB at the
-default. 0 disables the finisher (pure iterative path)."""
+The collect is bounded by construction: 2 longs/row → ≤ ~32 MB."""
 
 
 def _ckpt_rdd(df: DataFrame):
@@ -155,7 +152,6 @@ def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20,
     checkpoint_dir: str | None = None, checkpoint_every: int = 5,
     checkpoint_buckets: int = 8, resume_info: dict | None = None,
-    local_finish_edges: int | None = None,
 ) -> DataFrame:
     """edges(src: long, dst: long) → (node: long, component: long) where
     component is the minimum node id of the component.
@@ -176,11 +172,11 @@ def connected_components(
     receives ``resumed_from_round`` when a checkpoint was used
     (crash-resume tested: results identical to the uninterrupted run).
 
-    ``local_finish_edges`` (default :data:`LOCAL_FINISH_EDGES`, 0 disables):
-    once the frontier — initial or after any round — fits under this edge
-    count, finish with a driver-side union-find instead of more rounds
-    (:func:`_finish_local`; exact, same min-id labeling). ``resume_info``
-    then also carries ``local_finish_edges`` (the collected count).
+    Once the frontier — initial or after any round — fits under
+    :data:`LOCAL_FINISH_EDGES` edges, finish with a driver-side union-find
+    instead of more rounds (:func:`_finish_local`; exact, same min-id
+    labeling). ``resume_info`` then also carries ``local_finish_edges``
+    (the collected count).
     """
     spark = edges.sparkSession
     e = None
@@ -224,10 +220,9 @@ def connected_components(
         ).first()
         return (r["n"], r["h"])
 
-    threshold = LOCAL_FINISH_EDGES if local_finish_edges is None else local_finish_edges
     sig = _sig(e)  # materializes the lazy checkpoint
     rounds = 0
-    if sig[0] <= threshold:
+    if sig[0] <= LOCAL_FINISH_EDGES:
         # hybrid finisher (see LOCAL_FINISH_EDGES): the frontier count came
         # free with the signature job, so the gate adds no work — collect
         # and union-find instead of O(log n) more scheduler round-trips
@@ -243,7 +238,7 @@ def connected_components(
             # release the superseded frontier's blocks — storage stays
             # bounded by two frontiers regardless of round count
             prev.unpersist(False)
-        if sig2[0] <= threshold and sig2 != sig:
+        if sig2[0] <= LOCAL_FINISH_EDGES and sig2 != sig:
             # contracted into collect range mid-iteration (converged
             # frontiers fall through to the declarative members∪roots path,
             # which costs no further full passes)

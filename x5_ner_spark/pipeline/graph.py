@@ -124,7 +124,6 @@ def write_stage(
     key: str,
     n_buckets: int = 8,
     run_id: str = "run0",
-    resume: bool = True,
     catalog: str | None = None,
 ) -> list[int]:
     """Write ``df`` bucketed by ``key`` into root/stage/part_id=*/ with one
@@ -140,7 +139,7 @@ def write_stage(
     anti-join are layout-independent (they key on (stage, part_id)).
     """
     spark = df.sparkSession
-    todo = pending_parts(spark, root, stage, n_buckets) if resume else list(range(n_buckets))
+    todo = pending_parts(spark, root, stage, n_buckets)
     if not todo:
         return []
     cat = catalog if catalog is not None else iceberg_catalog(spark)

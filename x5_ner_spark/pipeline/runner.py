@@ -49,28 +49,18 @@ def default_alias_dict(spark: SparkSession) -> DataFrame:
     )
 
 
-def dedup_docs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_bucket: int | None = -1,
-) -> DataFrame:
+def dedup_docs(docs: DataFrame) -> DataFrame:
     """Near-dup page filter for the ingestion path: MinHash-LSH clusters
-    over the extracted text (operators/dedup.near_dup_clusters_lsh), ONE
+    over the extracted text (operators/dedup.near_dup_clusters_lsh, with
+    its default threshold and hub-skew valve at DEFAULT_MAX_BUCKET), ONE
     canonical page kept per cluster (longest text, ties → smallest id) —
     the standard pre-inference dedup of a web-corpus pipeline (a crawl is
     20-40% near-duplicate; deduping before the model pass saves that
-    fraction of inference cost).
-
-    ``max_bucket`` follows near_dup_clusters_lsh's contract exactly —
-    None = valve OFF (exact LSH semantics), an int = that cap; the default
-    (-1 sentinel, "unset") resolves to DEFAULT_MAX_BUCKET. Same meaning at
-    both layers, so a caller who knows the operator's contract is never
-    surprised here. Page identity is xxhash64(url) — adequate to 10^8
-    pages; a production deployment keys on a 128-bit url fingerprint
-    column instead."""
+    fraction of inference cost). Page identity is xxhash64(url) — adequate
+    to 10^8 pages; a production deployment keys on a 128-bit url
+    fingerprint column instead."""
     from ..operators import dedup as D
 
-    mb = D.DEFAULT_MAX_BUCKET if max_bucket == -1 else max_bucket
     keyed = docs.withColumn("_did", F.xxhash64("url"))
     clusters = D.near_dup_clusters_lsh(
         keyed.select(
@@ -78,8 +68,6 @@ def dedup_docs(
             "text",
             F.length("text").cast("double").alias("n_chars"),
         ),
-        threshold=threshold,
-        max_bucket=mb,
     )
     drops = clusters.filter("dropped").select(F.col("doc_id").alias("_did"))
     return keyed.join(drops, "_did", "left_anti").drop("_did")
@@ -95,7 +83,6 @@ def run_pipeline(
     run_id: str = "run0",
     emission_npz: str | None = None,
     dedup: bool = False,
-    dedup_max_bucket: int | None = -1,
     quality_npz: str | None = None,
     quality_min: float = 0.5,
 ) -> dict[str, DataFrame]:
@@ -104,10 +91,8 @@ def run_pipeline(
     ``out_root`` is given (checkpoint-resume per graph.write_stage).
 
     ``dedup=True`` inserts the near-dup page filter (:func:`dedup_docs`)
-    between extraction and inference — the hub-skew valve is ON by default
-    there (``dedup_max_bucket`` overrides, same contract as
-    near_dup_clusters_lsh: None = valve off, int = cap, -1 = unset/default;
-    VERDICT r7 #7).
+    between extraction and inference; its hub-skew valve is always on
+    (VERDICT r7 #7).
 
     ``quality_npz`` inserts the learned-quality page filter AFTER dedup
     (the standard curation order: dedup first so boilerplate clusters don't
@@ -133,7 +118,7 @@ def run_pipeline(
     if dedup:
         docs = docs.persist()
         owned.append(docs)
-        docs = dedup_docs(docs, max_bucket=dedup_max_bucket)
+        docs = dedup_docs(docs)
     if quality_npz:
         from ..operators import quality_train as QT
 
@@ -254,12 +239,7 @@ def main() -> None:
     ap.add_argument(
         "--dedup", action="store_true",
         help="near-dup page filter before inference (MinHash-LSH clusters, "
-             "one keeper per cluster; hub-skew valve ON by default)",
-    )
-    ap.add_argument(
-        "--dedup-max-bucket", type=int, default=-1,
-        help="hub-skew valve cap for --dedup (default: "
-             "operators/dedup.DEFAULT_MAX_BUCKET; 0 disables the valve)",
+             "one keeper per cluster; hub-skew valve on)",
     )
     ap.add_argument(
         "--quality-npz", default=None,
@@ -353,9 +333,6 @@ def main() -> None:
         n_buckets=n_buckets, run_id=str(cfg["run_id"]),
         emission_npz=args.emission_npz,
         dedup=args.dedup,
-        # CLI keeps 0 = "disable the valve" (argparse cannot pass None);
-        # the library contract below is None = off, -1 = unset
-        dedup_max_bucket=None if args.dedup_max_bucket == 0 else args.dedup_max_bucket,
         quality_npz=args.quality_npz,
         quality_min=args.quality_min,
     )
