@@ -9,6 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from x5_ner_spark import obs
 from x5_ner_spark.core.ctx_transformer import (
     CtxTransformerProvider,
     write_ctx_checkpoint,
@@ -23,6 +24,11 @@ VOCAB = [
     "моло", "##ко", "кефир", "сан", "санта", "##та", "вода",
     "greenfield", "чай", "##й", "ча", "сок", "хлеб", "сыр",
 ]
+
+
+def _losses(log):
+    """Per-iteration losses from the recorded ``train_loss`` events."""
+    return [f["loss"] for name, f in log if name == "train_loss"]
 
 
 @pytest.fixture(scope="module")
@@ -77,11 +83,9 @@ def test_fit_descends_and_improves_teacher_agreement(spark, ckpt, docs, tmp_path
     from x5_ner_spark.core.textnorm import norm_token_simple
 
     feats = ctx_feature_table(docs, ckpt)
-    hist: list = []
-    out = fit_ctx_head(
-        feats, ckpt, str(tmp_path / "trained.npz"), iters=60, lr=1.0,
-        loss_history=hist,
-    )
+    with obs.recording() as log:
+        out = fit_ctx_head(feats, ckpt, str(tmp_path / "trained.npz"), iters=60, lr=1.0)
+    hist = _losses(log)
     assert hist[-1] < hist[0] * 0.8, hist[:3] + hist[-3:]
 
     # the trained checkpoint dispatches and serves like any ctx checkpoint
@@ -157,12 +161,13 @@ def test_weighted_head_gradients_match_finite_differences():
 
 
 def test_fit_balanced_class_weight_descends(spark, ckpt, docs, tmp_path):
-    hist: list = []
     feats = ctx_feature_table(docs, ckpt)
-    out = fit_ctx_head(
-        feats, ckpt, str(tmp_path / "bal.npz"), iters=30, lr=0.3,
-        loss_history=hist, class_weight="balanced",
-    )
+    with obs.recording() as log:
+        out = fit_ctx_head(
+            feats, ckpt, str(tmp_path / "bal.npz"), iters=30, lr=0.3,
+            class_weight="balanced",
+        )
+    hist = _losses(log)
     assert hist[-1] < hist[0], (hist[0], hist[-1])
     assert out.endswith(".npz")
     with pytest.raises(ValueError):
@@ -193,11 +198,12 @@ def test_distill_eval_triples_floor(spark, tmp_path):
         max_len=160,
     )
     pages = pages_df(spark, 300).persist()
-    hist: list = []
-    res = distill_eval_triples(
-        pages, ckpt, str(tmp_path / "distilled.npz"), iters=200, lr=0.05,
-        loss_history=hist, objective="hard",
-    )
+    with obs.recording() as log:
+        res = distill_eval_triples(
+            pages, ckpt, str(tmp_path / "distilled.npz"), iters=200, lr=0.05,
+            objective="hard",
+        )
+    hist = _losses(log)
     assert hist[-1] < hist[0] * 0.5, (hist[0], hist[-1])
     assert res["f1"] >= 0.70, res
 
@@ -260,11 +266,12 @@ def test_fit_soft_descends_and_serves(spark, ckpt, docs, tmp_path):
     from x5_ner_spark.operators.ctx_train import ctx_feature_table, fit_ctx_head
 
     feats = ctx_feature_table(docs, ckpt, soft=True)
-    hist: list = []
-    out = fit_ctx_head(
-        feats, ckpt, str(tmp_path / "soft.npz"), iters=40, lr=0.1,
-        loss_history=hist, soft=True, momentum=0.9,
-    )
+    with obs.recording() as log:
+        out = fit_ctx_head(
+            feats, ckpt, str(tmp_path / "soft.npz"), iters=40, lr=0.1,
+            soft=True, momentum=0.9,
+        )
+    hist = _losses(log)
     assert hist[-1] < hist[0], (hist[0], hist[-1])
     assert isinstance(provider_for(out), CtxTransformerProvider)
     with pytest.raises(ValueError):

@@ -9,7 +9,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from x5_ner_spark import obs
 from x5_ner_spark.core import emission as E
+
+
+def _losses(log):
+    """Per-iteration losses from the recorded ``train_loss`` events."""
+    return [f["loss"] for name, f in log if name == "train_loss"]
 
 
 def test_gradients_match_numerical():
@@ -44,10 +50,9 @@ def trained(tmp_path_factory, request):
     docs = extract_run(pages_df(spark, 300, sentences=2)).select("text")
     labels = teacher_labels(docs).persist()
     path = str(tmp_path_factory.mktemp("emtrain") / "trained.npz")
-    hist: list = []
-    fit_npz_emission(
-        labels, path, iters=25, lr=0.8, seed=7, loss_history=hist
-    )
+    with obs.recording() as log:
+        fit_npz_emission(labels, path, iters=25, lr=0.8, seed=7)
+    hist = _losses(log)
     labels.unpersist()
     return path, hist, spark
 
@@ -138,8 +143,9 @@ def test_fit_crf_descends_and_decodes_like_teacher(spark, tmp_path):
     docs = extract_run(pages_df(spark, 200, sentences=2)).select("text")
     seqs = teacher_sequences(docs).persist()
     path = str(tmp_path / "crf_joint.npz")
-    hist: list = []
-    fit_crf_npz(seqs, path, iters=20, lr=0.8, seed=7, loss_history=hist)
+    with obs.recording() as log:
+        fit_crf_npz(seqs, path, iters=20, lr=0.8, seed=7)
+    hist = _losses(log)
 
     assert len(hist) == 20 and hist[-1] < 0.6 * hist[0], (hist[0], hist[-1])
 

@@ -10,6 +10,7 @@ import os
 import numpy as np
 import pytest
 
+from x5_ner_spark import obs
 from x5_ner_spark.operators import quality_train as qt
 
 
@@ -54,10 +55,9 @@ def test_hash_bucket_matches_column_helper(spark):
 def trained(spark, sf_dir):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     labeled = qt.gopher_labels(docs)
-    history: list[float] = []
-    w, b = qt.fit_quality_classifier(
-        labeled, dim=2048, iters=60, lr=2.0, l2=1e-4, loss_history=history
-    )
+    with obs.recording() as log:
+        w, b = qt.fit_quality_classifier(labeled, dim=2048, iters=60, lr=2.0, l2=1e-4)
+    history = [f["loss"] for name, f in log if name == "train_loss"]
     return docs, labeled, w, b, history
 
 

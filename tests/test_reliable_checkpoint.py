@@ -12,6 +12,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from x5_ner_spark import obs
+
+
+def _info(log, name):
+    """The fields of the ``name`` events that carry a value."""
+    return {k: v for n, f in log if n == name for k, v in f.items() if v is not None}
+
 
 def _cc(edges, **kw):
     """connected_components pinned to the ITERATIVE path: these tests are
@@ -50,10 +57,9 @@ def test_cc_crash_resume_identical(spark, tmp_path):
     # checkpoint the input is never scanned and the answer is unchanged;
     # a fallback recompute would return nothing
     empty = spark.createDataFrame([], "src long, dst long")
-    info: dict = {}
-    resumed = _cc(
-        empty, checkpoint_dir=d, checkpoint_every=100, resume_info=info
-    )
+    with obs.recording() as log:
+        resumed = _cc(empty, checkpoint_dir=d, checkpoint_every=100)
+    info = _info(log, "cc")
     assert info.get("resumed_from_round") == 2
     assert sorted(tuple(r) for r in resumed.collect()) == expected
 
@@ -73,14 +79,14 @@ def test_pagerank_crash_resume_identical(spark, tmp_path):
     pagerank(edges, iters=3, checkpoint_dir=d, checkpoint_every=2).count()
     assert complete_stages(spark, d, "pr_round_", 8) == ["pr_round_0002"]
 
-    info: dict = {}
-    resumed = {
-        r["node"]: r["pagerank"]
-        for r in pagerank(
-            edges, iters=5, checkpoint_dir=d, checkpoint_every=100,
-            resume_info=info,
-        ).collect()
-    }
+    with obs.recording() as log:
+        resumed = {
+            r["node"]: r["pagerank"]
+            for r in pagerank(
+                edges, iters=5, checkpoint_dir=d, checkpoint_every=100,
+            ).collect()
+        }
+    info = _info(log, "pagerank")
     assert info.get("resumed_from_round") == 2
     assert resumed == full
 
@@ -93,11 +99,12 @@ def test_pagerank_resume_ignores_rounds_beyond_iters(spark, tmp_path):
     edges = _chain_edges(spark, 12)
     d = str(tmp_path / "pr_long")
     pagerank(edges, iters=5, checkpoint_dir=d, checkpoint_every=4).count()  # writes round 4
-    info: dict = {}
-    short = {
-        r["node"]: r["pagerank"]
-        for r in pagerank(edges, iters=2, checkpoint_dir=d, resume_info=info).collect()
-    }
+    with obs.recording() as log:
+        short = {
+            r["node"]: r["pagerank"]
+            for r in pagerank(edges, iters=2, checkpoint_dir=d).collect()
+        }
+    info = _info(log, "pagerank")
     fresh = {r["node"]: r["pagerank"] for r in pagerank(edges, iters=2).collect()}
     assert "resumed_from_round" not in info
     assert short == fresh
@@ -116,9 +123,10 @@ def test_cc_checkpoint_completes_with_empty_buckets(spark, tmp_path):
     d = str(tmp_path / "cc_star")
     _cc(edges, max_iter=2, checkpoint_dir=d, checkpoint_every=1).count()
     assert complete_stages(spark, d, "cc_round_", 8), "empty buckets blocked the manifest"
-    info: dict = {}
     empty = spark.createDataFrame([], "src long, dst long")
-    resumed = _cc(empty, checkpoint_dir=d, resume_info=info)
+    with obs.recording() as log:
+        resumed = _cc(empty, checkpoint_dir=d)
+    info = _info(log, "cc")
     assert "resumed_from_round" in info
     assert {r["node"] for r in resumed.collect()} == set(range(20))
 
@@ -130,10 +138,9 @@ def test_cc_resume_ignores_rounds_beyond_max_iter(spark, tmp_path):
     edges = _chain_edges(spark, 24)
     d = str(tmp_path / "cc_deep")
     _cc(edges, max_iter=6, checkpoint_dir=d, checkpoint_every=2).count()
-    info: dict = {}
-    shallow = _cc(
-        edges, max_iter=1, checkpoint_dir=d, resume_info=info
-    )
+    with obs.recording() as log:
+        shallow = _cc(edges, max_iter=1, checkpoint_dir=d)
+    info = _info(log, "cc")
     fresh = _cc(edges, max_iter=1)
     assert "resumed_from_round" not in info
     assert sorted(map(tuple, shallow.collect())) == sorted(map(tuple, fresh.collect()))

@@ -6,6 +6,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from x5_ner_spark import obs
 from x5_ner_spark.operators.word_agg import aggregate_subtokens
 from x5_ner_spark.pipeline import skew
 
@@ -281,10 +282,11 @@ def test_cc_hub_skew_rounds_and_salted_path(spark, monkeypatch):
     total = edges.count()
     assert hub_deg / total >= 0.08, (hub_deg, total)  # the skew is real
 
-    info: dict = {}
     # no local finish: this test is ABOUT the iterative rounds
     monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", 0)
-    comp = canonicalize.connected_components(edges, resume_info=info)
+    with obs.recording() as log:
+        comp = canonicalize.connected_components(edges)
+    [(_, info)] = log  # the call's one cc event
     rows = comp.collect()
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)  # ring+hub: one component
@@ -330,9 +332,10 @@ def test_iterative_loops_release_superseded_blocks(spark, monkeypatch):
     base = n_cached()
     n = 2048
     edges = hub_edges_df(spark, n, hub_share=0.1)
-    info: dict = {}
     monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", 0)
-    comp = canonicalize.connected_components(edges, resume_info=info)
+    with obs.recording() as log:
+        comp = canonicalize.connected_components(edges)
+    [(_, info)] = log  # the call's one cc event
     assert comp.count() == n
     assert info["rounds"] >= 3  # the loop really iterated
     after_cc = n_cached()

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from x5_ner_spark import obs
 from x5_ner_spark.core.html_text import extract_text
 from x5_ner_spark.core.mention_pipeline import extract_triples, final_mention_spans
 from x5_ner_spark.pipeline import canonicalize, extract, graph, mentions, triples
@@ -131,11 +132,16 @@ def test_connected_components_vs_union_find(spark, monkeypatch, edges, local_fin
             assert got[n] == want[n], (n, got.get(n), want[n])
 
 
+def _info(log, name):
+    """The fields of the ``name`` events that carry a value."""
+    return {k: v for n, f in log if n == name for k, v in f.items() if v is not None}
+
+
 def test_cc_local_finish_gate_boundary_and_markers(spark, monkeypatch):
     """The hybrid finisher fires exactly at frontier ≤ LOCAL_FINISH_EDGES —
     immediately when the input already fits (rounds == 0), mid-iteration
-    once a star round contracts under the bar — and stamps resume_info so
-    runs are auditable. All paths must agree exactly."""
+    once a star round contracts under the bar — and records a ``cc`` event
+    so runs are auditable. All paths must agree exactly."""
     from x5_ner_spark.pipeline import canonicalize
 
     edges = spark.createDataFrame(
@@ -144,13 +150,11 @@ def test_cc_local_finish_gate_boundary_and_markers(spark, monkeypatch):
 
     def run(threshold):
         monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", threshold)
-        info: dict = {}
-        rows = sorted(
-            map(tuple, canonicalize.connected_components(
-                edges, resume_info=info
-            ).collect())
-        )
-        return rows, info
+        with obs.recording() as log:
+            rows = sorted(
+                map(tuple, canonicalize.connected_components(edges).collect())
+            )
+        return rows, _info(log, "cc")
 
     exact, it_info = run(0)
     assert "local_finish_edges" not in it_info and it_info["rounds"] >= 3
@@ -166,10 +170,9 @@ def test_cc_local_finish_gate_boundary_and_markers(spark, monkeypatch):
         "src long, dst long",
     )
     monkeypatch.setattr(canonicalize, "LOCAL_FINISH_EDGES", 100)
-    info: dict = {}
-    mid = sorted(map(tuple, canonicalize.connected_components(
-        clique, resume_info=info
-    ).collect()))
+    with obs.recording() as log:
+        mid = sorted(map(tuple, canonicalize.connected_components(clique).collect()))
+    info = _info(log, "cc")
     assert info["rounds"] >= 1 and info["local_finish_edges"] <= 100
     assert mid == [(n, 0) for n in range(20)]
 

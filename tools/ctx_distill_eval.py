@@ -52,6 +52,7 @@ def main() -> None:
 
     import bench  # repo-root module: fixture vocab + checkpoint cache
 
+    from x5_ner_spark import obs
     from x5_ner_spark.operators.ctx_train import (
         distill_eval_triples,
         split_pages,
@@ -88,14 +89,14 @@ def main() -> None:
     out_path = os.path.join(
         os.path.dirname(base_ckpt), f"x5_distilled_ctx_{args.pages}.npz"
     )
-    hist: list = []
     t0 = time.time()
-    res = distill_eval_triples(
-        pages, base_ckpt, out_path, iters=args.iters, lr=args.lr,
-        loss_history=hist, train_frac=args.train_frac,
-        objective=args.objective,
-    )
+    with obs.recording() as log:
+        res = distill_eval_triples(
+            pages, base_ckpt, out_path, iters=args.iters, lr=args.lr,
+            train_frac=args.train_frac, objective=args.objective,
+        )
     wall = time.time() - t0
+    hist = [f["loss"] for name, f in log if name == "train_loss"]
 
     # random-head baseline on the SAME eval split (shared helpers — a
     # drifted local reimplementation would score a different eval set)

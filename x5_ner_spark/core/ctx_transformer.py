@@ -32,8 +32,6 @@ Pure python + numpy (core/ rule: no Spark imports).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from .subword import BOS, EOS, UNK, SubwordTokenizer
@@ -104,9 +102,9 @@ def _layer_norm(x: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
 class CtxTransformerProvider:
     """Checkpoint-on-disk contextual provider (``seq_level = True``) —
     same interface as SubwordEmissionProvider, genuinely contextual forward.
-    Instantiate via core.emission.provider_for (per-worker singleton +
-    ``.loads`` audit log, the reference's lazy checkpoint singleton,
-    service/app.py:20-34)."""
+    Instantiate via core.emission.provider_for (the per-worker singleton,
+    which writes the ``.loads`` audit line — the reference's lazy
+    checkpoint singleton, service/app.py:20-34)."""
 
     seq_level = True
 
@@ -145,11 +143,6 @@ class CtxTransformerProvider:
         # contextual model's outputs can be reused under. No word/piece-level
         # cache exists on this provider (that is the r6 caveat, closed).
         self._text_cache: dict[str, tuple] = {}
-        try:  # auditable load event (same contract as the other providers)
-            with open(path + ".loads", "a") as f:
-                f.write(f"{os.getpid()}\n")
-        except OSError:
-            pass
 
     # --------------------------------------------------------------- forward
     def _forward_piece_feats(

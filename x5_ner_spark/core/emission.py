@@ -84,11 +84,6 @@ class NpzMlpProvider:
         self.path = path
         self.prob_cache: dict[tuple[str, bool], tuple[float, ...]] = {}
         self.prob_cache_max = 1 << 16
-        try:  # auditable load event (tiny, best-effort): one line per load
-            with open(path + ".loads", "a") as f:
-                f.write(f"{os.getpid()}\n")
-        except OSError:
-            pass
 
     def batch_logits(self, tokens_conts: list[tuple[str, bool]]) -> np.ndarray:
         """Forward pass, bit-identical for a row regardless of batch shape
@@ -217,7 +212,8 @@ def provider_for(path: str):
     once per (path, mtime) per Python worker — every partition and Arrow
     batch that worker processes reuses the loaded weights (the reference's
     lazy model singleton, service/app.py:20-34). An updated file (new mtime)
-    triggers exactly one reload.
+    triggers exactly one reload. Each load appends the worker's pid to
+    ``<path>.loads`` (read back by :func:`load_count`).
 
     Dispatch by checkpoint contents: an npz carrying attention weights
     (``wq``) is a CONTEXTUAL transformer checkpoint (core/ctx_transformer.py
@@ -242,6 +238,11 @@ def provider_for(path: str):
         else:
             prov = NpzMlpProvider(key)
         _PROVIDERS[key] = (mtime, prov)
+        try:  # auditable load event (tiny, best-effort): one line per load
+            with open(key + ".loads", "a") as f:
+                f.write(f"{os.getpid()}\n")
+        except OSError:
+            pass
     return _PROVIDERS[key][1]
 
 

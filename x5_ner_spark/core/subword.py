@@ -26,8 +26,6 @@ the Arrow UDFs and in the pytest oracle.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from .numeric import tokenize_with_offsets
@@ -151,9 +149,9 @@ class SubwordEmissionProvider:
     """Checkpoint-on-disk provider with SEQUENCE-level semantics
     (``seq_level = True``): final_mention_spans_batch routes through
     :meth:`word_probs_for_texts` instead of the word-keyed cache path.
-    Instantiate via core.emission.provider_for (per-worker singleton +
-    ``.loads`` audit log — the reference's lazy checkpoint singleton,
-    service/app.py:20-34)."""
+    Instantiate via core.emission.provider_for (the per-worker singleton,
+    which writes the ``.loads`` audit line — the reference's lazy
+    checkpoint singleton, service/app.py:20-34)."""
 
     seq_level = True
 
@@ -190,11 +188,6 @@ class SubwordEmissionProvider:
         # to 107 unique piece sequences — the stack+mean+tuple conversion
         # was ~90% of provider CPU)
         self._word_mean: dict[tuple, tuple[float, ...]] = {}
-        try:  # auditable load event (same contract as NpzMlpProvider)
-            with open(path + ".loads", "a") as f:
-                f.write(f"{os.getpid()}\n")
-        except OSError:
-            pass
 
     def piece_probabilities(self, piece_id: int, cont: bool) -> np.ndarray:
         """Softmax row for one piece — per-row gather + reduction (no

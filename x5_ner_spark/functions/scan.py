@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .. import obs
+
 SCAN_TARGET_BYTES = 96 << 10
 """Stat-bytes per repartition target partition (96 KB parquet ≈ one
 task-worth of decompressed map work)."""
@@ -48,19 +50,20 @@ def scan_parallel(df: DataFrame) -> DataFrame:
     semantics are unaffected: every caller is an aggregate / filter /
     per-row projection whose result is partitioning-independent, and
     round-robin repartition is deterministic under Spark's
-    sort-before-repartition default."""
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    sort-before-repartition default. Records a ``scan_valve`` event whose
+    ``partitions`` is None when the frame is returned unchanged."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
     try:
         raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         # py4j converts scala.math.BigInt to int for values in long range;
         # very large estimates may surface as a JavaObject — stringify then
         size = raw if isinstance(raw, int) else int(str(raw))
     except Exception:
-        return df
-    if size >= cores * _NATURAL_SPLIT_BYTES:
-        return df  # big input: natural splits cover the cores
+        size = cores * _NATURAL_SPLIT_BYTES  # unknown: leave the frame as it is
     want = min(2 * cores, -(-size // SCAN_TARGET_BYTES))
-    if want <= 2:
-        return df  # too small for the exchange to pay for itself
-    return df.repartition(want)
+    # a big input's natural splits cover the cores; an exchange into <= 2
+    # partitions does not pay for itself
+    if size >= cores * _NATURAL_SPLIT_BYTES or want <= 2:
+        want = None
+    obs.event("scan_valve", partitions=want)
+    return df if want is None else df.repartition(want)

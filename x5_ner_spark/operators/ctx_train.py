@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..core.spans import BIO_TAGS
 from .gradient import gradient_sums, training_set
 
@@ -157,7 +158,6 @@ def fit_ctx_head(
     out_path: str,
     iters: int = 40,
     lr: float = 0.5,
-    loss_history: list | None = None,
     class_weight: str | None = None,
     soft: bool = False,
     momentum: float = 0.0,
@@ -232,7 +232,7 @@ def fit_ctx_head(
                 cw[c] = n_rows / (N_CLASSES * cnt)
 
         vel = np.zeros(d * N_CLASSES + N_CLASSES)
-        for _ in range(iters):
+        for it in range(iters):
             tot_n, tot_loss, g = gradient_sums(
                 data, partial(grad_part, w.copy(), b.copy(), cw), len(vel)
             )
@@ -240,8 +240,7 @@ def fit_ctx_head(
             vel = momentum * vel + g
             w -= lr * vel[: d * N_CLASSES].reshape(d, N_CLASSES)
             b -= lr * vel[d * N_CLASSES :]
-            if loss_history is not None:
-                loss_history.append(tot_loss / tot_n)
+            obs.event("train_loss", trainer="ctx", iter=it, loss=tot_loss / tot_n)
 
     arrays["head_w"] = w.astype("float32")
     arrays["head_b"] = b.astype("float32")
@@ -270,7 +269,6 @@ def distill_eval_triples(
     out_path: str,
     iters: int = 60,
     lr: float = 1.0,
-    loss_history: list | None = None,
     train_frac: float = 0.5,
     objective: str = "hard",
     momentum: float = 0.9,
@@ -306,7 +304,6 @@ def distill_eval_triples(
     )
     trained = fit_ctx_head(
         feats, ckpt_path, out_path, iters=iters, lr=lr,
-        loss_history=loss_history,
         class_weight="balanced" if objective == "balanced" else None,
         soft=objective == "soft",
         momentum=momentum,

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..functions.columns import (
     bind_once, cosine_similarity_col, empty_frame, portable_hash32,
     simple_tokens_col,
@@ -100,22 +101,11 @@ def _sh_expr(k: int):
     return F.transform(idx, gram)
 
 
-def shingle_sets(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Per-doc DISTINCT k-token shingle array ``(doc_id, sh: array<string>)``
-    — map-only (``array_distinct`` over a native transform; no explode, no
-    shuffle). Docs with fewer than k tokens produce no row, matching the
-    exploded form. The array is bounded by document length, so rows stay
-    shuffle-safe when a downstream join does move them."""
-    return _with_tokens(docs, k).select(
-        "doc_id", F.array_distinct(_sh_expr(k)).alias("sh")
-    )
-
-
 def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     """Exploded ``(doc_id, shingle)`` rows, distinct per doc — map-only.
-    The generator input stays an inline expression (NOT shingle_sets'
-    aliased column) so InferFiltersFromGenerate cannot clone the shingling
-    pipeline into a pushed-down Filter (see module docstring)."""
+    The generator input stays an inline expression (not an aliased column
+    from a projection below) so InferFiltersFromGenerate cannot clone the
+    shingling pipeline into a pushed-down Filter (see module docstring)."""
     return _with_tokens(docs, k).select(
         "doc_id", F.explode(F.array_distinct(_sh_expr(k))).alias("shingle")
     )
@@ -303,9 +293,13 @@ def jaccard_pairs(docs: DataFrame, k: int = 3, threshold: float = 0.5) -> DataFr
     and the self-join reads ONE repartition exchange from both sides —
     total: one corpus exchange plus the pair groupBy (the old shape had 11
     exchanges: a corpus-wide distinct, a sizes aggregate, and two size
-    lookup joins, all gone). Both paths emit identical rows."""
-    if docs.count() <= LOCAL_JACCARD_DOCS:
-        # the count gate is metadata-only on parquet sources
+    lookup joins, all gone). Both paths emit identical rows; the call
+    records a ``jaccard_path`` event (``kernel`` or ``join``, and ``docs``).
+    """
+    n_docs = docs.count()  # metadata-only on parquet sources
+    local = n_docs <= LOCAL_JACCARD_DOCS
+    obs.event("jaccard_path", path="kernel" if local else "join", docs=n_docs)
+    if local:
         return _jaccard_pairs_bincount(docs, k, threshold)
     # ONE exchange, reused by both join sides
     src = _sized_shingles(docs, k).repartition("shingle")
@@ -459,7 +453,7 @@ def jaccard_rescore(
     docs: DataFrame, pairs: DataFrame, k: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """EXACT shingle-Jaccard over candidate pairs only: per-doc shingle sets
-    (map-only, :func:`shingle_sets`) ride two doc_id-keyed joins onto the
+    (map-only, :func:`_hashed_shingle_sets`) ride two doc_id-keyed joins onto the
     (small) pair list, intersection via native array_intersect. The sets sit
     on one doc_id repartition that BOTH joins reuse (alias-aware output
     partitioning carries it through the id_a/id_b renames), so the corpus is

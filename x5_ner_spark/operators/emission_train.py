@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .. import obs
 from ..core import emission as E
 from .gradient import gradient_sums, training_set
 
@@ -122,7 +123,6 @@ def fit_crf_npz(
     iters: int = 30,
     lr: float = 0.5,
     seed: int = 7,
-    loss_history: list | None = None,
 ) -> str:
     """JOINT gradient training of the emission MLP and the linear-chain CRF
     (start/trans/end) by exact NLL — the full analog of the reference's
@@ -164,7 +164,7 @@ def fit_crf_npz(
         return None if acc is None else (tot_n, tot_loss, acc)
 
     with training_set(seqs.select("tokens", "conts", "tags")) as (data, _):
-        for _ in range(iters):
+        for it in range(iters):
             snapshot = {k: (v.copy() if hasattr(v, "copy") else v) for k, v in params.items()}
             n_tokens, loss_sum, g = gradient_sums(
                 data, partial(grad_part, snapshot),
@@ -173,8 +173,7 @@ def fit_crf_npz(
             # per-TOKEN normalization: sequence lengths vary, so per-sequence
             # averaging would scale the effective step with document length
             g /= max(n_tokens, 1)
-            if loss_history is not None:
-                loss_history.append(loss_sum / max(n_tokens, 1))
+            obs.event("train_loss", trainer="crf", iter=it, loss=loss_sum / max(n_tokens, 1))
             _descend(params, g, _CRF_KEYS, lr)
 
     np.savez(
@@ -204,7 +203,6 @@ def fit_npz_emission(
     iters: int = 40,
     lr: float = 0.5,
     seed: int = 7,
-    loss_history: list | None = None,
 ) -> str:
     """train(token, cont, label_idx) → gradient-descended weights saved at
     ``out_path`` (NpzMlpProvider layout). Deterministic given (data, seed):
@@ -229,14 +227,13 @@ def fit_npz_emission(
 
     # materialize once: every iteration re-reads the same rows
     with training_set(train.select("token", "cont", "label_idx")) as (data, _):
-        for _ in range(iters):
+        for it in range(iters):
             snapshot = {k: (v.copy() if hasattr(v, "copy") else v) for k, v in params.items()}
             n_total, loss_sum, g = gradient_sums(
                 data, partial(grad_part, snapshot),
                 sum(params[k].size for k in _MLP_KEYS),
             )
             g /= n_total
-            if loss_history is not None:
-                loss_history.append(loss_sum / n_total)
+            obs.event("train_loss", trainer="emission", iter=it, loss=loss_sum / n_total)
             _descend(params, g, _MLP_KEYS, lr)
     return E.save_params_npz(params, out_path)

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..pipeline.canonicalize import connected_components
 
 
@@ -33,7 +34,7 @@ def user_components(events: DataFrame) -> DataFrame:
 def pagerank(
     edges: DataFrame, iters: int = 5, damping: float = 0.85,
     checkpoint_dir: str | None = None, checkpoint_every: int = 2,
-    checkpoint_buckets: int = 8, resume_info: dict | None = None,
+    checkpoint_buckets: int = 8,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an UNDIRECTED edge list (src, dst) —
     both directions are materialized, so there are no dangling nodes. Each
@@ -53,6 +54,7 @@ def pagerank(
     round ≤ ``iters`` (parquet doubles round-trip exactly, so the resumed
     trajectory is bit-identical — crash-resume tested). The structural
     tables (und/deg/nodes) are recomputed deterministically from the input.
+    A resumed call records a ``pagerank`` event (``resumed_from_round``).
     """
     spark = edges.sparkSession
     und = (
@@ -82,8 +84,7 @@ def pagerank(
                 .select("node", "deg", "pr")
                 .localCheckpoint()
             )
-            if resume_info is not None:
-                resume_info["resumed_from_round"] = start_round
+            obs.event("pagerank", resumed_from_round=start_round)
     from ..pipeline.canonicalize import _ckpt_rdd
 
     prev_handle = _ckpt_rdd(ranks) if start_round > 0 else None

@@ -46,6 +46,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..functions.columns import portable_hash32, simple_tokens_col
 from .gradient import gradient_sums, training_set
 
@@ -246,14 +247,12 @@ def fit_quality_classifier(
     iters: int = 80,
     lr: float = 2.0,
     l2: float = 1e-4,
-    loss_history: list | None = None,
     ngrams: int = 1,
 ) -> tuple[np.ndarray, float]:
     """train(text, label) → (w, b): featurize once (``featurize_table``),
     then ``fit_from_features``."""
     return fit_from_features(
         featurize_table(train, dim, ngrams), dim, iters=iters, lr=lr, l2=l2,
-        loss_history=loss_history,
     )
 
 
@@ -263,7 +262,6 @@ def fit_from_features(
     iters: int = 80,
     lr: float = 2.0,
     l2: float = 1e-4,
-    loss_history: list | None = None,
 ) -> tuple[np.ndarray, float]:
     """(buckets, label) → (w, b) by full-batch gradient descent over the
     persisted feature table: each iteration is one cheap Spark job
@@ -300,13 +298,13 @@ def fit_from_features(
     w = np.zeros(dim, dtype=np.float64)
     b = 0.0
     with training_set(features.select("buckets", "label")) as (feats, _):
-        for _ in range(iters):
+        for it in range(iters):
             n_total, loss_sum, g = gradient_sums(
                 feats, partial(grad_part, w.copy(), b), dim + 1
             )
             g /= float(n_total)
-            if loss_history is not None:
-                loss_history.append(loss_sum / n_total + 0.5 * l2 * float(w @ w))
+            obs.event("train_loss", trainer="quality", iter=it,
+                      loss=loss_sum / n_total + 0.5 * l2 * float(w @ w))
             w = w - lr * (g[:dim] + l2 * w)
             b = b - lr * g[dim]
     return w, b

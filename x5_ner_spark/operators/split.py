@@ -11,10 +11,11 @@ uniformly random-like, identical on any executor count.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.columns import portable_hash32
+from ..functions.columns import empty_frame, portable_hash32
 
 ENTITY_TYPES = ("TYPE", "BRAND", "VOLUME", "PERCENT")
 
@@ -60,8 +61,10 @@ def stratified_split(
     labeled = df.withColumn("combo", combo_label_col(spans_col))
     sizes = {r["combo"]: r["n"] for r in labeled.groupBy("combo").agg(F.count(F.lit(1)).alias("n")).collect()}
     quotas = largest_remainder_quotas(sizes, val_size)
-    quota_df = labeled.sparkSession.createDataFrame(
-        [(g, q) for g, q in quotas.items()], "combo string, quota long"
+    spark, schema = labeled.sparkSession, "combo string, quota long"
+    quota_df = (  # pandas-built: a LocalTableScan, not a Python RDD
+        spark.createDataFrame(pd.DataFrame(quotas.items(), columns=["combo", "quota"]), schema)
+        if quotas else empty_frame(spark, schema)
     )
     w = Window.partitionBy("combo").orderBy(
         portable_hash32(F.concat(F.col(key_col).cast("string"), F.lit(f"#seed{seed}"))),

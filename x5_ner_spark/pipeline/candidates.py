@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import lex_norm_col
 
+MAX_EDIT_DISTANCE = 2
+"""Levenshtein bound of a fuzzy candidate (J3)."""
+
 
 def mention_table(triples: DataFrame) -> DataFrame:
     """Distinct mention surfaces with their predicate class."""
@@ -30,24 +33,18 @@ def mention_table(triples: DataFrame) -> DataFrame:
     )
 
 
-def run(
-    mentions: DataFrame,
-    alias_dict: DataFrame,
-    fuzzy: bool = True,
-    max_edit_distance: int = 2,
-) -> DataFrame:
+def run(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """mentions(mention, mention_norm, pred) × alias_dict(alias_norm,
-    entity_id, entity_kind, prior) → candidate pairs with match_kind."""
+    entity_id, entity_kind, prior) → candidate pairs with match_kind: exact
+    surface matches, plus fuzzy ones within :data:`MAX_EDIT_DISTANCE` for
+    the mentions without an exact match."""
     dic = F.broadcast(alias_dict)
     exact = mentions.join(dic, mentions.mention_norm == dic.alias_norm, "inner").select(
         "mention", "mention_norm", "pred", "entity_id", "entity_kind", "prior",
         F.lit("exact").alias("match_kind"), F.lit(0).alias("distance"),
     )
-    if not fuzzy:
-        return exact
-
     missed = mentions.join(dic, mentions.mention_norm == dic.alias_norm, "left_anti")
-    d = max_edit_distance
+    d = MAX_EDIT_DISTANCE
     fuzzy_pairs = (
         missed.join(
             dic,
@@ -93,7 +90,7 @@ def _minhash_cols(shingle_col, n_hashes: int = 6):
 def lsh_candidates(
     mentions: DataFrame,
     alias_dict: DataFrame,
-    max_edit_distance: int = 2,
+    max_edit_distance: int = MAX_EDIT_DISTANCE,
     n_hashes: int = 6,
     band_size: int = 2,
 ) -> DataFrame:

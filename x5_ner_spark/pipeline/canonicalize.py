@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..functions.columns import empty_frame
 
 LOCAL_FINISH_EDGES = 2_000_000
@@ -90,7 +91,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _finish_local(e: DataFrame, rounds: int, resume_info: dict | None) -> DataFrame:
+def _finish_local(e: DataFrame, rounds: int, resumed: int | None) -> DataFrame:
     """Driver-side union-find over a frontier known to be ≤
     :data:`LOCAL_FINISH_EDGES` rows (the caller checked the count it already
     had from the convergence signature — the gate costs zero extra jobs).
@@ -107,9 +108,7 @@ def _finish_local(e: DataFrame, rounds: int, resume_info: dict | None) -> DataFr
     blocks = _ckpt_rdd(e)
     if blocks is not None:  # the returned frame no longer depends on e
         blocks.unpersist(False)
-    if resume_info is not None:
-        resume_info["rounds"] = rounds
-        resume_info["local_finish_edges"] = int(len(pdf))
+    obs.event("cc", rounds=rounds, local_finish_edges=len(pdf), resumed_from_round=resumed)
     if not len(pdf):
         return empty_frame(spark, "node long, component long")
     src = pdf["src"].to_numpy(dtype=np.int64)
@@ -151,7 +150,7 @@ def _finish_local(e: DataFrame, rounds: int, resume_info: dict | None) -> DataFr
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20,
     checkpoint_dir: str | None = None, checkpoint_every: int = 5,
-    checkpoint_buckets: int = 8, resume_info: dict | None = None,
+    checkpoint_buckets: int = 8,
 ) -> DataFrame:
     """edges(src: long, dst: long) → (node: long, component: long) where
     component is the minimum node id of the component.
@@ -168,19 +167,20 @@ def connected_components(
     (pipeline/graph.write_stage, write-then-commit), and a rerun resumes
     from the last COMPLETE round without rescanning the input: a crash
     mid-write leaves an incomplete manifest, so that round is ignored and
-    its buckets are overwritten when recomputed. ``resume_info`` (a dict)
-    receives ``resumed_from_round`` when a checkpoint was used
-    (crash-resume tested: results identical to the uninterrupted run).
+    its buckets are overwritten when recomputed (crash-resume tested:
+    results identical to the uninterrupted run).
 
     Once the frontier — initial or after any round — fits under
     :data:`LOCAL_FINISH_EDGES` edges, finish with a driver-side union-find
     instead of more rounds (:func:`_finish_local`; exact, same min-id
-    labeling). ``resume_info`` then also carries ``local_finish_edges``
-    (the collected count).
+    labeling).
+
+    Each call records one ``cc`` event: star ``rounds`` run, and
+    ``local_finish_edges`` / ``resumed_from_round`` (None when not taken).
     """
     spark = edges.sparkSession
     e = None
-    start_round = 0
+    start_round = 0  # committed rounds are >= 1, so 0 means "not resumed"
     if checkpoint_dir is not None:
         from .graph import complete_stages, read_stage
 
@@ -199,8 +199,6 @@ def connected_components(
                 .select("src", "dst")
                 .localCheckpoint(eager=False)
             )
-            if resume_info is not None:
-                resume_info["resumed_from_round"] = start_round
     if e is None:
         # eager=False: the _sig action below computes the frontier AND its
         # convergence signature in ONE job (an eager checkpoint + separate
@@ -226,7 +224,7 @@ def connected_components(
         # hybrid finisher (see LOCAL_FINISH_EDGES): the frontier count came
         # free with the signature job, so the gate adds no work — collect
         # and union-find instead of O(log n) more scheduler round-trips
-        return _finish_local(e, rounds, resume_info)
+        return _finish_local(e, rounds, start_round or None)
     for i in range(start_round, max_iter):
         e2 = _small_star(_large_star(e)).distinct().localCheckpoint(eager=False)
         sig2 = _sig(e2)  # one job: computes the round, stores its blocks,
@@ -242,7 +240,7 @@ def connected_components(
             # contracted into collect range mid-iteration (converged
             # frontiers fall through to the declarative members∪roots path,
             # which costs no further full passes)
-            return _finish_local(e, rounds, resume_info)
+            return _finish_local(e, rounds, start_round or None)
         if sig2 == sig:
             break
         sig = sig2
@@ -253,8 +251,8 @@ def connected_components(
                 e, checkpoint_dir, f"cc_round_{i + 1:04d}", key="src",
                 n_buckets=checkpoint_buckets,
             )
-    if resume_info is not None:
-        resume_info["rounds"] = rounds
+    obs.event("cc", rounds=rounds, local_finish_edges=None,
+              resumed_from_round=start_round or None)
 
     members = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = (

@@ -7,9 +7,9 @@ For the throughput-dominated production path we fuse all per-document work
 ``mapInPandas``: one Arrow transfer in, one out, same pure core functions —
 so output is row-identical to the staged path (tests/test_fused.py).
 
-The staged path remains the default for modularity and per-stage
-checkpointing; the fused path is what bench/scaling and high-volume
-ingestion use.
+The fused path is the one ``run_pipeline`` (pipeline/runner.py), bench and
+high-volume ingestion use; the staged operators stay as the per-stage
+building blocks and the row-identity reference.
 """
 
 from __future__ import annotations

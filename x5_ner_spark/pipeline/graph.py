@@ -81,13 +81,20 @@ def manifest_path(root: str) -> str:
     return os.path.join(root, "_manifests")
 
 
-def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
+def _manifests(spark: SparkSession, root: str) -> DataFrame | None:
+    """Every manifest row under ``root``, or None before the first commit
+    (checked on the Hadoop FileSystem: a failed parquet read logs a stack
+    trace even when the caller catches the error)."""
     p = manifest_path(root)
-    try:
-        m = spark.read.schema(MANIFEST_SCHEMA).parquet(p)
-    except Exception:  # no manifest yet
-        m = empty_frame(spark, MANIFEST_SCHEMA)
-    return m.filter(F.col("stage") == stage)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return None
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
+
+
+def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:
+    m = _manifests(spark, root)
+    return (empty_frame(spark, MANIFEST_SCHEMA) if m is None else m).filter(F.col("stage") == stage)
 
 
 def complete_stages(
@@ -97,10 +104,8 @@ def complete_stages(
     i.e. rounds that committed completely (a crash mid-write leaves fewer
     manifest rows and the round is treated as absent). Used by the iterative
     operators' reliable-checkpoint resume (CC / PageRank)."""
-    p = manifest_path(root)
-    try:
-        m = spark.read.schema(MANIFEST_SCHEMA).parquet(p)
-    except Exception:
+    m = _manifests(spark, root)
+    if m is None:
         return []
     rows = (
         m.filter(F.col("stage").startswith(prefix))

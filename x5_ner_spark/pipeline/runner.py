@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import obs
 from ..functions.columns import lex_norm_col
 from . import candidates, canonicalize, extract, graph, linking
 from .fixtures import BRANDS
@@ -192,6 +193,39 @@ def run_pipeline(
     return out
 
 
+def _fit(args, docs: DataFrame) -> dict:
+    """``--fit-quality`` / ``--fit-emission`` / ``--fit-crf``: train on the
+    extracted ``docs``, save the checkpoint, and report it with the first
+    and last loss of its ``train_loss`` events."""
+    from ..operators import emission_train as ET
+    from ..operators import quality_train as QT
+
+    q = bool(args.fit_quality)
+    iters = args.train_iters if args.train_iters is not None else (60 if q else 30)
+    lr = args.train_lr if args.train_lr is not None else (2.0 if q else 0.8)
+    with obs.recording() as log:
+        if q:
+            labeler = (QT.perplexity_labels if args.quality_labels == "perplexity"
+                       else QT.gopher_labels)
+            qw, qb = QT.fit_quality_classifier(
+                labeler(docs.select(F.col("url").alias("doc_id"), "text")),
+                iters=iters, lr=lr, ngrams=args.quality_ngrams,
+            )
+            saved = QT.save_quality_npz(qw, qb, args.fit_quality, ngrams=args.quality_ngrams)
+            report = {"mode": "fit_quality", "out": saved, "ngrams": args.quality_ngrams}
+        elif args.fit_emission:
+            labels = ET.teacher_labels(docs.select("text"))
+            report = {"mode": "fit_emission", "out": ET.fit_npz_emission(
+                labels, args.fit_emission, iters=iters, lr=lr)}
+        else:
+            seqs = ET.teacher_sequences(docs.select("text"))
+            report = {"mode": "fit_crf", "out": ET.fit_crf_npz(
+                seqs, args.fit_crf, iters=iters, lr=lr)}
+    loss = [f["loss"] for name, f in log if name == "train_loss"]
+    return {**report, "iters": len(loss), "loss_first": round(loss[0], 4),
+            "loss_last": round(loss[-1], 4)}
+
+
 def main() -> None:
     from ..session import get_spark
     from ..sources.config import load_config
@@ -276,56 +310,8 @@ def main() -> None:
         lex = sorted(read_lexicon_set(spark, cfg["brand_lexicon_path"]))
     pages = spark.read.parquet(pages_path) if pages_path else pages_df(spark, n_pages)
 
-    if args.fit_quality:
-        from . import extract
-        from ..operators import quality_train as QT
-
-        lr = args.train_lr if args.train_lr is not None else 2.0
-        docs = extract.run(pages).select(F.col("url").alias("doc_id"), "text")
-        labeler = (
-            QT.perplexity_labels
-            if args.quality_labels == "perplexity"
-            else QT.gopher_labels
-        )
-        hist: list = []
-        iters = args.train_iters if args.train_iters is not None else 60
-        qw, qb = QT.fit_quality_classifier(
-            labeler(docs), iters=iters, lr=lr,
-            loss_history=hist, ngrams=args.quality_ngrams,
-        )
-        saved = QT.save_quality_npz(
-            qw, qb, args.fit_quality, ngrams=args.quality_ngrams
-        )
-        print({"mode": "fit_quality", "out": saved,
-               "ngrams": args.quality_ngrams,
-               "iters": len(hist), "loss_first": round(hist[0], 4),
-               "loss_last": round(hist[-1], 4)})
-        return
-
-    if args.fit_emission or args.fit_crf:
-        from . import extract
-        from ..operators import emission_train as ET
-
-        lr = args.train_lr if args.train_lr is not None else 0.8
-        iters = args.train_iters if args.train_iters is not None else 30
-        docs = extract.run(pages).select("text")
-        hist: list = []
-        if args.fit_emission:
-            saved = ET.fit_npz_emission(
-                ET.teacher_labels(docs), args.fit_emission,
-                iters=iters, lr=lr, loss_history=hist,
-            )
-            print({"mode": "fit_emission", "out": saved,
-                   "iters": len(hist), "loss_first": round(hist[0], 4),
-                   "loss_last": round(hist[-1], 4)})
-        else:
-            saved = ET.fit_crf_npz(
-                ET.teacher_sequences(docs), args.fit_crf,
-                iters=iters, lr=lr, loss_history=hist,
-            )
-            print({"mode": "fit_crf", "out": saved,
-                   "iters": len(hist), "loss_first": round(hist[0], 4),
-                   "loss_last": round(hist[-1], 4)})
+    if args.fit_quality or args.fit_emission or args.fit_crf:
+        print(_fit(args, extract.run(pages)))
         return
 
     out = run_pipeline(

@@ -230,7 +230,7 @@ def near_dup_edges_stream(
     candidate pairs against two doc_id-keyed lookups."""
     if unmatched not in ("drop", "null"):
         raise ValueError(f"unmatched must be 'drop' or 'null', got {unmatched!r}")
-    from ..operators.dedup import shingle_sets
+    from ..operators.dedup import _hashed_shingle_sets
 
     pairs = candidate_pairs_stream(
         docs, k, n_hashes, band_size, max_bucket, state_ttl_ms
@@ -241,7 +241,7 @@ def near_dup_edges_stream(
         .dropDuplicatesWithinWatermark(["id_a", "id_b"])
         .drop("ts")
     )
-    sh = shingle_sets(corpus, k)
+    sh = _hashed_shingle_sets(corpus, k)
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     scored = (
