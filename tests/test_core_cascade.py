@@ -70,6 +70,11 @@ def test_lexicon_hit_brands_with_modest_confidence():
     lex = frozenset({"барни"})
     out = run(text, [(0, 5)], [vec(B_BRAND=0.3, B_TYPE=0.2)], lex, sorted(lex))
     assert out == [(0, 5, "B-BRAND")]
+    # lexicon membership alone does NOT brand a token the model gives
+    # < 0.2 brand mass (infer.py:367): Cyrillic unknowns stay O under the
+    # stub model
+    weak = final_mention_spans("сок добрый", frozenset({"добрый"}), ["добрый"])
+    assert (4, 10, "O") in weak
 
 
 def test_fuzzy_lexicon_hit_via_levenshtein():

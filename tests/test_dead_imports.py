@@ -1,5 +1,6 @@
 """No module-level import in the package or its launchers goes unused,
-and only the deployment-settings modules read the environment.
+only the deployment-settings modules read the environment, and every
+package module is reached from an entry point, not from tests alone.
 
 An AST scan over ``x5_ner_spark/**/*.py``, ``__spark_entry__.py``, the
 ``bench*.py`` and ``kg_submit.py`` launchers and ``tools/*.py``: every name
@@ -16,6 +17,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "x5_ner_spark"
 LAUNCHERS = ["__spark_entry__.py", "bench.py", "bench_extra.py", "kg_submit.py"]
+# what the engine is run from: the driver contract, the launchers, the tools
+# and the benchmark
+ENTRY_POINTS = LAUNCHERS + ["tools/*.py", "perfbench/*.py"]
 # deployment settings (cores, driver memory, Spark conf overrides); every
 # other path choice in the package depends on its input alone
 ENV_READERS = {"session.py", "sources/config.py"}
@@ -107,3 +111,45 @@ def test_only_deployment_settings_read_the_environment():
         for line in _env_reads(ast.parse(p.read_text(encoding="utf-8")))
     ]
     assert hits == [], "environment reads outside session/config:\n" + "\n".join(hits)
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_modules(path: Path, modules: dict[str, Path]):
+    """Package modules an import anywhere in ``path`` runs: function-level
+    and relative imports included, each with its parent packages."""
+    package = _module_name(path).split(".")
+    if path.name != "__init__.py":
+        package = package[:-1]
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module.split(".") if node.module else []
+            if node.level:
+                base = package[: len(package) - node.level + 1] + base
+            names = [".".join(base)] + [".".join([*base, a.name]) for a in node.names]
+        else:
+            continue
+        for name in names:
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                if (m := ".".join(parts[:i])) in modules:
+                    yield m
+
+
+def test_no_package_module_reached_only_by_tests():
+    modules = {_module_name(p): p for p in PKG.rglob("*.py")}
+    todo = [m for pattern in ENTRY_POINTS for p in sorted(ROOT.glob(pattern))
+            for m in _imported_modules(p, modules)]
+    reached: set[str] = set()
+    while todo:
+        m = todo.pop()
+        if m not in reached:
+            reached.add(m)
+            todo.extend(_imported_modules(modules[m], modules))
+    unreached = sorted(set(modules) - reached)
+    assert unreached == [], "package modules no entry point imports:\n" + "\n".join(unreached)

@@ -1,7 +1,8 @@
-"""Tests for E2-E4 eval operators and the exact stratified split (U4)."""
+"""Tests for E1-E4 eval operators and the exact stratified split (U4)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from x5_ner_spark.operators import eval_ops
@@ -10,6 +11,7 @@ from x5_ner_spark.operators.split import (
     largest_remainder_quotas,
     stratified_split,
 )
+from tests.conftest import has_reference, load_reference_module
 
 
 def _spans(*tuples):
@@ -148,3 +150,50 @@ def test_pack_documents_semantics(spark):
     b = {r[1]: r for r in out if r[0] == "b"}
     assert b[100][2] == 0 and b[100][3] == 0 and b[100][4] is True  # 250 > budget
     assert b[101][2] == 250 and b[101][3] == 2 and b[101][4] is False
+
+
+@pytest.mark.skipif(not has_reference(), reason="reference repo not present")
+def test_e1_prf_matches_reference_evaluate(spark):
+    """Same gold/pred rows through (a) the reference's pandas evaluate() and
+    (b) our Spark path (bio merge → counters → metrics)."""
+    import pandas as pd
+
+    ref = load_reference_module("scripts.eval_submission_on_train")
+
+    gold_rows = [
+        ("молоко 1 %", "[(0, 6, 'B-TYPE'), (7, 8, 'B-PERCENT'), (9, 10, 'I-PERCENT')]"),
+        ("сок добрый", "[(0, 3, 'B-TYPE'), (4, 10, 'B-BRAND')]"),
+        ("вода 2 л", "[(0, 4, 'B-TYPE'), (5, 6, 'B-VOLUME'), (7, 8, 'I-VOLUME')]"),
+        ("чай", "[(0, 3, 'B-TYPE')]"),
+    ]
+    pred_rows = [
+        ("молоко 1 %", "[(0, 6, 'B-TYPE'), (7, 8, 'B-PERCENT')]"),      # FN on I chain? see merge
+        ("сок добрый", "[(0, 3, 'B-BRAND'), (4, 10, 'B-BRAND')]"),       # type swap
+        ("вода 2 л", "[(0, 4, 'B-TYPE'), (5, 8, 'B-VOLUME')]"),
+        ("чай", "[(0, 3, 'B-TYPE')]"),
+    ]
+    gold_pd = pd.DataFrame(gold_rows, columns=["sample", "annotation"])
+    pred_pd = pd.DataFrame(pred_rows, columns=["sample", "annotation"])
+    per_type, macro, micro, n = ref.evaluate(gold_pd, pred_pd)
+
+    # Spark path: decode → typed merge (same core fn the engine uses) →
+    # relational counters/metrics
+    from x5_ner_spark.core.spans import merge_bio_typed, parse_annotation
+    from x5_ner_spark.operators import eval_ops
+
+    def ents_df(rows):
+        out = []
+        for sample, ann in rows:
+            for t, s, e in merge_bio_typed(parse_annotation(ann)):
+                out.append((sample, f"{t}:{s}:{e}", t))
+        return spark.createDataFrame(out, "sample string, ent string, etype string")
+
+    counters = eval_ops.prf_counters(ents_df(gold_rows), ents_df(pred_rows),
+                                     ["sample", "ent"], "etype")
+    metrics = {r["etype"]: r for r in eval_ops.prf_metrics(counters, "etype").collect()}
+    for t, m in per_type.items():
+        if t in metrics:
+            assert abs(metrics[t]["precision"] - m["precision"]) < 1e-4, t
+            assert abs(metrics[t]["recall"] - m["recall"]) < 1e-4, t
+        else:
+            assert m["precision"] == 0.0 and m["recall"] == 0.0

@@ -1,21 +1,26 @@
-"""Fused single-Arrow-stage path must be row-identical to the staged path."""
+"""The fused single-Arrow-stage path must be row-identical to the driver
+oracle (``core`` text extraction, mention detection and triples per page)."""
 
 from __future__ import annotations
 
 import pytest
 
-from x5_ner_spark.pipeline import extract, fused, mentions, triples
-from x5_ner_spark.pipeline.fixtures import BRANDS, pages_df
+from x5_ner_spark.core.html_text import extract_text
+from x5_ner_spark.core.mention_pipeline import extract_triples
+from x5_ner_spark.pipeline import fused
+from x5_ner_spark.pipeline.fixtures import BRANDS, generate_pages, pages_df
 
 
 def test_fused_equals_staged(spark):
-    pages = pages_df(spark, 200, sentences=3).cache()
-    lex = list(BRANDS)
-    staged = triples.run(
-        mentions.run(extract.run(pages).select("url", "text"), lex, spark, balance=False)
-    )
-    fast = fused.fused_triples(pages, frozenset(lex), balance=False)
-    a = sorted(tuple(r) for r in staged.collect())
+    pages = pages_df(spark, 200, sentences=3)
+    lex = frozenset(BRANDS)
+    oracle = [
+        (*t, p["url"])
+        for p in generate_pages(200, sentences=3)
+        for t in extract_triples(p["url"], extract_text(p["html"]), lex)
+    ]
+    fast = fused.fused_triples(pages, lex, balance=False)
+    a = sorted(oracle)
     b = sorted(tuple(r) for r in fast.collect())
     assert a == b and len(a) > 0
 

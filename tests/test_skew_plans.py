@@ -1,4 +1,4 @@
-"""Skew utilities equivalence, word aggregation, pipeline CC non-trivial,
+"""Pipeline CC non-trivial, embedding top-k recall, hub-skew CC rounds,
 and physical-plan regression guards (pushdown + broadcast stay in place)."""
 
 from __future__ import annotations
@@ -7,47 +7,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from x5_ner_spark import obs
-from x5_ner_spark.operators.word_agg import aggregate_subtokens
-from x5_ner_spark.pipeline import skew
-
-
-def test_salted_count_equals_plain(spark):
-    df = spark.createDataFrame(
-        [("hub",)] * 500 + [("a",)] * 3 + [("b",)] * 7, "k string"
-    )
-    plain = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r["k"]: r["count"] for r in skew.salted_count(df, "k").collect()}
-    assert salted == plain == {"hub": 500, "a": 3, "b": 7}
-
-
-def test_salted_join_equals_plain(spark):
-    big = spark.createDataFrame(
-        [(i, "hub" if i % 2 else f"k{i % 5}") for i in range(200)], "id long, k string"
-    )
-    small = spark.createDataFrame([("hub", 1), ("k1", 2), ("k3", 3)], "k string, v int")
-    plain = sorted(tuple(r) for r in big.join(small, "k").select("id", "v").collect())
-    salted = sorted(tuple(r) for r in skew.salted_join(big, small, "k").select("id", "v").collect())
-    assert salted == plain
-    assert len(plain) > 0
-
-
-def test_word_aggregation_matches_numpy(spark):
-    rows = []
-    rng = np.random.RandomState(7)
-    expected = {}
-    for wid in range(3):
-        probs = rng.rand(2 + wid, 4)
-        for j in range(probs.shape[0]):
-            rows.append((1, wid, 10 * wid + j, 10 * wid + j + 3, probs[j].tolist()))
-        expected[wid] = (10 * wid, 10 * wid + probs.shape[0] - 1 + 3, probs.mean(axis=0))
-    df = spark.createDataFrame(
-        rows, "doc_id long, word_id long, ts int, te int, probs array<double>"
-    )
-    out = {r["word_id"]: r for r in aggregate_subtokens(df).collect()}
-    for wid, (ws, we, mean) in expected.items():
-        r = out[wid]
-        assert (r["ws"], r["we"]) == (ws, we)
-        np.testing.assert_allclose(r["word_probs"], mean, rtol=1e-12)
 
 
 def test_pipeline_components_nontrivial(spark):
@@ -88,6 +47,19 @@ def test_lead_prefix_scalable_matches_global(spark, sf_dir):
         F.count(F.lit(1)).alias("n"), F.sum("prefix_match").alias("m")
     ).first()
     assert (simple["n"], simple["m"]) == (scalable["n"], scalable["m"])
+
+
+def test_lsh_topk_recall(spark, sf_dir):
+    from x5_ner_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 5)
+    bf = {(r["query_id"], r["neighbor_id"])
+          for r in similarity.brute_force_topk(emb, q, k=3).collect()}
+    lsh = {(r["query_id"], r["neighbor_id"])
+           for r in similarity.lsh_topk(emb, q, k=3, n_planes=4).collect()}
+    # approximate: some recall, never more than k per query
+    assert 0 < len(lsh) <= len(bf)
 
 
 def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
@@ -268,13 +240,11 @@ def test_cc_hub_skew_rounds_and_salted_path(spark, monkeypatch):
     """SURVEY §7.4(5) promised hub-skew stress: one node carries ~10% of all
     edges. CC round count must stay O(log n) (the hub is star-shaped already;
     the ring backbone is the long-diameter part), AQE skew handling is on in
-    the session, and the salted two-phase aggregate engages exactly on the
-    hub-key distribution."""
+    the session."""
     import math
 
     from x5_ner_spark.pipeline import canonicalize
     from x5_ner_spark.pipeline.fixtures import hub_edges_df
-    from x5_ner_spark.pipeline.skew import salted_count
 
     n = 4096
     edges = hub_edges_df(spark, n, hub_share=0.1)
@@ -294,15 +264,6 @@ def test_cc_hub_skew_rounds_and_salted_path(spark, monkeypatch):
 
     # AQE skew-join splitting is enabled in every session this engine makes
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-
-    # salted path: two-phase aggregate is row-identical on the hub key and
-    # its plan really is two exchanges (per-(key,salt) partial, per-key final)
-    plain = {r["src"]: r["count"] for r in edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("count")).collect()}
-    salted = {r["src"]: r["count"] for r in salted_count(edges, "src").collect()}
-    assert salted == plain
-    plan = salted_count(edges, "src")._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") >= 2 and "xxhash64" in plan
 
 
 def test_tfidf_idf_join_is_broadcast(spark, sf_dir):

@@ -1,51 +1,15 @@
-"""Spark operator tests: sources round-trip, native span algebra vs the
-pure-Python core, windowed BIO merge, lexicon build."""
+"""Spark operator tests: lexicon round-trip, native span algebra vs the
+pure-Python core, windowed BIO merge."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from x5_ner_spark.core.spans import merge_bio_typed, serialize_spans
+from x5_ner_spark.core.spans import merge_bio_typed
 from x5_ner_spark.operators import span_native
 from x5_ner_spark.operators.span_udfs import SPAN_ARRAY
-from x5_ner_spark.pipeline.mentions import build_brand_lexicon
-from x5_ner_spark.sources import csv_semicolon, lexicon
-
-ROWS = [
-    ("молоко 3,2%", "[(0, 6, 'B-TYPE'), (7, 11, 'B-PERCENT')]"),
-    ("сок добрый", "[(0, 3, 'B-TYPE'), (4, 10, 'B-BRAND')]"),
-    ("пусто", "[]"),
-    ("битый", "not a list"),
-    ("части", "x (1, 3, 'B-TYPE') y"),
-]
-
-
-@pytest.fixture(scope="module")
-def sub_df(spark):
-    return spark.createDataFrame(ROWS, "sample string, annotation string")
-
-
-def test_csv_roundtrip_byte_exact(spark, sub_df, tmp_path):
-    p = str(tmp_path / "sub")
-    decoded = csv_semicolon.decode_annotations(sub_df)
-    csv_semicolon.write_submission(decoded, p)
-    back = csv_semicolon.read_submission(spark, p)
-    got = {r["sample"]: r["annotation"] for r in back.collect()}
-    assert got["молоко 3,2%"] == "[(0, 6, 'B-TYPE'), (7, 11, 'B-PERCENT')]"
-    assert got["пусто"] == "[]"
-    assert got["битый"] == "[]"          # malformed degrades to []
-    assert got["части"] == "[(1, 3, 'B-TYPE')]"  # regex fallback recovers tuples
-
-
-def test_search_query_header_normalized(spark, tmp_path):
-    p = str(tmp_path / "alt.csv")
-    spark.createDataFrame([("чай",)], "search_query string").coalesce(1).write.option(
-        "sep", ";"
-    ).option("header", True).mode("overwrite").csv(p)
-    df = csv_semicolon.read_submission(spark, p)
-    assert df.columns == ["sample", "annotation"]
-    assert df.first()["sample"] == "чай"
+from x5_ner_spark.sources import lexicon
 
 
 def test_lexicon_roundtrip(spark, tmp_path):
@@ -106,29 +70,6 @@ def test_bio_merge_windowed_matches_core(spark):
     for i, spans in enumerate(DISJOINT_SPAN_SETS):
         want = merge_bio_typed(list(spans))
         assert got_by_doc.get(i, set()) == want, (i, spans)
-
-
-def test_build_brand_lexicon(spark):
-    rows = [
-        ("сок добрый", [{"start": 4, "end": 10, "tag": "B-BRAND"}]),
-        ("добрый сок", [{"start": 0, "end": 6, "tag": "B-BRAND"}]),
-        ("чай greenfield зеленый", [{"start": 4, "end": 14, "tag": "B-BRAND"}]),
-        ("без брендов", []),
-    ]
-    df = spark.createDataFrame(rows, f"text string, spans {SPAN_ARRAY.simpleString()}")
-    lex = {r["term"]: r["freq"] for r in build_brand_lexicon(df).collect()}
-    # whole-span and per-word forms counted (identical here), length 3..30
-    assert lex["добрый"] == 4  # 2 spans × (whole + word)
-    assert lex["greenfield"] == 2
-
-
-def test_serialize_udf_matches_core(spark):
-    spans = [{"start": 7, "end": 11, "tag": "B-PERCENT"}, {"start": 0, "end": 6, "tag": "B-TYPE"}]
-    from x5_ner_spark.operators.span_udfs import serialize_spans_udf
-
-    df = spark.createDataFrame([(spans,)], f"spans {SPAN_ARRAY.simpleString()}")
-    got = df.select(serialize_spans_udf("spans").alias("s")).first()["s"]
-    assert got == serialize_spans([(7, 11, "B-PERCENT"), (0, 6, "B-TYPE")])
 
 
 def test_overwrite_spans_for_keys(spark):

@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from x5_ner_spark import obs
 from x5_ner_spark.core.html_text import extract_text
 from x5_ner_spark.core.mention_pipeline import extract_triples, final_mention_spans
-from x5_ner_spark.pipeline import canonicalize, extract, graph, mentions, triples
+from x5_ner_spark.operators.span_udfs import make_mentions_udf
+from x5_ner_spark.pipeline import canonicalize, extract, fused, graph
 from x5_ner_spark.pipeline.fixtures import BRANDS, generate_pages, pages_df
 from x5_ner_spark.pipeline.runner import run_pipeline
 
@@ -43,7 +44,7 @@ def test_extract_byte_identity(spark, pages):
 def test_mentions_match_oracle_exactly(spark, pages):
     docs = extract.run(pages)
     lex = [b for b in BRANDS]
-    men = mentions.run(docs.select("url", "text"), lex, spark)
+    men = docs.withColumn("spans", make_mentions_udf(frozenset(lex))(F.col("text")))
     rows = men.select("url", "text", "spans").collect()
     lexset = frozenset(lex)
     lexlist = sorted(lexset)
@@ -60,13 +61,11 @@ def test_mentions_match_oracle_exactly(spark, pages):
 def test_triples_pr_gate(spark, pages):
     """The BASELINE.json gate: P/R ≥ 0.95 vs the reference-semantics oracle
     triple set. The engine and oracle share core/, so this should be exact."""
-    docs = extract.run(pages)
     lex = [b for b in BRANDS]
-    men = mentions.run(docs.select("url", "text"), lex, spark)
-    trip = triples.run(men)
+    lexset = frozenset(lex)
+    trip = fused.fused_triples(pages, lexset)
     got = {(r["subj"], r["pred"], r["obj"]) for r in trip.collect()}
 
-    lexset = frozenset(lex)
     want = set()
     for r in extract.run(pages).select("url", "text").collect():
         for t in extract_triples(r["url"], r["text"], lexset):

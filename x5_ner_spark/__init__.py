@@ -11,7 +11,7 @@ Brand-new implementation of the query semantics of the reference repo
                   fuzzy joins, text stats, span UDFs).
 - ``pipeline``   the KG-construction DAG: pages → text → mentions →
                   candidates → links → triples → canonical graph.
-- ``sources``    readers/writers (;-CSV, lexicon text, parquet helpers).
+- ``sources``    lexicon text reader/writer and the YAML pipeline config.
 """
 
 __version__ = "0.1.0"

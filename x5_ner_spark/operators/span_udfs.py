@@ -1,4 +1,4 @@
-"""Arrow-vectorized UDFs for span extraction / post-processing / triples.
+"""Arrow-vectorized UDFs for text extraction and mention detection.
 
 These wrap the pure functions in ``x5_ner_spark.core`` — the same code the
 pytest oracle runs — so Spark output is byte-identical to the oracle by
@@ -21,8 +21,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.html_text import extract_text
-from ..core.mention_pipeline import mention_detector, triples_from_spans
-from ..core.spans import parse_annotation, serialize_spans
+from ..core.mention_pipeline import mention_detector
 
 SPAN_STRUCT = StructType(
     [
@@ -33,30 +32,9 @@ SPAN_STRUCT = StructType(
 )
 SPAN_ARRAY = ArrayType(SPAN_STRUCT)
 
-TRIPLE_STRUCT = StructType(
-    [StructField("pred", StringType(), False), StructField("obj", StringType(), False)]
-)
-TRIPLE_ARRAY = ArrayType(TRIPLE_STRUCT)
-
 
 def _spans_to_rows(spans) -> list[tuple[int, int, str]]:
     return [(int(s), int(e), str(t)) for s, e, t in spans]
-
-
-def _rows_to_tuples(rows) -> list[tuple[int, int, str]]:
-    """Arrow hands array<struct> cells over as numpy arrays of dicts (when
-    read from storage) or tuples (when produced by an upstream pandas UDF in
-    the same plan); never truth-test the array itself."""
-    if rows is None:
-        return []
-    out = []
-    for r in rows:
-        if isinstance(r, dict):
-            out.append((int(r["start"]), int(r["end"]), str(r["tag"])))
-        else:
-            s, e, t = r
-            out.append((int(s), int(e), str(t)))
-    return out
 
 
 @pandas_udf(StringType())
@@ -111,31 +89,3 @@ def make_mentions_udf(
             yield pd.Series([_spans_to_rows(s) for s in spans])
 
     return mentions
-
-
-@pandas_udf(StringType())
-def serialize_spans_udf(spans_col: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Byte-exact reference serialization (ner/utils.py:83-89, F19)."""
-    for spans_s in spans_col:
-        yield spans_s.map(lambda spans: serialize_spans(_rows_to_tuples(spans)))
-
-
-@pandas_udf(SPAN_ARRAY)
-def parse_annotation_udf(ann: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Tolerant stringified-span-list decode (S3; ast semantics, errors → [])."""
-    for batch in ann:
-        yield batch.map(lambda s: _spans_to_rows(parse_annotation(s)))
-
-
-@pandas_udf(TRIPLE_ARRAY)
-def triples_udf(cols: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-    """(text, final spans) → [(pred, obj)] open-pattern triples (subject is
-    the url column, attached natively by the caller)."""
-    for text_s, spans_s in cols:
-        out = []
-        for t, spans in zip(text_s, spans_s):
-            out.append(
-                [(p, o) for _, p, o in triples_from_spans("", t or "", _rows_to_tuples(spans))]
-            )
-        yield pd.Series(out)
-

@@ -1,15 +1,14 @@
 """Fused linear path: pages → triples in ONE Arrow stage.
 
-The staged path (extract.run → mentions.run → triples.run) chains three
-ArrowEvalPython operators — each hop serializes the text column JVM↔Python.
-For the throughput-dominated production path we fuse all per-document work
-(HTML→text, mention detection, post-process, triple emission) into a single
-``mapInPandas``: one Arrow transfer in, one out, same pure core functions —
-so output is row-identical to the staged path (tests/test_fused.py).
+All per-document work (HTML→text, mention detection, post-process, triple
+emission) runs in a single ``mapInPandas``: one Arrow transfer in, one out,
+where a chain of per-step UDFs would serialize the text column JVM↔Python
+at every hop. The same pure core functions run inside it, so output is
+row-identical to the driver oracle (``core.mention_pipeline.extract_triples``
+over ``core.html_text.extract_text``; tests/test_fused.py).
 
-The fused path is the one ``run_pipeline`` (pipeline/runner.py), bench and
-high-volume ingestion use; the staged operators stay as the per-stage
-building blocks and the row-identity reference.
+This is the path ``run_pipeline`` (pipeline/runner.py), bench and
+high-volume ingestion use.
 """
 
 from __future__ import annotations

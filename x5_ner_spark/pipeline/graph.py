@@ -82,14 +82,18 @@ def manifest_path(root: str) -> str:
 
 
 def _manifests(spark: SparkSession, root: str) -> DataFrame | None:
-    """Every manifest row under ``root``, or None before the first commit
-    (checked on the Hadoop FileSystem: a failed parquet read logs a stack
-    trace even when the caller catches the error)."""
-    p = manifest_path(root)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+    """Every manifest row under ``root``, or None before the first commit.
+    One Hadoop glob lists the files, which the reader gets by name: a read
+    of the ``_manifests`` dir itself logs "All paths were ignored" (Spark's
+    hidden-file rule sees the dir's own leading ``_``), and a read of a
+    missing dir logs a stack trace even when the caller catches the error."""
+    glob = spark._jvm.org.apache.hadoop.fs.Path(
+        os.path.join(manifest_path(root), "*.parquet")
+    )
+    hits = glob.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(glob)
+    if not hits:
         return None
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(*(h.getPath().toString() for h in hits))
 
 
 def read_manifest(spark: SparkSession, root: str, stage: str) -> DataFrame:

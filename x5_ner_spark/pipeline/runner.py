@@ -129,7 +129,7 @@ def run_pipeline(
         )
     lex = brand_lexicon if brand_lexicon is not None else [b for b in BRANDS]
     # triple production uses the fused single-Arrow-stage path (pipeline/
-    # fused.py — row-identical to the staged path, one JVM↔Python hop) and
+    # fused.py — row-identical to the driver oracle, one JVM↔Python hop) and
     # is persisted once so canonicalization's iterative actions and the
     # caller's writes don't re-run inference (on a cluster, write_stage's
     # Iceberg tables play this role; in-memory persist covers the library

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def get_spark(
@@ -67,15 +68,11 @@ def _warm_icu_case_tables(spark: SparkSession) -> None:
     the class-init monitor and the first Cyrillic-touching job stalls ~70 s.
     Paying it once on a single task at session start removes the stampede;
     on a real cluster the same warmup runs one tiny task per executor
-    (spark.range(numExecutors).repartition(numExecutors))."""
+    (spark.range(numExecutors).repartition(numExecutors)). A session that
+    cannot run this one-row job fails here, not at its first query."""
     if getattr(spark, "_x5_icu_warmed", False):
         return
-    try:
-        from pyspark.sql import functions as F
-
-        spark.createDataFrame([("Ёё",)], "s string").coalesce(1).select(
-            F.lower("s"), F.upper("s"), F.initcap("s")
-        ).collect()
-    except Exception:
-        pass
+    spark.createDataFrame([("Ёё",)], "s string").coalesce(1).select(
+        F.lower("s"), F.upper("s"), F.initcap("s")
+    ).collect()
     spark._x5_icu_warmed = True
