@@ -113,10 +113,3 @@ def test_failed_icu_warmup_is_loud():
     with pytest.raises(RuntimeError, match="no executors"):
         session._warm_icu_case_tables(stub)
     assert not hasattr(stub, "_x5_icu_warmed")
-
-
-def test_iceberg_catalog_detection(spark):
-    from x5_ner_spark.pipeline.graph import iceberg_catalog
-
-    # sandbox has no Iceberg jars/catalog: parquet layout must be selected
-    assert iceberg_catalog(spark) is None

@@ -49,19 +49,6 @@ def test_lead_prefix_scalable_matches_global(spark, sf_dir):
     assert (simple["n"], simple["m"]) == (scalable["n"], scalable["m"])
 
 
-def test_lsh_topk_recall(spark, sf_dir):
-    from x5_ner_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5)
-    bf = {(r["query_id"], r["neighbor_id"])
-          for r in similarity.brute_force_topk(emb, q, k=3).collect()}
-    lsh = {(r["query_id"], r["neighbor_id"])
-           for r in similarity.lsh_topk(emb, q, k=3, n_planes=4).collect()}
-    # approximate: some recall, never more than k per query
-    assert 0 < len(lsh) <= len(bf)
-
-
 def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     from x5_ner_spark.operators import similarity
 

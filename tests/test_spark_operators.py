@@ -1,12 +1,12 @@
 """Spark operator tests: lexicon round-trip, native span algebra vs the
-pure-Python core, windowed BIO merge."""
+pure-Python core, windowed BIO merge, span serialization."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from x5_ner_spark.core.spans import merge_bio_typed
+from x5_ner_spark.core.spans import merge_bio_typed, serialize_spans
 from x5_ner_spark.operators import span_native
 from x5_ner_spark.operators.span_udfs import SPAN_ARRAY
 from x5_ner_spark.sources import lexicon
@@ -70,6 +70,15 @@ def test_bio_merge_windowed_matches_core(spark):
     for i, spans in enumerate(DISJOINT_SPAN_SETS):
         want = merge_bio_typed(list(spans))
         assert got_by_doc.get(i, set()) == want, (i, spans)
+
+
+def test_serialize_udf_matches_core(spark):
+    spans = [{"start": 7, "end": 11, "tag": "B-PERCENT"}, {"start": 0, "end": 6, "tag": "B-TYPE"}]
+    from x5_ner_spark.operators.span_udfs import serialize_spans_udf
+
+    df = spark.createDataFrame([(spans,)], f"spans {SPAN_ARRAY.simpleString()}")
+    got = df.select(serialize_spans_udf("spans").alias("s")).first()["s"]
+    assert got == serialize_spans([(7, 11, "B-PERCENT"), (0, 6, "B-TYPE")])
 
 
 def test_overwrite_spans_for_keys(spark):

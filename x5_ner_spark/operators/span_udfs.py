@@ -1,4 +1,4 @@
-"""Arrow-vectorized UDFs for text extraction and mention detection.
+"""Arrow-vectorized UDFs for text extraction, mention detection, serialization.
 
 These wrap the pure functions in ``x5_ner_spark.core`` — the same code the
 pytest oracle runs — so Spark output is byte-identical to the oracle by
@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 
 from ..core.html_text import extract_text
 from ..core.mention_pipeline import mention_detector
+from ..core.spans import serialize_spans
 
 SPAN_STRUCT = StructType(
     [
@@ -89,3 +90,11 @@ def make_mentions_udf(
             yield pd.Series([_spans_to_rows(s) for s in spans])
 
     return mentions
+
+
+@pandas_udf(StringType())
+def serialize_spans_udf(spans_col: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    """Byte-exact reference serialization (ner/utils.py:83-89, F19)."""
+    for spans_s in spans_col:
+        yield spans_s.map(lambda spans: serialize_spans(
+            [(r["start"], r["end"], r["tag"]) for r in (() if spans is None else spans)]))
