@@ -35,6 +35,26 @@ def test_yaml_config_source(tmp_path, monkeypatch):
     with _pytest.raises(FileNotFoundError):
         load_config(str(tmp_path / "missing.yaml"))
 
+    # every default is a setting the runner reads: a key it ignored would
+    # be silently dropped from a YAML file
+    import ast
+    import inspect
+
+    from x5_ner_spark.pipeline import runner
+
+    main = ast.parse(inspect.getsource(runner.main))
+    read = set()
+    for node in ast.walk(main):
+        if isinstance(node, ast.Subscript) and isinstance(node.value, ast.Name) \
+                and node.value.id == "cfg" and isinstance(node.slice, ast.Constant):
+            read.add(node.slice.value)
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                and node.func.attr == "get" and isinstance(node.func.value, ast.Name) \
+                and node.func.value.id == "cfg" and node.args \
+                and isinstance(node.args[0], ast.Constant):
+            read.add(node.args[0].value)
+    assert set(DEFAULTS) <= read, sorted(set(DEFAULTS) - read)
+
 
 def test_iceberg_catalog_detection(spark):
     from x5_ner_spark.pipeline.graph import iceberg_catalog

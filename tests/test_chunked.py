@@ -14,10 +14,10 @@ Pinned here:
 - overlap resolution keeps the row from the window where the word is most
   interior, ties to the earlier window (the standard HF long-doc pattern);
 - results are a pure function of the text (batching-invariant);
-- the executor path (fused Arrow stage / CRF decode UDF) is byte-identical
-  to the driver-side oracle, and the decision surface really does extend
-  past the truncation point (log rows for words the truncate path never
-  decides);
+- the executor path (the decision-log Arrow stage, cascade and CRF) is
+  byte-identical to the driver-side oracle, and the decision surface
+  really does extend past the truncation point (log rows for words the
+  truncate path never decides);
 - CRF Viterbi composes with checkpoint providers, contextual ones included
   (VERDICT r7 #6): emissions = log of the provider's per-word rows.
 """
@@ -243,22 +243,21 @@ def test_crf_default_path_unchanged(ctx_ckpt):
 
 # ------------------------------------------------------------- executor
 def test_fused_windowed_executor_equals_oracle(spark, ctx_ckpt):
-    """End-to-end under Spark: fused Arrow stage with long_doc='windowed'
-    must be byte-identical to the driver-side oracle, and must DECIDE words
-    past the truncation point (more log rows than the truncate path)."""
+    """End-to-end under Spark: the Arrow decision-log stage with
+    long_doc='windowed' must be byte-identical to the driver-side oracle,
+    and must DECIDE words past the truncation point (more log rows than the
+    truncate path)."""
     from x5_ner_spark.core.mention_pipeline import final_mention_spans_batch
-    from x5_ner_spark.pipeline import fused
+    from x5_ner_spark.operators.decision_log import decision_log
 
     texts = [words_text(400), "молоко кефир санта", words_text(260)]
-    rows = [(f"u{i}", None, t) for i, t in enumerate(texts)]
-    pages = spark.createDataFrame(rows, "url string, html binary, text string")
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
 
     out = {}
     for mode in ("truncate", "windowed"):
-        df = fused.fused_triples_and_log(
-            pages, emission_npz=ctx_ckpt, long_doc=mode
-        )
-        out[mode] = df.filter("rec_type = 'log'").collect()
+        out[mode] = decision_log(
+            docs, emission_npz=ctx_ckpt, long_doc=mode
+        ).collect()
     # truncation decides < 200 words per long doc; windowing decides them all
     assert len(out["windowed"]) > len(out["truncate"])
 
@@ -267,12 +266,12 @@ def test_fused_windowed_executor_equals_oracle(spark, ctx_ckpt):
     logs: list[list[dict]] = []
     final_mention_spans_batch(texts, logs=logs, provider=wrapped)
     expect = sorted(
-        (f"u{i}", r["start"], r["end"], r["label"], r["reason"])
+        (i, r["start"], r["end"], r["label"], r["reason"])
         for i, recs in enumerate(logs)
         for r in recs
     )
     got = sorted(
-        (r["url"], r["start"], r["end"], r["label"], r["reason"])
+        (r["doc_id"], r["start"], r["end"], r["label"], r["reason"])
         for r in out["windowed"]
     )
     assert got == expect
@@ -280,23 +279,25 @@ def test_fused_windowed_executor_equals_oracle(spark, ctx_ckpt):
 
 def test_crf_udf_windowed_ctx_executor(spark, ctx_ckpt):
     """decode='crf' × emission_npz=ctx × long_doc='windowed' through the
-    mentions UDF — executor ≡ driver (the full composition of VERDICT r7
-    #1 and #6)."""
-    from pyspark.sql import functions as F
-
+    decision-log stage — executor ≡ driver (the full composition of
+    VERDICT r7 #1 and #6)."""
     from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.operators.span_udfs import make_mentions_udf
+    from x5_ner_spark.operators.decision_log import decision_log
 
     texts = [words_text(300), "молоко кефир вода", words_text(170)]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    udf = make_mentions_udf(
-        decode="crf", emission_npz=ctx_ckpt, long_doc="windowed"
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = sorted(
+        (r["doc_id"], r["start"], r["end"], r["label"])
+        for r in decision_log(
+            df, decode="crf", emission_npz=ctx_ckpt, long_doc="windowed"
+        ).collect()
     )
-    got = {
-        r["text"]: [(s["start"], s["end"], s["tag"]) for s in r["spans"]]
-        for r in df.select("text", udf(F.col("text")).alias("spans")).collect()
-    }
     base = CtxTransformerProvider(ctx_ckpt)
-    expect = crf_mention_spans_batch(texts, provider=ChunkedSeqProvider(base))
-    for t, sp in zip(texts, expect):
-        assert got[t] == [(int(s), int(e), tag) for s, e, tag in sp]
+    logs: list[list[dict]] = []
+    crf_mention_spans_batch(texts, provider=ChunkedSeqProvider(base), logs=logs)
+    expect = sorted(
+        (i, r["start"], r["end"], r["label"])
+        for i, recs in enumerate(logs) for r in recs
+    )
+    # the windows decide every word, past the 160-piece truncation
+    assert got == expect and len(expect) == 300 + 3 + 170

@@ -79,23 +79,6 @@ def test_crf_mention_path_end_to_end():
     assert a == crf_mention_spans_batch(texts)
 
 
-def test_distributed_mle_matches_core(spark):
-    """fit_crf_transitions (one Spark aggregation) ≡ core mle_crf_params."""
-    import random
-
-    from x5_ner_spark.core.crf import mle_crf_params
-    from x5_ner_spark.operators.crf_train import fit_crf_transitions
-
-    rng = random.Random(13)
-    seqs = [[rng.randrange(9) for _ in range(rng.randint(1, 10))] for _ in range(200)]
-    want = mle_crf_params(seqs)
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(seqs)],
-                               "doc_id long, tags array<int>")
-    got = fit_crf_transitions(df)
-    for g, w in zip(got, want):
-        assert np.allclose(g, w), (g, w)
-
-
 def test_mle_transitions_recover_planted_structure():
     """Sequences generated under a known bigram law: the MLE transitions must
     rank the planted successor highest, and Viterbi with them must beat
@@ -125,23 +108,26 @@ def test_mle_transitions_recover_planted_structure():
 
 
 def test_crf_decode_udf_on_spark(spark):
-    """make_mentions_udf(decode='crf') runs distributed and matches the core
-    CRF path per row."""
-    from pyspark.sql import functions as F
-
+    """decision_log(decode='crf') runs the Viterbi decode distributed and
+    logs the same per-word decisions as the core CRF path."""
     from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.operators.span_udfs import make_mentions_udf
+    from x5_ner_spark.operators.decision_log import decision_log
 
     texts = ["молоко простоквашино 3,2% 1 л", "hello spark data batch",
              "сок добрый 200 мл", ""]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id long, text string")
-    udf = make_mentions_udf(decode="crf")
-    got = {r["doc_id"]: [tuple(x) for x in r["spans"]]
-           for r in df.select("doc_id", udf(F.col("text")).alias("spans")).collect()}
-    want = crf_mention_spans_batch(texts)
-    for i, w in enumerate(want):
-        assert got[i] == w, (i, got[i], w)
+    got = sorted(
+        (r["doc_id"], r["start"], r["end"], r["label"])
+        for r in decision_log(df, decode="crf").collect()
+    )
+    logs: list[list[dict]] = []
+    crf_mention_spans_batch(texts, logs=logs)
+    want = sorted(
+        (i, r["start"], r["end"], r["label"])
+        for i, recs in enumerate(logs) for r in recs
+    )
+    assert got == want and len(want) >= 10
 
 
 def test_crf_decode_tokens_matches_driver_side(spark):

@@ -1,6 +1,7 @@
 """No module-level import in the package or its launchers goes unused,
 only the deployment-settings modules read the environment, and every
-package module is reached from an entry point, not from tests alone.
+package module, and every public function or class outside ``core/``, is
+reached from an entry point, not from tests alone.
 
 An AST scan over ``x5_ner_spark/**/*.py``, ``__spark_entry__.py``, the
 ``bench*.py`` and ``kg_submit.py`` launchers and ``tools/*.py``: every name
@@ -153,3 +154,52 @@ def test_no_package_module_reached_only_by_tests():
             todo.extend(_imported_modules(modules[m], modules))
     unreached = sorted(set(modules) - reached)
     assert unreached == [], "package modules no entry point imports:\n" + "\n".join(unreached)
+
+
+def _referenced_names(nodes):
+    """Every name ``nodes`` may reach by name: identifiers, attributes,
+    ``from … import`` names and aliases, and identifier string constants
+    (tools look functions up by name, e.g. ``getattr(mod, "run")``)."""
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                yield node.id
+            elif isinstance(node, ast.Attribute):
+                yield node.attr
+            elif isinstance(node, ast.alias):
+                yield node.name.split(".")[-1]
+                if node.asname:
+                    yield node.asname
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str) \
+                    and node.value.isidentifier():
+                yield node.value
+
+
+def test_no_public_function_reached_only_by_tests():
+    """A name-level walk: start from what the entry points name and the
+    package's module-level code runs, and close over the bodies of the
+    top-level functions and classes those names reach. ``core/`` is the
+    oracle layer that tests compare the Spark paths with, so it is exempt;
+    private names are exempt as test references (e.g. a dense gradient)."""
+    defs: dict[str, list] = {}
+    public = []
+    todo = [n for pattern in ENTRY_POINTS for p in sorted(ROOT.glob(pattern))
+            for n in _referenced_names([ast.parse(p.read_text(encoding="utf-8"))])]
+    for p in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(p.read_text(encoding="utf-8"))
+        rel = p.relative_to(PKG).as_posix()
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(node)
+                if not node.name.startswith("_") and not rel.startswith("core/"):
+                    public.append(f"{rel}:{node.name}")
+            else:
+                todo.extend(_referenced_names([node]))
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo.extend(_referenced_names(defs.get(name, [])))
+    unreached = [f for f in public if f.split(":")[1] not in reached]
+    assert unreached == [], "public functions no entry point reaches:\n" + "\n".join(unreached)

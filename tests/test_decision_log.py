@@ -255,78 +255,6 @@ def test_wratio_changes_fuzzy_hit_vs_levenshtein_only():
     assert without == [(0, 9, "O")]
 
 
-def test_write_decision_log_csv_roundtrip(spark, tmp_path):
-    """The ;-CSV artifact sink: leading index follows EMISSION order
-    (numeric doc_id, then word order — doc 10 after doc 2), and every data
-    field round-trips against the core log (serialize_log_row semantics)."""
-    import csv
-
-    from x5_ner_spark.operators.decision_log import decision_log, write_decision_log_csv
-
-    texts = {2: "молоко простоквашино 3.2%", 10: "сок santa 1л", 7: "хлеб барни"}
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in texts.items()], "doc_id long, text string"
-    )
-    log = decision_log(docs, frozenset(LEX))
-    out = str(tmp_path / "log_csv")
-    write_decision_log_csv(log, out)
-
-    files = [f for f in __import__("os").listdir(out) if f.endswith(".csv")]
-    assert len(files) == 1
-    with open(f"{out}/{files[0]}", newline="") as fh:
-        rows = list(csv.reader(fh, delimiter=";"))
-    header, data = rows[0], rows[1:]
-    assert header[0] == "" and header[1:3] == ["text", "token_text"]
-
-    expected = []
-    for did in sorted(texts):  # numeric order: 2, 7, 10
-        for rec in decision_log_rows(texts[did], frozenset(LEX)):
-            expected.append((str(did), rec))
-    assert len(data) == len(expected)
-    for i, (row, (did, rec)) in enumerate(zip(data, expected)):
-        assert row[0] == str(i)  # pandas-style positional index
-        assert row[1] == did and row[2] == rec["token_text"]
-        assert (int(row[3]), int(row[4])) == (rec["start"], rec["end"])
-        assert row[5] == rec["label"] and row[6] == rec["reason"]
-        assert row[9] == str(rec["in_lex"]) and row[10] == str(rec["fuzzy_hit"])
-        for col_i, k in ((7, "p_brand"), (8, "p_type"), (14, "p_brand_sum"),
-                         (15, "p_type_sum"), (16, "p_o")):
-            assert abs(float(row[col_i]) - rec[k]) < 5e-4, (i, k)
-        assert row[17] == "0"  # error column default
-
-
-def test_decision_log_with_npz_matches_fused_log(spark, tmp_path):
-    """The standalone log operator under an npz checkpoint is row-identical
-    to the log half of the one-pass fused stage under the same checkpoint —
-    the S8 surface reflects the deployed model consistently."""
-    from x5_ner_spark.core.emission import write_npz_checkpoint
-    from x5_ner_spark.operators.decision_log import decision_log
-    from x5_ner_spark.pipeline.fused import fused_triples_and_log, split_triples_and_log
-
-    p = str(tmp_path / "log_em.npz")
-    write_npz_checkpoint(p, seed=7)
-    texts = ["молоко простоквашино 3.2%", "сок santa 1л", "хлеб барни"]
-    lex = frozenset(LEX)
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    log_rows = sorted(tuple(r)[1:] for r in decision_log(docs, lex, emission_npz=p).collect())
-
-    pages = spark.createDataFrame(
-        [(f"u{i}", None, t) for i, t in enumerate(texts)],
-        "url string, html binary, text string",
-    )
-    _, fused_log = split_triples_and_log(
-        fused_triples_and_log(pages, lex, emission_npz=p)
-    )
-    fused_rows = sorted(tuple(r)[1:] for r in fused_log.collect())
-    assert log_rows == fused_rows and len(log_rows) > 5
-    # and it genuinely differs from the stub-model log (different emissions)
-    stub_rows = sorted(tuple(r)[1:] for r in decision_log(docs, lex).collect())
-    assert stub_rows != log_rows
-
-
 def test_decision_log_crf_under_ctx(spark, tmp_path):
     """VERDICT r7 #6 (decision-log surface under ctx+CRF): the log operator
     with decode='crf' over a CONTEXTUAL checkpoint is row-identical to the

@@ -18,32 +18,12 @@ from pyspark.sql import functions as F
 
 from x5_ner_spark import session
 from x5_ner_spark.operators import text_stats as ts
-from x5_ner_spark.operators.split import stratified_split
 from x5_ner_spark.pipeline import graph
 
 
 def _executed_plan(df) -> str:
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_stratified_split_quota_table_is_local(spark):
-    df = spark.range(40).selectExpr(
-        "id AS sample",
-        "array(named_struct('start', 0, 'end', 1, "
-        "'tag', IF(id % 3 = 0, 'B-BRAND', 'O'))) AS spans",
-    )
-    out = stratified_split(df, val_size=0.25)
-    assert {r["combo"] for r in out.select("combo").distinct().collect()} == {"BRAND", "NONE"}
-    plan = _executed_plan(out)
-    assert "ExistingRDD" not in plan, plan
-
-
-def test_stratified_split_of_nothing_is_jvm_planned(spark):
-    out = stratified_split(spark.range(0).selectExpr(
-        "id AS sample", "array(named_struct('start', 0, 'end', 1, 'tag', 'O')) AS spans"))
-    assert out.collect() == []
-    assert "ExistingRDD" not in _executed_plan(out)
 
 
 def test_numeric_profile_histogram_result_is_local(spark, monkeypatch):

@@ -102,29 +102,31 @@ def test_provider_cascade_matches_manual_path(ckpt):
 
 
 def test_spark_udf_parity_and_per_worker_single_load(spark, tmp_path):
-    """The UDF path over many partitions: row-identical to the local batch
-    kernel, and the .loads audit shows exactly ONE load per worker process
-    (workers are reused across partitions — the singleton held)."""
-    from pyspark.sql import functions as F
-
-    from x5_ner_spark.operators.span_udfs import make_mentions_udf
+    """The fused Arrow stage over many partitions: row-identical to the
+    triples of the local batch kernel's spans, and the .loads audit shows
+    exactly ONE load per worker process (workers are reused across
+    partitions — the singleton held)."""
+    from x5_ner_spark.core.mention_pipeline import triples_from_spans
+    from x5_ner_spark.pipeline.fused import fused_triples
 
     p = str(tmp_path / "spark_emission.npz")
     emission.write_npz_checkpoint(p, seed=7)
-    rows = [(i, TEXTS[i % len(TEXTS)] + f" вариант {i}") for i in range(200)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(8)
-    udf = make_mentions_udf(frozenset({"барни", "santa"}), emission_npz=p)
-    got = {
-        r["doc_id"]: [(s["start"], s["end"], s["tag"]) for s in r["spans"]]
-        for r in docs.select("doc_id", udf("text").alias("spans")).collect()
-    }
+    rows = [(f"u{i}", None, TEXTS[i % len(TEXTS)] + f" вариант {i}") for i in range(200)]
+    pages = spark.createDataFrame(
+        rows, "url string, html binary, text string"
+    ).repartition(8)
+    lex = frozenset({"барни", "santa"})
+    got = sorted(tuple(r) for r in fused_triples(pages, lex, emission_npz=p).collect())
     prov = emission.provider_for(p)
-    want = final_mention_spans_batch(
-        [t for _, t in rows], frozenset({"барни", "santa"}),
-        sorted({"барни", "santa"}), provider=prov,
+    want_spans = final_mention_spans_batch(
+        [t for _, _, t in rows], lex, sorted(lex), provider=prov,
     )
-    for (i, _), spans in zip(rows, want):
-        assert got[i] == spans, i
+    want = sorted(
+        (*t, url)
+        for (url, _, text), spans in zip(rows, want_spans)
+        for t in triples_from_spans(url, text, spans)
+    )
+    assert got == want and len(want) > 100
 
     with open(p + ".loads") as f:
         pids = [ln.strip() for ln in f if ln.strip()]

@@ -134,7 +134,6 @@ def test_fit_crf_descends_and_decodes_like_teacher(spark, tmp_path):
     from x5_ner_spark.core.crf import viterbi_decode_batch
     from x5_ner_spark.operators.emission_train import (
         fit_crf_npz,
-        load_crf_params_npz,
         teacher_sequences,
     )
     from x5_ner_spark.pipeline.extract import run as extract_run
@@ -150,7 +149,8 @@ def test_fit_crf_descends_and_decodes_like_teacher(spark, tmp_path):
     assert len(hist) == 20 and hist[-1] < 0.6 * hist[0], (hist[0], hist[-1])
 
     # decode with the trained joint model reproduces the teacher's tags
-    start, trans, end = load_crf_params_npz(path)
+    with np.load(path) as z:
+        start, trans, end = z["crf_start"], z["crf_trans"], z["crf_end"]
     prov = E.provider_for(path)
     rows = seqs.collect()
     seqs.unpersist()

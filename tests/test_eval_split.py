@@ -1,39 +1,12 @@
-"""Tests for E1-E4 eval operators and the exact stratified split (U4)."""
+"""Tests for the E1 and E3 eval operators and the training-data
+preparation operators (sequence packing, the training-mix sampler)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from x5_ner_spark.operators import eval_ops
-from x5_ner_spark.operators.span_udfs import SPAN_ARRAY
-from x5_ner_spark.operators.split import (
-    largest_remainder_quotas,
-    stratified_split,
-)
 from tests.conftest import has_reference, load_reference_module
-
-
-def _spans(*tuples):
-    return [{"start": s, "end": e, "tag": t} for s, e, t in tuples]
-
-
-def test_char_label_diff(spark):
-    rows = [
-        (1, "молоко 3,2", _spans((0, 6, "B-TYPE")), _spans((0, 6, "B-TYPE"), (7, 10, "B-PERCENT"))),
-        (2, "сок", _spans((0, 3, "B-TYPE")), _spans((0, 3, "B-TYPE"))),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        f"doc_id long, text string, gold_spans {SPAN_ARRAY.simpleString()}, "
-        f"pred_spans {SPAN_ARRAY.simpleString()}",
-    )
-    out = eval_ops.char_label_diff(df).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["doc_id"], r["start"], r["end"], r["gold_label"], r["pred_label"]) == (
-        1, 7, 10, "", "PERCENT",
-    )
 
 
 def test_error_buckets(spark):
@@ -54,59 +27,6 @@ def test_error_buckets(spark):
     assert got[("boundary_shift", "BRAND")] == 1
     assert got[("false_negative", "TYPE")] == 1
     assert got[("false_positive", "TYPE")] == 1
-
-
-def test_compare_submissions(spark):
-    a = spark.createDataFrame(
-        [("q1", _spans((0, 3, "B-TYPE"), (4, 6, "B-PERCENT"))),
-         ("q2", _spans((0, 3, "B-TYPE"))),
-         ("q3", _spans())],
-        f"sample string, spans {SPAN_ARRAY.simpleString()}",
-    )
-    b = spark.createDataFrame(
-        [("q1", _spans((4, 6, "B-PERCENT"), (0, 3, "B-TYPE"), (0, 3, "B-TYPE"))),  # same set, diff order+dup
-         ("q2", _spans((0, 3, "B-BRAND"))),
-         ("q4", _spans())],
-        f"sample string, spans {SPAN_ARRAY.simpleString()}",
-    )
-    got = {r["status"]: r["n"] for r in eval_ops.compare_submissions(a, b).collect()}
-    assert got == {"identical": 1, "different": 1, "missing": 2}
-
-
-def test_largest_remainder_matches_reference_method():
-    sizes = {"A": 10, "B": 7, "C": 3}
-    q = largest_remainder_quotas(sizes, 0.2)
-    # target 4 rows: frac A=2.0 B=1.4 C=0.6 → base 2,1,0; need 1 → C (largest rem .6)
-    assert q == {"A": 2, "B": 1, "C": 1}
-    assert largest_remainder_quotas(sizes, 5) == {"A": 2, "B": 1, "C": 1} or True
-    assert largest_remainder_quotas({"A": 2}, 0.5) == {"A": 1}
-    assert largest_remainder_quotas({}, 0.5) == {}
-
-
-def test_stratified_split_exact_quotas(spark):
-    rows = []
-    for i in range(40):
-        rows.append((f"s{i:03d}", _spans((0, 3, "B-TYPE"))))
-    for i in range(40, 50):
-        rows.append((f"s{i:03d}", _spans((0, 3, "B-TYPE"), (4, 6, "B-PERCENT"))))
-    for i in range(50, 54):
-        rows.append((f"s{i:03d}", _spans()))
-    df = spark.createDataFrame(rows, f"sample string, spans {SPAN_ARRAY.simpleString()}")
-    out = stratified_split(df, val_size=0.25).cache()
-    combos = {r["combo"] for r in out.select("combo").distinct().collect()}
-    assert combos == {"TYPE", "PERCENT+TYPE", "NONE"}
-    per = {
-        (r["combo"], r["split"]): r["n"]
-        for r in out.groupBy("combo", "split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # exact largest-remainder quotas on 54 rows, target 13.5→13... compute:
-    q = largest_remainder_quotas({"TYPE": 40, "PERCENT+TYPE": 10, "NONE": 4}, 0.25)
-    for combo, quota in q.items():
-        assert per.get((combo, "val"), 0) == quota, (combo, per)
-    # deterministic across runs
-    a = {r["sample"]: r["split"] for r in out.collect()}
-    b = {r["sample"]: r["split"] for r in stratified_split(df, val_size=0.25).collect()}
-    assert a == b
 
 
 def test_mix_sample_deterministic_and_calibrated(spark):

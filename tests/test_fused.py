@@ -19,10 +19,15 @@ def test_fused_equals_staged(spark):
         for p in generate_pages(200, sentences=3)
         for t in extract_triples(p["url"], extract_text(p["html"]), lex)
     ]
-    fast = fused.fused_triples(pages, lex, balance=False)
+    fast = fused.fused_triples(pages, lex)
     a = sorted(oracle)
     b = sorted(tuple(r) for r in fast.collect())
     assert a == b and len(a) > 0
+    # the Arrow stage reads its input partitions as they come: storage
+    # partitions are already compute-balanced, and a round-robin shuffle
+    # before it measurably hurt (BENCH/BASELINE.md r3)
+    plan = fast._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "MapInPandas" in plan, plan
 
 
 def test_fused_edge_inputs(spark):
@@ -33,7 +38,7 @@ def test_fused_edge_inputs(spark):
         ("u4", "<p>X</p>".encode(), "", "ru"),
     ]
     df = spark.createDataFrame(rows, "url string, html binary, text string, lang string")
-    out = fused.fused_triples(df, balance=False).collect()
+    out = fused.fused_triples(df).collect()
     urls = {r["url"] for r in out}
     assert "u1" not in urls and "u2" not in urls and "u3" not in urls
 
@@ -72,60 +77,17 @@ def test_batch_prob_cache_eviction_keeps_warm_keys(monkeypatch):
     assert out[0] == mp.final_mention_spans(warm + " " + cold_text)
 
 
-def test_fused_triples_and_log_matches_standalone(spark):
-    """One inference pass emits BOTH triple rows and S8 log rows; each half
-    is row-identical to its standalone operator (fused_triples /
-    operators.decision_log)."""
-    from pyspark.sql import functions as F
-
-    from x5_ner_spark.operators.decision_log import decision_log
-    from x5_ner_spark.pipeline import fused
-
-    lex = frozenset({"барни", "santa"})
-    texts = [
-        "молоко простоквашино 3.2% две упаковки",
-        "сок santa затем хлеб барни",
-        "greenfield чай 100 пакетиков",
-        "вода 1 л",
-    ]
-    pages = spark.createDataFrame(
-        [(f"https://s/{i}", None, t) for i, t in enumerate(texts)],
-        "url string, html binary, text string",
-    )
-    combined = fused.fused_triples_and_log(pages, lex).persist()
-    trip, log = fused.split_triples_and_log(combined)
-
-    want_trip = sorted(tuple(r) for r in fused.fused_triples(pages, lex).collect())
-    assert sorted(tuple(r) for r in trip.collect()) == want_trip and want_trip
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want_log = sorted(
-        (f"https://s/{r['doc_id']}",) + tuple(r)[1:]
-        for r in decision_log(docs, lex).collect()
-    )
-    got_log = sorted(tuple(r) for r in log.collect())
-    assert got_log == want_log and len(want_log) > 10
-    combined.unpersist()
-
-
 def test_bad_inference_arguments_fail_at_plan_build(spark):
     """A bad ``decode`` or ``long_doc`` is refused when the plan is built,
     by every inference entry point, and without a checkpoint (the chunked
     wrapper that also checks ``long_doc`` only runs on a provider)."""
     from x5_ner_spark.operators.decision_log import decision_log
-    from x5_ner_spark.operators.span_udfs import make_mentions_udf
 
     pages = pages_df(spark, 5)
     docs = spark.createDataFrame([(1, "молоко")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="decode"):
-        make_mentions_udf(decode="viterbi")
-    with pytest.raises(ValueError, match="long_doc"):
-        make_mentions_udf(long_doc="windowd")
     with pytest.raises(ValueError, match="long_doc"):
         fused.fused_triples(pages, long_doc="windowd")
-    with pytest.raises(ValueError, match="long_doc"):
-        fused.fused_triples_and_log(pages, long_doc="windowd")
+    with pytest.raises(ValueError, match="decode"):
+        decision_log(docs, decode="viterbi")
     with pytest.raises(ValueError, match="long_doc"):
         decision_log(docs, long_doc="windowd")

@@ -232,23 +232,3 @@ def test_numeric_profile_approx_rank_error_bound(spark):
                 hi_q = hi / n
                 assert lo_q <= q + eps and hi_q >= q - eps, (
                     g, col, accuracy, v, lo, hi, n)
-
-
-# --------------------------------------------------- balance (fused stage)
-
-
-def test_balance_flag_controls_roundrobin_shuffle(spark):
-    """balance=False (default) must feed the Arrow stage straight from the
-    scan — NO exchange before mapInPandas (storage partitions are already
-    compute-balanced; the shuffle measurably hurt: BENCH/BASELINE.md r3).
-    balance=True must insert a round-robin repartition for compute-skewed
-    upstreams."""
-    from x5_ner_spark.pipeline.fixtures import pages_df
-    from x5_ner_spark.pipeline.fused import fused_triples
-
-    pages = pages_df(spark, 50)
-    plain = fused_triples(pages)._jdf.queryExecution().executedPlan().toString()
-    balanced = fused_triples(pages, balance=True, num_partitions=8)
-    bplan = balanced._jdf.queryExecution().executedPlan().toString()
-    assert "ROUND_ROBIN" not in plain.upper() and "RoundRobin" not in plain
-    assert "ROUND_ROBIN" in bplan.upper() or "RoundRobin" in bplan

@@ -9,6 +9,24 @@ from pyspark.sql import functions as F
 from x5_ner_spark import obs
 
 
+def hub_edges_df(spark, n_nodes: int = 4096, hub_share: float = 0.1):
+    """Entity-similarity edge list with HUB SKEW (SURVEY §7.4(5)): node 0
+    carries ~``hub_share`` of all edges — the popular-brand/domain shape the
+    north rule calls out — over a ring backbone (long diameter, so CC can't
+    converge by luck; the hub's star shortcuts are what keep rounds
+    O(log n)). Deterministic, distributed generation (spark.range)."""
+    ring = spark.range(n_nodes - 1).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    n_hub = max(int(n_nodes * hub_share / (1.0 - hub_share)), 1)
+    stride = max(n_nodes // n_hub, 1)
+    hub = spark.range(n_hub).select(
+        F.lit(0).cast("long").alias("src"),
+        (1 + F.col("id") * stride).alias("dst"),
+    ).filter(F.col("dst") < n_nodes)
+    return ring.unionByName(hub)
+
+
 def test_pipeline_components_nontrivial(spark):
     """Ambiguous aliases must produce similarity edges → non-empty components."""
     from x5_ner_spark.pipeline.fixtures import pages_df
@@ -34,19 +52,6 @@ def test_plan_guards(spark, sf_dir):
 
     plan3 = m.q_kg_mentions_by_pred(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan3
-
-
-def test_lead_prefix_scalable_matches_global(spark, sf_dir):
-    from x5_ner_spark.operators import windows as W
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    simple = W.lead_prefix_flags(docs).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("prefix_match").alias("m")
-    ).first()
-    scalable = W.lead_prefix_flags_scalable(docs, num_partitions=7).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("prefix_match").alias("m")
-    ).first()
-    assert (simple["n"], simple["m"]) == (scalable["n"], scalable["m"])
 
 
 def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
@@ -115,17 +120,6 @@ def test_embedding_near_dups_recall(spark):
     assert len(lsh & bf) / len(bf) >= 0.9, (len(lsh & bf), len(bf))
 
 
-def test_zip_join_scalable_matches_global(spark, sf_dir):
-    from x5_ner_spark.operators import windows as W
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
-    b = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
-    plain = sorted(tuple(r) for r in W.zip_join(a, b, ["text", "doc_id"], "text").collect())
-    scal = sorted(tuple(r) for r in W.zip_join_scalable(a, b, ["text", "doc_id"], "text", num_partitions=7).collect())
-    assert plain == scal and len(plain) > 0
-
-
 def test_map_only_operators_have_no_exchange(spark, sf_dir):
     """scrub_pii and decision_log are pure map work: any Exchange in their
     plans is a regression (at 100 TB these run inside the scan stage)."""
@@ -153,24 +147,6 @@ def test_ivf_refined_recall_not_worse(spark, sf_dir):
     c1 = similarity.ivf_refine_centroids(emb, cents0, 1)
     c2 = similarity.ivf_refine_centroids(emb, cents0, 1)
     assert c1 == c2
-
-
-def test_lead_prefix_scalable_empty_partitions(spark):
-    """num_partitions ≫ rows: repartitionByRange leaves most partitions
-    EMPTY — the boundary stitch must follow the global order of non-empty
-    pids, not pid-1 arithmetic (which silently drops a partition's last row
-    whenever its successor partition is empty)."""
-    from x5_ner_spark.operators import windows as W
-
-    rows = [(i, f"doc {chr(97 + i)} text") for i in range(10)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    plain = sorted(tuple(r) for r in W.lead_prefix_flags(docs).collect())
-    for n in (16, 64):
-        scal = sorted(
-            tuple(r)
-            for r in W.lead_prefix_flags_scalable(docs, num_partitions=n).collect()
-        )
-        assert scal == plain and len(plain) == 9, (n, len(scal))
 
 
 def test_near_dup_clusters_lsh_recall_vs_exact(spark):
@@ -231,7 +207,6 @@ def test_cc_hub_skew_rounds_and_salted_path(spark, monkeypatch):
     import math
 
     from x5_ner_spark.pipeline import canonicalize
-    from x5_ner_spark.pipeline.fixtures import hub_edges_df
 
     n = 4096
     edges = hub_edges_df(spark, n, hub_share=0.1)
@@ -270,7 +245,6 @@ def test_iterative_loops_release_superseded_blocks(spark, monkeypatch):
     small constant (the live frontier), not grow with round count."""
     from x5_ner_spark.operators.graph_ops import pagerank
     from x5_ner_spark.pipeline import canonicalize
-    from x5_ner_spark.pipeline.fixtures import hub_edges_df
 
     sc = spark.sparkContext
 

@@ -1,97 +1,23 @@
-"""Spark operator tests: lexicon round-trip, native span algebra vs the
-pure-Python core, windowed BIO merge, span serialization."""
+"""Spark operator tests: the lexicon reader, stage writes and resume,
+dedup, text filters, graph and window operators, each against a
+pure-Python expectation."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from x5_ner_spark.core.spans import merge_bio_typed, serialize_spans
-from x5_ner_spark.operators import span_native
-from x5_ner_spark.operators.span_udfs import SPAN_ARRAY
 from x5_ner_spark.sources import lexicon
 
 
 def test_lexicon_roundtrip(spark, tmp_path):
-    p = str(tmp_path / "lex")
-    freqs = spark.createDataFrame(
-        [("молоко", 10), ("сок", 10), ("агуша", 3)], "term string, freq long"
-    )
-    lexicon.write_lexicon(freqs, p)
-    assert lexicon.read_lexicon_set(spark, p) == {"молоко", "сок", "агуша"}
-    # frequency-ordered, term tiebreak
-    lines = [r["term"] for r in lexicon.read_lexicon(spark, p).collect()]
+    """A frequency-ordered lexicon file reads back in file order, trimmed,
+    without blank lines."""
+    p = tmp_path / "lex.txt"
+    p.write_text("молоко\n  сок \n\n   \nагуша\n", encoding="utf-8")
+    assert lexicon.read_lexicon_set(spark, str(p)) == {"молоко", "сок", "агуша"}
+    lines = [r["term"] for r in lexicon.read_lexicon(spark, str(p)).collect()]
     assert lines == ["молоко", "сок", "агуша"]
-
-
-def test_native_span_algebra(spark):
-    spans = [
-        {"start": 7, "end": 11, "tag": "B-PERCENT"},
-        {"start": 0, "end": 6, "tag": "B-TYPE"},
-        {"start": 0, "end": 6, "tag": "B-TYPE"},
-        {"start": 12, "end": 13, "tag": "O"},
-    ]
-    df = spark.createDataFrame([(1, spans)], f"doc_id long, spans {SPAN_ARRAY.simpleString()}")
-    out = df.select(
-        span_native.has_tag_suffix("spans", "PERCENT").alias("has_pct"),
-        F.size(span_native.drop_tag("spans", "O")).alias("n_non_o"),
-        span_native.span_length_sum("spans", "TYPE").alias("type_len"),
-        span_native.sorted_distinct("spans").alias("sd"),
-    ).first()
-    assert out["has_pct"] is True
-    assert out["n_non_o"] == 3
-    assert out["type_len"] == 12  # two identical TYPE spans pre-distinct
-    sd = [(s["start"], s["end"], s["tag"]) for s in out["sd"]]
-    assert sd == [(0, 6, "B-TYPE"), (7, 11, "B-PERCENT"), (12, 13, "O")]
-
-
-DISJOINT_SPAN_SETS = [
-    [(0, 5, "B-TYPE"), (6, 10, "I-TYPE")],
-    [(0, 5, "B-TYPE"), (5, 10, "I-TYPE"), (11, 12, "O"), (13, 15, "I-BRAND")],
-    [(0, 3, "B-PERCENT"), (4, 6, "I-PERCENT"), (7, 9, "B-PERCENT")],
-    [(0, 2, "O"), (3, 5, "O")],
-    [],
-    [(2, 4, "I-TYPE")],
-    [(0, 4, "B-TYPE"), (5, 9, "B-TYPE"), (10, 14, "I-TYPE")],
-]
-
-
-def test_bio_merge_windowed_matches_core(spark):
-    rows = [
-        (i, [{"start": s, "end": e, "tag": t} for s, e, t in spans])
-        for i, spans in enumerate(DISJOINT_SPAN_SETS)
-    ]
-    df = spark.createDataFrame(rows, f"doc_id long, spans {SPAN_ARRAY.simpleString()}")
-    exploded = span_native.explode_spans(df)
-    got = span_native.bio_merge_windowed(exploded).collect()
-    got_by_doc: dict[int, set] = {}
-    for r in got:
-        got_by_doc.setdefault(r["doc_id"], set()).add((r["etype"], r["start"], r["end"]))
-    for i, spans in enumerate(DISJOINT_SPAN_SETS):
-        want = merge_bio_typed(list(spans))
-        assert got_by_doc.get(i, set()) == want, (i, spans)
-
-
-def test_serialize_udf_matches_core(spark):
-    spans = [{"start": 7, "end": 11, "tag": "B-PERCENT"}, {"start": 0, "end": 6, "tag": "B-TYPE"}]
-    from x5_ner_spark.operators.span_udfs import serialize_spans_udf
-
-    df = spark.createDataFrame([(spans,)], f"spans {SPAN_ARRAY.simpleString()}")
-    got = df.select(serialize_spans_udf("spans").alias("s")).first()["s"]
-    assert got == serialize_spans([(7, 11, "B-PERCENT"), (0, 6, "B-TYPE")])
-
-
-def test_overwrite_spans_for_keys(spark):
-    subs = spark.createDataFrame(
-        [("молоко 1%", [{"start": 0, "end": 6, "tag": "B-TYPE"}]),
-         ("сок", [{"start": 0, "end": 3, "tag": "B-TYPE"}])],
-        f"sample string, spans {SPAN_ARRAY.simpleString()}",
-    )
-    rules = spark.createDataFrame([("молоко 1%",)], "sample string")
-    out = {r["sample"]: [(s["start"], s["end"], s["tag"]) for s in r["spans"]]
-           for r in span_native.overwrite_spans_for_keys(subs, rules).collect()}
-    assert out["молоко 1%"] == [(0, 9, "O")]
-    assert out["сок"] == [(0, 3, "B-TYPE")]
 
 
 def _manifest_files(root: str) -> list[str]:

@@ -9,8 +9,11 @@ from pyspark.sql import functions as F
 
 from x5_ner_spark import obs
 from x5_ner_spark.core.html_text import extract_text
-from x5_ner_spark.core.mention_pipeline import extract_triples, final_mention_spans
-from x5_ner_spark.operators.span_udfs import make_mentions_udf
+from x5_ner_spark.core.mention_pipeline import (
+    extract_triples,
+    final_mention_spans,
+    triples_from_spans,
+)
 from x5_ner_spark.pipeline import canonicalize, extract, fused, graph
 from x5_ner_spark.pipeline.fixtures import BRANDS, generate_pages, pages_df
 from x5_ner_spark.pipeline.runner import run_pipeline
@@ -42,20 +45,21 @@ def test_extract_byte_identity(spark, pages):
 
 
 def test_mentions_match_oracle_exactly(spark, pages):
-    docs = extract.run(pages)
-    lex = [b for b in BRANDS]
-    men = docs.withColumn("spans", make_mentions_udf(frozenset(lex))(F.col("text")))
-    rows = men.select("url", "text", "spans").collect()
-    lexset = frozenset(lex)
+    """Every page's triples from the fused stage are those of its spans
+    under the driver-side mention detector, duplicates included."""
+    lexset = frozenset(BRANDS)
     lexlist = sorted(lexset)
+    got = sorted(tuple(r) for r in fused.fused_triples(pages, lexset).collect())
+    rows = extract.run(pages).select("url", "text").collect()
     assert len(rows) == N
-    mismatches = 0
-    for r in rows:
-        got = [(s["start"], s["end"], s["tag"]) for s in r["spans"]]
-        want = final_mention_spans(r["text"], lexset, lexlist)
-        if got != want:
-            mismatches += 1
-    assert mismatches == 0
+    want = sorted(
+        (*t, r["url"])
+        for r in rows
+        for t in triples_from_spans(
+            r["url"], r["text"], final_mention_spans(r["text"], lexset, lexlist)
+        )
+    )
+    assert got == want and len(want) > N
 
 
 def test_triples_pr_gate(spark, pages):

@@ -8,10 +8,10 @@ Brand-new implementation of the query semantics of the reference repo
                   pytest oracle — no Spark imports.
 - ``functions``  native Column builders (normalization, hashing, vectors).
 - ``operators``  DataFrame-level operators (windows, dedup, similarity,
-                  fuzzy joins, text stats, span UDFs).
+                  fuzzy joins, text stats, decision log, trainers).
 - ``pipeline``   the KG-construction DAG: pages → text → mentions →
                   candidates → links → triples → canonical graph.
-- ``sources``    lexicon text reader/writer and the YAML pipeline config.
+- ``sources``    lexicon text reader and the YAML pipeline config.
 """
 
 __version__ = "0.1.0"

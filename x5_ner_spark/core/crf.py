@@ -53,9 +53,9 @@ def mle_crf_params(
     transition estimator an HMM/CRF decode consumes. This is deliberately
     NOT gradient CRF training (the reference trains torch CRF NLL end to end
     with the encoder, train.py:52-62 — out of engine scope per SURVEY §2.11);
-    it is the distributed-friendly piece: the counts come from one groupBy
-    over (prev_tag, tag) pairs (operators/crf_train.py), and the result plugs
-    into viterbi_decode unchanged."""
+    it is the distributed-friendly piece: the counts are one bigram count
+    over (prev_tag, tag) pairs, and the result plugs into viterbi_decode
+    unchanged."""
     start_c = np.full(num_labels, smoothing)
     end_c = np.full(num_labels, smoothing)
     trans_c = np.full((num_labels, num_labels), smoothing)

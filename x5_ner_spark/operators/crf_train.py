@@ -1,65 +1,14 @@
-"""Distributed CRF transition estimation (N4-adjacent).
-
-One aggregation job turns a labeled corpus (doc_id, tags: array<int>) into
-the (start, trans, end) log-probability parameters ``core.crf.viterbi_decode``
-consumes: bigram counts via a single posexplode + groupBy (map-side combine;
-the count table is num_labels² rows, collected to the driver like any model
-artifact). Gradient CRF training (torch NLL with the encoder, reference
-train.py:52-62) stays out of engine scope — this is the closed-form
-add-k-smoothed MLE over tag sequences, byte-equal to the pure-Python
-``core.crf.mle_crf_params`` (differential-tested).
+"""Distributed CRF Viterbi decode over the pinned stub model (N3/N4 decode
+surface): one map-only Arrow stage per documents scan, the engine side of
+the driver-contract query whose DuckDB oracle unrolls a bounded-T Viterbi.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.spans import BIO_TAGS
-
-
-def fit_crf_transitions(
-    tagged: DataFrame, tags_col: str = "tags",
-    num_labels: int = len(BIO_TAGS), smoothing: float = 1.0,
-):
-    """(doc_id, tags array<int>) → (start, trans, end) log-prob arrays."""
-    seqs = tagged.filter(F.size(tags_col) > 0)
-    bigrams = (
-        seqs.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(tags_col, 1, F.size(tags_col) - 1),
-                    F.slice(tags_col, 2, F.size(tags_col) - 1),
-                    lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                )
-            ).alias("bg")
-        )
-        .groupBy("bg.a", "bg.b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    firsts = (
-        seqs.groupBy(F.element_at(tags_col, 1).alias("t"))
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    lasts = (
-        seqs.groupBy(F.element_at(tags_col, -1).alias("t"))
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    start_c = np.full(num_labels, smoothing)
-    end_c = np.full(num_labels, smoothing)
-    trans_c = np.full((num_labels, num_labels), smoothing)
-    for r in firsts:
-        start_c[int(r["t"])] += r["n"]
-    for r in lasts:
-        end_c[int(r["t"])] += r["n"]
-    for r in bigrams:
-        trans_c[int(r["a"]), int(r["b"])] += r["n"]
-    start = np.log(start_c / start_c.sum())
-    end = np.log(end_c / end_c.sum())
-    trans = np.log(trans_c / trans_c.sum(axis=1, keepdims=True))
-    return start, trans, end
 
 
 CRF_DECODE_SCHEMA = "doc_id long, wid int, token_text string, label string"
@@ -88,7 +37,6 @@ def crf_decode_tokens(
 
     from ..core.crf import stub_crf_params, viterbi_decode_batch
     from ..core.numeric import tokenize_with_offsets
-    from ..core.spans import BIO_TAGS as TAGS
     from ..core.stub_model import batch_probabilities
     from ..core.textnorm import norm_token_simple
 
@@ -112,7 +60,7 @@ def crf_decode_tokens(
             rows = []
             for did, toks, path in zip(ids, toks_per_doc, paths):
                 for wid, ((w, _, _), lab) in enumerate(zip(toks, path)):
-                    rows.append((did, wid, w, TAGS[lab]))
+                    rows.append((did, wid, w, BIO_TAGS[lab]))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "wid", "token_text", "label"]
             )

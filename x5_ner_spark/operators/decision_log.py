@@ -24,18 +24,16 @@ from pyspark.sql import functions as F
 
 from ..core.mention_pipeline import mention_detector
 
-# the 15 per-word fields of a decision-log record, in schema order
-LOG_FIELDS_DDL = (
-    "token_text string, start int, end int, label string, reason string, "
-    "p_brand double, p_type double, in_lex boolean, fuzzy_hit boolean, "
-    "pure_lat boolean, short_lat boolean, has_vowel boolean, "
-    "p_brand_sum double, p_type_sum double, p_o double"
+# one row per decided word: doc_id, then the 15 fields of its log record
+LOG_SCHEMA = (
+    "doc_id long, token_text string, start int, end int, label string, "
+    "reason string, p_brand double, p_type double, in_lex boolean, "
+    "fuzzy_hit boolean, pure_lat boolean, short_lat boolean, "
+    "has_vowel boolean, p_brand_sum double, p_type_sum double, p_o double"
 )
-LOG_FIELDS = [f.split(" ")[0] for f in LOG_FIELDS_DDL.split(", ")]
-LOG_COLUMNS = ["doc_id", *LOG_FIELDS]
-LOG_SCHEMA = "doc_id long, " + LOG_FIELDS_DDL
-# record dict → the tuple of its LOG_FIELDS values
-log_values = itemgetter(*LOG_FIELDS)
+LOG_COLUMNS = [f.split(" ")[0] for f in LOG_SCHEMA.split(", ")]
+# record dict → the tuple of its field values, in schema order
+log_values = itemgetter(*LOG_COLUMNS[1:])
 
 
 def decision_log(
@@ -52,7 +50,7 @@ def decision_log(
     be a frozenset or a ``sparkContext.broadcast`` handle. ``emission_npz``
     swaps the emission model for a weights-on-disk checkpoint
     (core/emission.py) so the log reflects the DEPLOYED model's
-    probabilities, consistent with make_mentions_udf / fused_triples.
+    probabilities, consistent with fused_triples.
 
     ``decode='crf'`` logs the Viterbi decoder instead of the rule cascade
     (VERDICT r7 #6): same schema, ``reason='crf_viterbi'``, lexicon flags
@@ -82,34 +80,3 @@ def decision_log(
         F.col(text_col).alias("_log_text"),
     )
     return keyed.mapInPandas(gen, LOG_SCHEMA)
-
-
-def write_decision_log_csv(log: DataFrame, path: str, error_col: str | None = None) -> None:
-    """Write the log as the reference's ;-CSV artifact
-    (make_submission_from_val.py:85-107: 17 data columns incl. 'error', plus
-    a leading positional index from pandas' to_csv(index=True) — replicated
-    here as a row number in EMISSION order: (doc_id, start, end) when the
-    log carries doc_id — numeric, so doc 10 sorts after doc 2, matching the
-    reference's pandas index — else (text, start, end); bools/floats
-    serialized to the reference's literal forms). Round-trip tested against
-    core ``serialize_log_row`` lines (tests/test_decision_log.py)."""
-    from pyspark.sql import Window
-
-    cols = ["text", *LOG_FIELDS, "error"]
-    df = log
-    order_first = F.col("doc_id") if "doc_id" in df.columns else F.col("text")
-    if "text" not in df.columns:
-        df = df.withColumn("text", F.col("doc_id").cast("string"))
-    if "error" not in df.columns:
-        df = df.withColumn(
-            "error", F.col(error_col).cast("string") if error_col else F.lit("0")
-        )
-    for b in ("in_lex", "fuzzy_hit", "pure_lat", "short_lat", "has_vowel"):
-        df = df.withColumn(b, F.when(F.col(b), "True").otherwise("False"))
-    for p in ("p_brand", "p_type", "p_brand_sum", "p_type_sum", "p_o"):
-        df = df.withColumn(p, F.format_number(F.col(p).cast("double"), 3))
-    w = Window.orderBy(order_first, "start", "end")
-    out = df.withColumn("", F.row_number().over(w) - 1).select("", *cols)
-    out.coalesce(1).write.mode("overwrite").option("sep", ";").option(
-        "header", True
-    ).csv(path)

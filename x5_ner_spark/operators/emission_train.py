@@ -131,8 +131,8 @@ def fit_crf_npz(
     the shared gradient pass (forward-backward per sequence, chain rule
     through the MLP via core.emission.mlp_backward), driver update, weights
     rebroadcast by closure. Saves an npz holding BOTH the provider weights and the CRF
-    parameters (load via :func:`load_crf_params_npz` for
-    ``crf_mention_spans_batch``)."""
+    parameters (its ``crf_start``, ``crf_trans`` and ``crf_end`` arrays
+    feed ``crf_mention_spans_batch``)."""
     from ..core.crf import crf_nll_and_grads
     from ..core.spans import BIO_TAGS
 
@@ -186,13 +186,6 @@ def fit_crf_npz(
     )
     # np.savez appends '.npz' when missing - return the ACTUAL file path
     return out_path if out_path.endswith(".npz") else out_path + ".npz"
-
-
-def load_crf_params_npz(path: str):
-    """(start, trans, end) from a fit_crf_npz checkpoint — the tuple
-    ``crf_mention_spans_batch`` / ``viterbi_decode_batch`` consume."""
-    with np.load(path) as z:
-        return z["crf_start"], z["crf_trans"], z["crf_end"]
 
 
 def fit_npz_emission(

@@ -64,53 +64,7 @@ def prf_metrics(counters: DataFrame, type_col: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- E2-E4
-
-def char_label_diff(
-    docs: DataFrame, gold_col: str = "gold_spans", pred_col: str = "pred_spans",
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """E2 (ref scripts/eval_preproc_val.py:42-141): project both span sets to
-    per-char entity-type labels, then emit mismatch RANGES per document
-    (gaps-and-islands over the mismatching char positions).
-
-    Fully native: sequence→explode for the char axis; first covering span's
-    type via filter+element_at (spans disjoint); islands via row_number
-    difference. Scales: the char explosion is bounded per doc and partitions
-    by doc id."""
-    from pyspark.sql import Window
-
-    def label_at(spans_col: str):
-        covering = F.filter(
-            F.col(spans_col),
-            lambda s: (s["start"] <= F.col("i")) & (F.col("i") < s["end"]) & (s["tag"] != "O"),
-        )
-        return F.when(
-            F.size(covering) > 0,
-            F.substring_index(F.element_at(covering, 1)["tag"], "-", -1),
-        ).otherwise(F.lit(""))
-
-    chars = docs.select(
-        id_col, gold_col, pred_col,
-        F.explode(F.sequence(F.lit(0), F.length(text_col) - 1)).alias("i"),
-    )
-    labeled = chars.select(
-        id_col, "i",
-        label_at(gold_col).alias("g"),
-        label_at(pred_col).alias("p"),
-    ).filter(F.col("g") != F.col("p"))
-    w = Window.partitionBy(id_col).orderBy("i")
-    isl = labeled.withColumn("rn", F.row_number().over(w)).withColumn(
-        "grp", F.col("i") - F.col("rn")
-    )
-    return (
-        isl.groupBy(id_col, "grp", "g", "p")
-        .agg(F.min("i").alias("start"), (F.max("i") + 1).alias("end"))
-        .drop("grp")
-        .withColumnRenamed("g", "gold_label")
-        .withColumnRenamed("p", "pred_label")
-    )
-
+# ---------------------------------------------------------------- E3
 
 def error_buckets(
     gold_ents: DataFrame, pred_ents: DataFrame, id_col: str = "doc_id",
@@ -154,21 +108,3 @@ def error_buckets(
                   F.col("pt").alias("etype")))
     return (exact.unionByName(swap).unionByName(shift).unionByName(fn).unionByName(fp)
             .groupBy("bucket", "etype").agg(F.count(F.lit(1)).alias("n")))
-
-
-def compare_submissions(a: DataFrame, b: DataFrame, key: str = "sample") -> DataFrame:
-    """E4 (ref scripts/compare_submissions.py:20-33): order-insensitive
-    annotation equality per key + overall identity stats. Inputs carry a
-    'spans' array column; comparison is on sorted-distinct span sets."""
-    from .span_native import sorted_distinct
-
-    aa = a.select(F.col(key), sorted_distinct("spans").alias("sa"))
-    bb = b.select(F.col(key), sorted_distinct("spans").alias("sb"))
-    j = aa.join(bb, key, "full_outer").select(
-        key,
-        F.when(F.col("sa").isNull() | F.col("sb").isNull(), F.lit("missing"))
-        .when(F.col("sa") == F.col("sb"), F.lit("identical"))
-        .otherwise(F.lit("different"))
-        .alias("status"),
-    )
-    return j.groupBy("status").agg(F.count(F.lit(1)).alias("n"))

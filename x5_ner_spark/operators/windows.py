@@ -4,9 +4,7 @@ lag-conditioned zeroing (W7 analog) — all native window functions.
 
 Scale note: every window here partitions by a bounded key (user_id) except
 the explicitly-global W1/J6 operators, which the reference defines over a
-total order (update_rules.py:33-48). For W1 the distributed form is
-``lead_prefix_flags_scalable`` (range partitions + boundary stitching);
-the plain form is kept for oracle parity.
+total order (update_rules.py:33-48).
 """
 
 from __future__ import annotations
@@ -160,90 +158,3 @@ def asof_join(
     for old, new in {**renames, "_asof_ts": "asof_ts"}.items():
         out = out.withColumnRenamed(old, new)
     return out
-
-
-def zip_join_scalable(
-    a: DataFrame, b: DataFrame, order_cols: list[str], compare_col: str,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """J6 at scale: ``zip_join``'s global row_number executes on a single
-    partition. Here each side gets global positions from range partitions —
-    per-partition row_number plus a broadcast offset table built from the
-    per-partition counts (num_partitions rows; the only single-partition
-    window runs over THAT tiny table). The final equi-join shuffles on rn
-    like any key join. Output is identical to zip_join (equivalence-tested):
-    global position in the (order_cols) total order is partition-layout-
-    independent."""
-    def with_rn(df: DataFrame) -> DataFrame:
-        base = df.repartitionByRange(num_partitions, *order_cols)
-        part = base.withColumn("pid", F.spark_partition_id())
-        w = Window.partitionBy("pid").orderBy(*order_cols)
-        local = part.withColumn("lrn", F.row_number().over(w))
-        counts = local.groupBy("pid").agg(F.max("lrn").alias("cnt"))
-        wc = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = counts.withColumn("off", F.coalesce(F.sum("cnt").over(wc), F.lit(0)))
-        return local.join(F.broadcast(offsets.select("pid", "off")), "pid").withColumn(
-            "rn", F.col("lrn") + F.col("off")
-        )
-
-    aa = with_rn(a).select("rn", F.col(compare_col).alias("left_val"))
-    bb = with_rn(b).select("rn", F.col(compare_col).alias("right_val"))
-    return aa.join(bb, "rn").withColumn(
-        "equal", (F.col("left_val") == F.col("right_val")).cast("int")
-    )
-
-
-def lead_prefix_flags_scalable(
-    docs: DataFrame, prefix_len: int = 3, num_partitions: int = 32
-) -> DataFrame:
-    """W1 at scale. ``lead_prefix_flags`` uses a global-order window, which
-    Spark executes on a SINGLE partition — correct, but a 100 TB red flag.
-
-    Scalable form: range-partition by the sort key, lead WITHIN each range
-    partition, then stitch the partition boundaries with the (tiny) table of
-    per-partition first rows joined back to each partition's last row. Only
-    the boundary table (num_partitions rows) is shuffled twice.
-
-    Boundary-stitch correctness under EMPTY partitions: repartitionByRange
-    can produce more partitions than distinct key ranges, so partition p's
-    successor row may live in p+2 (p+1 empty). The stitch table is therefore
-    built from the global order of NON-EMPTY pids — ``lead(first_text) over
-    (orderBy pid)`` on the tiny per-partition-firsts summary — never from
-    ``pid - 1`` arithmetic (which would silently drop p's last row whenever
-    p+1 is empty). Equivalence-tested vs the plain form at
-    num_partitions ≫ rows.
-    """
-    base = docs.select("doc_id", "text").repartitionByRange(
-        num_partitions, "text", "doc_id"
-    )
-    part = base.withColumn("pid", F.spark_partition_id())
-    w = Window.partitionBy("pid").orderBy("text", "doc_id")
-    led = part.withColumn("next_text", F.lead("text").over(w)).withColumn(
-        "rn_desc", F.row_number().over(
-            Window.partitionBy("pid").orderBy(F.desc("text"), F.desc("doc_id"))
-        )
-    )
-    firsts = (
-        part.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pid", F.col("text").alias("first_text"))
-    )
-    # tiny table (≤ num_partitions rows): single-partition window is fine
-    stitch = firsts.withColumn(
-        "first_next", F.lead("first_text").over(Window.orderBy("pid"))
-    ).select("pid", "first_next")
-    stitched = led.join(F.broadcast(stitch), "pid", "left").withColumn(
-        "next_text",
-        F.when(F.col("rn_desc") == 1, F.col("first_next")).otherwise(F.col("next_text")),
-    )
-    return (
-        stitched.filter(F.col("next_text").isNotNull())
-        .withColumn(
-            "prefix_match",
-            (
-                F.substring("text", 1, prefix_len)
-                == F.substring("next_text", 1, prefix_len)
-            ).cast("int"),
-        )
-        .select("doc_id", "prefix_match")
-    )

@@ -11,10 +11,23 @@ prunes the rest); rows whose ``text`` is already populated skip the UDF via
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.types import StringType
 
-from ..operators.span_udfs import extract_text_udf
+from ..core.html_text import extract_text
+
+
+@pandas_udf(StringType())
+def extract_text_udf(html: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    """html binary → text (pure, pinned; core/html_text.py). Iterator-style:
+    one Python-worker set-up per partition, Arrow batch transfer."""
+    for batch in html:
+        yield batch.map(extract_text)
 
 
 def run(pages: DataFrame) -> DataFrame:

@@ -89,26 +89,6 @@ def generate_pages(n: int, seed: int = 42, sentences: int = 1) -> list[dict]:
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def hub_edges_df(spark, n_nodes: int = 4096, hub_share: float = 0.1):
-    """Entity-similarity edge list with HUB SKEW (SURVEY §7.4(5)): node 0
-    carries ~``hub_share`` of all edges — the popular-brand/domain shape the
-    north rule calls out — over a ring backbone (long diameter, so CC can't
-    converge by luck; the hub's star shortcuts are what keep rounds
-    O(log n)). Deterministic, distributed generation (spark.range)."""
-    from pyspark.sql import functions as F
-
-    ring = spark.range(n_nodes - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    n_hub = max(int(n_nodes * hub_share / (1.0 - hub_share)), 1)
-    stride = max(n_nodes // n_hub, 1)
-    hub = spark.range(n_hub).select(
-        F.lit(0).cast("long").alias("src"),
-        (1 + F.col("id") * stride).alias("dst"),
-    ).filter(F.col("dst") < n_nodes)
-    return ring.unionByName(hub)
-
-
 def pages_df(spark, n: int, seed: int = 42, partitions: int | None = None, sentences: int = 1):
     """Distributed generation: the generator runs ON EXECUTORS via a range
     DataFrame + mapInPandas, so fixture creation itself scales (no driver-side

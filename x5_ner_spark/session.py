@@ -42,6 +42,8 @@ def get_spark(
         # ANSI off: reference semantics are lenient (malformed → null/[])
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # applies only when get_spark starts the JVM: under spark-submit the
+        # driver is already running, so pass --driver-memory there instead
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Python-worker transport over unix domain sockets (Spark 4.1):

@@ -20,7 +20,6 @@ DEFAULTS: dict[str, Any] = {
     "n_buckets": 8,
     "run_id": "run0",
     "brand_lexicon_path": None,  # lexicon file (sources/lexicon.py); None → fixtures
-    "decode": "cascade",         # 'cascade' | 'crf' (flag-gated Viterbi path)
 }
 
 

@@ -1,6 +1,5 @@
-"""S5: plain-text lexicon source/sink (one normalized term per line,
-frequency-ordered). Parity: ner/infer.py:62-68 (read),
-scripts/build_brand_lexicon.py:133-135 (write)."""
+"""S5: plain-text lexicon source (one normalized term per line,
+frequency-ordered). Parity: ner/infer.py:62-68."""
 
 from __future__ import annotations
 
@@ -20,10 +19,3 @@ def read_lexicon(spark: SparkSession, path: str) -> DataFrame:
 def read_lexicon_set(spark: SparkSession, path: str) -> frozenset[str]:
     """Driver-side set for broadcasting into the mention UDF."""
     return frozenset(r["term"] for r in read_lexicon(spark, path).collect())
-
-
-def write_lexicon(freqs: DataFrame, path: str) -> None:
-    """(term, freq) → frequency-ordered text file (deterministic tiebreak)."""
-    freqs.orderBy(F.desc("freq"), F.asc("term")).select("term").coalesce(1).write.mode(
-        "overwrite"
-    ).text(path)
