@@ -11,13 +11,14 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from x5_ner_spark.functions.columns import portable_hash32, simple_tokens_col
 from x5_ner_spark.functions.scan import scan_parallel
 from x5_ner_spark.operators import (
-    crf_train,
+    crf_decode,
     decision_log as decision_log_op,
     dedup,
     eval_ops,
@@ -60,7 +61,8 @@ def q_kg_mentions_by_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple emission → aggregate (S-scan, P1, J2, A1)."""
     docs = scan_parallel(_t(spark, sf_dir, "documents"))
     dic = spark.createDataFrame(
-        sorted(MENTION_DICT.items()), "term string, pred string"
+        pd.DataFrame(sorted(MENTION_DICT.items()), columns=["term", "pred"]),
+        "term string, pred string",
     )
     toks = docs.select(
         "doc_id", F.explode(simple_tokens_col(F.lower("text"))).alias("term")
@@ -121,7 +123,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: length-banded Levenshtein join of corpus tokens vs lexicon."""
     docs = scan_parallel(_t(spark, sf_dir, "documents"))
     lex = spark.createDataFrame(
-        [(t,) for t in sorted(MENTION_DICT)], "lex_term string"
+        pd.DataFrame({"lex_term": sorted(MENTION_DICT)}), "lex_term string"
     )
     toks = docs.select(
         F.explode(simple_tokens_col(F.lower("text"))).alias("token")
@@ -140,7 +142,10 @@ def q_range_join_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7 cross-row variant: interval join of events.value against bins."""
     ev = _t(spark, sf_dir, "events")
     bins = spark.createDataFrame(
-        [(0, 0.0, 5.0), (1, 5.0, 10.0), (2, 10.0, 15.0), (3, 15.0, 1e9)],
+        pd.DataFrame(
+            [(0, 0.0, 5.0), (1, 5.0, 10.0), (2, 10.0, 15.0), (3, 15.0, 1e9)],
+            columns=["bin_id", "lo", "hi"],
+        ),
         "bin_id int, lo double, hi double",
     )
     j = ev.join(
@@ -430,15 +435,13 @@ def q_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-profiling operator: per-group min/max/exact median/p90 (linear
     interpolation — order statistics, drift-free across engines) over
-    lineitem prices. exact=True (percentile(), sort-based per group) is
-    deliberate for the cross-engine hash; exact=False is the tested
-    approx_percentile 100× switch (operators/text_stats.numeric_profile)."""
+    lineitem prices (operators/text_stats.numeric_profile)."""
     from x5_ner_spark.operators.text_stats import numeric_profile
 
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "_price", F.col("l_extendedprice").cast("double")
     )
-    return numeric_profile(li, "l_returnflag", "_price", exact=True)
+    return numeric_profile(li, "l_returnflag", "_price")
 
 
 def q_error_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,7 +589,7 @@ MIX_FRACTIONS = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
 def q_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mix sampler: per-source deterministic hash-Bernoulli keep at
     pinned fractions; per-source kept counts (the mixture audit)."""
-    from x5_ner_spark.operators.split import mix_sample
+    from x5_ner_spark.operators.training_data import mix_sample
 
     kept = mix_sample(_t(spark, sf_dir, "documents"), MIX_FRACTIONS)
     return kept.groupBy("source").agg(
@@ -623,7 +626,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: per-source contiguous layout into 128-token
     budget-aligned training packs (deterministic greedy-contiguous)."""
-    from x5_ner_spark.operators.split import pack_documents
+    from x5_ner_spark.operators.training_data import pack_documents
 
     return pack_documents(_t(spark, sf_dir, "documents"), budget_tokens=128)
 
@@ -676,7 +679,7 @@ def q_crf_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax backpointers, masked carry for shorter docs, and the backtrack as
     chained CTEs (lateral-alias substitution would blow up exponentially)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    return crf_train.crf_decode_tokens(docs, t_max=8)
+    return crf_decode.crf_decode_tokens(docs, t_max=8)
 
 
 def q_decision_log(spark: SparkSession, sf_dir: str) -> DataFrame:

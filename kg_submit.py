@@ -8,6 +8,9 @@
 before ``session.get_spark`` runs, so its ``spark.driver.memory`` setting
 comes too late.
 
+Prints the committed row counts of the ``triples``, ``nodes`` and ``edges``
+stage tables, summed from their manifests.
+
 A top-level launcher is required because spark-submit executes the script as
 __main__ (no package context for relative imports); the package itself ships
 via --py-files.

@@ -14,17 +14,13 @@ Pinned here:
 - overlap resolution keeps the row from the window where the word is most
   interior, ties to the earlier window (the standard HF long-doc pattern);
 - results are a pure function of the text (batching-invariant);
-- the executor path (the decision-log Arrow stage, cascade and CRF) is
-  byte-identical to the driver-side oracle, and the decision surface
-  really does extend past the truncation point (log rows for words the
-  truncate path never decides);
-- CRF Viterbi composes with checkpoint providers, contextual ones included
-  (VERDICT r7 #6): emissions = log of the provider's per-word rows.
+- the executor path (the fused Arrow stage) emits exactly the driver-side
+  oracle's triples, and the decision surface really does extend past the
+  truncation point (triples for words the truncate path never decides).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from x5_ner_spark.core.chunked import ChunkedSeqProvider, _build_windows, maybe_chunked
@@ -181,123 +177,39 @@ def test_word_level_provider_passes_through(tmp_path):
         ChunkedSeqProvider(p)
 
 
-# ------------------------------------------------------------ CRF × ctx
-def test_crf_composes_with_ctx_provider(ctx_ckpt):
-    """VERDICT r7 #6: Viterbi over CONTEXTUAL emissions — the driver-side
-    numpy reference (log-prob emissions through viterbi_decode_batch) must
-    equal crf_mention_spans_batch(provider=ctx)."""
-    from x5_ner_spark.core.crf import stub_crf_params, viterbi_decode_batch
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.core.postprocess import postprocess
-    from x5_ner_spark.core.spans import BIO_TAGS
-
-    base = CtxTransformerProvider(ctx_ckpt)
-    texts = ["молоко кефир санта", "вода greenfield чай кефир", "", "   "]
-    got = crf_mention_spans_batch(texts, provider=base)
-
-    start, trans, end = stub_crf_params()
-    expect = []
-    for t in texts:
-        if not t.strip():
-            expect.append([])
-            continue
-        (wspans, probs), = base.word_probs_for_texts([t])
-        emis = np.log(np.clip(np.array(probs), 1e-12, None))
-        (path,) = viterbi_decode_batch([emis], start, trans, end)
-        raw = [(s, e, BIO_TAGS[i]) for (s, e), i in zip(wspans, path)]
-        expect.append(postprocess(t, raw) if raw else [])
-    assert got == expect
-
-
-def test_crf_composes_with_word_level_provider(tmp_path):
-    """Word-level checkpoint under CRF: emissions are log(batch probs)."""
-    from x5_ner_spark.core.crf import stub_crf_params, viterbi_decode_batch
-    from x5_ner_spark.core.emission import NpzMlpProvider, write_npz_checkpoint
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.core.postprocess import postprocess
-    from x5_ner_spark.core.spans import BIO_TAGS
-    from x5_ner_spark.core.textnorm import norm_token_simple
-
-    prov = NpzMlpProvider(write_npz_checkpoint(str(tmp_path / "mlp.npz")))
-    t = "молоко простоквашино 3,2% кефир"
-    (got,) = crf_mention_spans_batch([t], provider=prov)
-
-    toks = tokenize_with_offsets(t)
-    keys = [(norm_token_simple(w), i > 0) for i, (w, _, _) in enumerate(toks)]
-    emis = np.log(np.clip(np.asarray(prov.batch_probabilities(keys)), 1e-12, None))
-    start, trans, end = stub_crf_params()
-    (path,) = viterbi_decode_batch([emis], start, trans, end)
-    raw = [(s, e, BIO_TAGS[i]) for (_, s, e), i in zip(toks, path)]
-    assert got == (postprocess(t, raw) if raw else [])
-
-
-def test_crf_default_path_unchanged(ctx_ckpt):
-    """provider=None must stay byte-identical to the historical stub path."""
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-
-    texts = ["молоко кефир", "вода 1 л santa"]
-    assert crf_mention_spans_batch(texts) == crf_mention_spans_batch(
-        texts, provider=None
-    )
-
-
 # ------------------------------------------------------------- executor
 def test_fused_windowed_executor_equals_oracle(spark, ctx_ckpt):
-    """End-to-end under Spark: the Arrow decision-log stage with
-    long_doc='windowed' must be byte-identical to the driver-side oracle,
-    and must DECIDE words past the truncation point (more log rows than the
+    """End-to-end under Spark: the fused Arrow stage with
+    long_doc='windowed' must emit exactly the triples of the driver-side
+    oracle, and must emit triples past the truncation point (more than the
     truncate path)."""
-    from x5_ner_spark.core.mention_pipeline import final_mention_spans_batch
-    from x5_ner_spark.operators.decision_log import decision_log
+    from collections import Counter
+
+    from x5_ner_spark.core.mention_pipeline import (
+        final_mention_spans_batch,
+        triples_from_spans,
+    )
+    from x5_ner_spark.pipeline.fused import fused_triples
 
     texts = [words_text(400), "молоко кефир санта", words_text(260)]
-    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    urls = [f"u{i}" for i in range(len(texts))]
+    pages = spark.createDataFrame(list(zip(urls, texts)), "url string, text string")
 
     out = {}
     for mode in ("truncate", "windowed"):
-        out[mode] = decision_log(
-            docs, emission_npz=ctx_ckpt, long_doc=mode
-        ).collect()
+        out[mode] = Counter(
+            tuple(r) for r in fused_triples(
+                pages, emission_npz=ctx_ckpt, long_doc=mode
+            ).collect()
+        )
     # truncation decides < 200 words per long doc; windowing decides them all
-    assert len(out["windowed"]) > len(out["truncate"])
+    assert sum(out["windowed"].values()) > sum(out["truncate"].values())
 
-    base = CtxTransformerProvider(ctx_ckpt)
-    wrapped = ChunkedSeqProvider(base)
-    logs: list[list[dict]] = []
-    final_mention_spans_batch(texts, logs=logs, provider=wrapped)
-    expect = sorted(
-        (i, r["start"], r["end"], r["label"], r["reason"])
-        for i, recs in enumerate(logs)
-        for r in recs
+    wrapped = ChunkedSeqProvider(CtxTransformerProvider(ctx_ckpt))
+    spans = final_mention_spans_batch(texts, provider=wrapped)
+    expect = Counter(
+        (subj, pred, obj, url)
+        for url, t, sp in zip(urls, texts, spans)
+        for subj, pred, obj in triples_from_spans(url, t, sp)
     )
-    got = sorted(
-        (r["doc_id"], r["start"], r["end"], r["label"], r["reason"])
-        for r in out["windowed"]
-    )
-    assert got == expect
-
-
-def test_crf_udf_windowed_ctx_executor(spark, ctx_ckpt):
-    """decode='crf' × emission_npz=ctx × long_doc='windowed' through the
-    decision-log stage — executor ≡ driver (the full composition of
-    VERDICT r7 #1 and #6)."""
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.operators.decision_log import decision_log
-
-    texts = [words_text(300), "молоко кефир вода", words_text(170)]
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    got = sorted(
-        (r["doc_id"], r["start"], r["end"], r["label"])
-        for r in decision_log(
-            df, decode="crf", emission_npz=ctx_ckpt, long_doc="windowed"
-        ).collect()
-    )
-    base = CtxTransformerProvider(ctx_ckpt)
-    logs: list[list[dict]] = []
-    crf_mention_spans_batch(texts, provider=ChunkedSeqProvider(base), logs=logs)
-    expect = sorted(
-        (i, r["start"], r["end"], r["label"])
-        for i, recs in enumerate(logs) for r in recs
-    )
-    # the windows decide every word, past the 160-piece truncation
-    assert got == expect and len(expect) == 300 + 3 + 170
+    assert out["windowed"] == expect

@@ -1,6 +1,6 @@
 """CRF Viterbi decode: brute-force path-enumeration oracle, padded-batch ≡
 per-sequence identity, BIO-structure sanity of the stub prior, and the
-flag-gated CRF mention path end to end."""
+distributed bounded-window decode against a driver-side recompute."""
 
 from __future__ import annotations
 
@@ -66,70 +66,6 @@ def test_stub_prior_enforces_bio_structure():
             prev = tag
 
 
-def test_crf_mention_path_end_to_end():
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-
-    texts = ["молоко простоквашино 3,2% 1 л", "", "   ", "hello spark data"]
-    a = crf_mention_spans_batch(texts)
-    b = crf_mention_spans_batch(texts, max_words_per_microbatch=2)
-    assert a == b  # micro-batch size can't change the decode
-    assert a[1] == [] and a[2] == []
-    assert all(isinstance(s, tuple) and len(s) == 3 for s in a[0])
-    # deterministic across calls
-    assert a == crf_mention_spans_batch(texts)
-
-
-def test_mle_transitions_recover_planted_structure():
-    """Sequences generated under a known bigram law: the MLE transitions must
-    rank the planted successor highest, and Viterbi with them must beat
-    uniform transitions on noisy emissions."""
-    import random
-
-    from x5_ner_spark.core.crf import mle_crf_params, viterbi_decode
-
-    rng = random.Random(5)
-    # planted law: tag (i+1) % 4 follows tag i 80% of the time (4 labels)
-    seqs = []
-    for _ in range(400):
-        cur = rng.randrange(4)
-        seq = [cur]
-        for _ in range(rng.randint(3, 8)):
-            cur = (cur + 1) % 4 if rng.random() < 0.8 else rng.randrange(4)
-            seq.append(cur)
-        seqs.append(seq)
-    start, trans, end = mle_crf_params(seqs, num_labels=4)
-    for i in range(4):
-        assert trans[i].argmax() == (i + 1) % 4
-    # decode with weak emissions follows the planted cycle
-    em = np.zeros((6, 4))
-    em[0, 2] = 3.0  # anchor the first tag
-    path = viterbi_decode(em, start, trans, end)
-    assert path[0] == 2 and path[1] == 3 and path[2] == 0
-
-
-def test_crf_decode_udf_on_spark(spark):
-    """decision_log(decode='crf') runs the Viterbi decode distributed and
-    logs the same per-word decisions as the core CRF path."""
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.operators.decision_log import decision_log
-
-    texts = ["молоко простоквашино 3,2% 1 л", "hello spark data batch",
-             "сок добрый 200 мл", ""]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "doc_id long, text string")
-    got = sorted(
-        (r["doc_id"], r["start"], r["end"], r["label"])
-        for r in decision_log(df, decode="crf").collect()
-    )
-    logs: list[list[dict]] = []
-    crf_mention_spans_batch(texts, logs=logs)
-    want = sorted(
-        (i, r["start"], r["end"], r["label"])
-        for i, recs in enumerate(logs) for r in recs
-    )
-    assert got == want and len(want) >= 10
-
-
 def test_crf_decode_tokens_matches_driver_side(spark):
     """crf_decode_tokens (the r7 driver-oracle query's operator): the
     distributed bounded-window decode must reproduce a driver-side
@@ -140,7 +76,7 @@ def test_crf_decode_tokens_matches_driver_side(spark):
     from x5_ner_spark.core.spans import BIO_TAGS
     from x5_ner_spark.core.stub_model import batch_probabilities
     from x5_ner_spark.core.textnorm import norm_token_simple
-    from x5_ner_spark.operators.crf_train import crf_decode_tokens
+    from x5_ner_spark.operators.crf_decode import crf_decode_tokens
 
     texts = [
         "молоко простоквашино 3,2% 1 л отличное свежее вкусное полезное",

@@ -185,31 +185,3 @@ def test_fused_stage_under_ctx_checkpoint(spark, ckpt):
             want[(subj, pred, obj, url)] += 1
     got = Counter((r["subj"], r["pred"], r["obj"], r["url"]) for r in rows)
     assert got == want
-
-
-def test_decision_log_under_ctx_checkpoint(spark, ckpt):
-    """The S8 decision-log surface accepts the contextual checkpoint through
-    the same emission_npz swap point: per-word records reflect the ctx
-    provider's probabilities and agree with a driver-side cascade replay."""
-    from x5_ner_spark.operators.decision_log import decision_log
-
-    texts = ["молоко кефир санта", "санта вода greenfield чай", "кефир"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    rows = decision_log(df, frozenset({"санта"}), emission_npz=ckpt).collect()
-    got = {
-        (r["doc_id"], r["start"], r["end"]): (r["label"], r["reason"], r["p_type"])
-        for r in rows
-    }
-    prov = CtxTransformerProvider(ckpt)
-    logs: list = []
-    final_mention_spans_batch(
-        texts, frozenset({"санта"}), ["санта"], logs=logs, provider=prov
-    )
-    want = {
-        (did, r["start"], r["end"]): (r["label"], r["reason"], r["p_type"])
-        for did, recs in enumerate(logs)
-        for r in recs
-    }
-    assert got == want and len(want) > 0

@@ -1,7 +1,8 @@
 """No module-level import in the package or its launchers goes unused,
 only the deployment-settings modules read the environment, and every
-package module, and every public function or class outside ``core/``, is
-reached from an entry point, not from tests alone.
+package module, every public function or class outside ``core/`` and every
+option of such a function that a test sets is reached from an entry point,
+not from tests alone.
 
 An AST scan over ``x5_ner_spark/**/*.py``, ``__spark_entry__.py``, the
 ``bench*.py`` and ``kg_submit.py`` launchers and ``tools/*.py``: every name
@@ -60,11 +61,15 @@ def _used_names(tree):
     return {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
 
 
+def _is_all(node) -> bool:
+    return isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+    )
+
+
 def _exported(tree):
     for node in tree.body:
-        if isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
-        ):
+        if _is_all(node):
             return set(ast.literal_eval(node.value))
     return set()
 
@@ -193,7 +198,7 @@ def test_no_public_function_reached_only_by_tests():
                 defs.setdefault(node.name, []).append(node)
                 if not node.name.startswith("_") and not rel.startswith("core/"):
                     public.append(f"{rel}:{node.name}")
-            else:
+            elif not _is_all(node):  # an export list names, it does not call
                 todo.extend(_referenced_names([node]))
     reached: set[str] = set()
     while todo:
@@ -203,3 +208,73 @@ def test_no_public_function_reached_only_by_tests():
             todo.extend(_referenced_names(defs.get(name, [])))
     unreached = [f for f in public if f.split(":")[1] not in reached]
     assert unreached == [], "public functions no entry point reaches:\n" + "\n".join(unreached)
+
+
+# options whose callers are the resume-from-last-round fault recovery of the
+# iterative graph operators, exercised by tests that kill and restart a run
+RECOVERY_OPTIONS = {
+    "connected_components": {"max_iter", "checkpoint_dir", "checkpoint_every",
+                             "checkpoint_buckets"},
+    "pagerank": {"checkpoint_dir", "checkpoint_every", "checkpoint_buckets"},
+}
+
+
+def _options(path: Path):
+    """(function, positional parameter names, options) for each public
+    top-level function of ``path``; an option is a parameter with a
+    default."""
+    for node in ast.parse(path.read_text(encoding="utf-8")).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
+                and not node.name.startswith("_"):
+            a = node.args
+            positional = [x.arg for x in a.posonlyargs + a.args]
+            opts = positional[len(positional) - len(a.defaults):] + [
+                x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            yield node.name, positional, opts
+
+
+def _set_options(path: Path, positional: dict[str, list[list[str]]]):
+    """(function, parameter) for every parameter a call in ``path`` passes,
+    by keyword or by position. Calls match by name, like the function walk
+    (a positional argument counts for every function of that name); a call
+    that passes ``*args`` or ``**kwargs`` cannot be resolved and is
+    skipped."""
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name not in positional or any(k.arg is None for k in node.keywords) \
+                or any(isinstance(x, ast.Starred) for x in node.args):
+            continue
+        for params in positional[name]:
+            for param in params[: len(node.args)]:
+                yield name, param
+        for k in node.keywords:
+            yield name, k.arg
+
+
+def test_no_option_only_tests_set():
+    """Every option of a public function outside ``core/`` that a test sets
+    is also set by an entry point or by the package itself: an option only
+    tests set selects a path nothing runs. Tests that need another value
+    set a module constant instead."""
+    positional: dict[str, list[list[str]]] = {}
+    options: dict[str, set[str]] = {}
+    for p in sorted(PKG.rglob("*.py")):
+        if not p.relative_to(PKG).as_posix().startswith("core/"):
+            for name, pos, opts in _options(p):
+                positional.setdefault(name, []).append(pos)
+                options.setdefault(name, set()).update(opts)
+    reached = [p for pattern in ENTRY_POINTS for p in sorted(ROOT.glob(pattern))]
+    reached += sorted(PKG.rglob("*.py"))
+    set_elsewhere = {hit for p in reached for hit in _set_options(p, positional)}
+    only_tests = sorted({
+        f"{name}({param})"
+        for p in sorted((ROOT / "tests").glob("*.py"))
+        for name, param in _set_options(p, positional)
+        if (name, param) not in set_elsewhere and param in options[name]
+        and param not in RECOVERY_OPTIONS.get(name, ())
+    })
+    assert only_tests == [], "options only tests set:\n" + "\n".join(only_tests)

@@ -253,82 +253,3 @@ def test_wratio_changes_fuzzy_hit_vs_levenshtein_only():
     without = decide_word_labels(text, words, probs, lex, sorted(lex), use_wratio=False)
     assert with_w == [(0, 9, "B-BRAND")]
     assert without == [(0, 9, "O")]
-
-
-def test_decision_log_crf_under_ctx(spark, tmp_path):
-    """VERDICT r7 #6 (decision-log surface under ctx+CRF): the log operator
-    with decode='crf' over a CONTEXTUAL checkpoint is row-identical to the
-    driver-side crf_mention_spans_batch(logs=...) construction, labels are
-    the Viterbi tags, and the probability fields are the provider's rows."""
-    from x5_ner_spark.core.ctx_transformer import (
-        CtxTransformerProvider,
-        write_ctx_checkpoint,
-    )
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.operators.decision_log import decision_log
-
-    vocab = ["моло", "##ко", "кефир", "сан", "##та", "вода", "greenfield",
-             "чай", "сок", "1", "л"]
-    ckpt = write_ctx_checkpoint(str(tmp_path / "ctx.npz"), vocab, max_len=160)
-    texts = ["молоко кефир greenfield", "вода сок 1 л", "", "чай"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = sorted(
-        tuple(r) for r in decision_log(
-            docs, decode="crf", emission_npz=ckpt
-        ).collect()
-    )
-
-    logs: list[list[dict]] = []
-    crf_mention_spans_batch(texts, provider=CtxTransformerProvider(ckpt), logs=logs)
-    want = sorted(
-        (i, r["token_text"], r["start"], r["end"], r["label"], r["reason"],
-         r["p_brand"], r["p_type"], r["in_lex"], r["fuzzy_hit"],
-         r["pure_lat"], r["short_lat"], r["has_vowel"],
-         r["p_brand_sum"], r["p_type_sum"], r["p_o"])
-        for i, recs in enumerate(logs)
-        for r in recs
-    )
-    assert got == want and len(want) > 5
-    assert all(r[5] == "crf_viterbi" for r in got)
-    assert all(not r[8] and not r[9] for r in got)  # no lexicon on CRF path
-    # the empty text produced no rows; every other doc logged every word
-    assert {r[0] for r in got} == {0, 1, 3}
-
-
-def test_crf_log_stub_probs_match_batch_probabilities():
-    """The stub CRF path logs softmax(batch_logits) — the exact values
-    batch_probabilities serves, so p_* agree with the cascade log's fields
-    for the same (token, position)."""
-    from x5_ner_spark.core.mention_pipeline import crf_mention_spans_batch
-    from x5_ner_spark.core.spans import BIO_TAGS
-    from x5_ner_spark.core.stub_model import batch_probabilities
-    from x5_ner_spark.core.textnorm import norm_token_simple
-
-    t = "молоко простоквашино кефир santa"
-    logs: list[list[dict]] = []
-    crf_mention_spans_batch([t], logs=logs)
-    (recs,) = logs
-    assert len(recs) == 4
-    idx = {tag: i for i, tag in enumerate(BIO_TAGS)}
-    words = t.split()
-    for pos, (w, r) in enumerate(zip(words, recs)):
-        p = batch_probabilities([(norm_token_simple(w), pos > 0)])[0]
-        assert r["p_o"] == round(float(p[idx["O"]]), 3)
-        assert r["p_brand"] == round(
-            max(float(p[idx["B-BRAND"]]), float(p[idx["I-BRAND"]])), 3
-        )
-        assert r["p_brand_sum"] == round(
-            float(p[idx["B-BRAND"]]) + float(p[idx["I-BRAND"]]), 3
-        )
-        assert r["reason"] == "crf_viterbi"
-        assert r["token_text"] == w
-
-
-def test_decision_log_decode_validation(spark):
-    from x5_ner_spark.operators.decision_log import decision_log
-
-    docs = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        decision_log(docs, decode="bogus")

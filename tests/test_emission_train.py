@@ -51,7 +51,7 @@ def trained(tmp_path_factory, request):
     labels = teacher_labels(docs).persist()
     path = str(tmp_path_factory.mktemp("emtrain") / "trained.npz")
     with obs.recording() as log:
-        fit_npz_emission(labels, path, iters=25, lr=0.8, seed=7)
+        fit_npz_emission(labels, path, iters=25, lr=0.8)
     hist = _losses(log)
     labels.unpersist()
     return path, hist, spark
@@ -85,8 +85,8 @@ def test_fit_deterministic(spark, tmp_path):
     rows = [(f"tok{i % 17}", bool(i % 2), int(i % 9)) for i in range(400)]
     train = spark.createDataFrame(rows, "token string, cont boolean, label_idx long")
     p1, p2 = str(tmp_path / "a.npz"), str(tmp_path / "b.npz")
-    fit_npz_emission(train, p1, iters=5, lr=0.5, seed=11)
-    fit_npz_emission(train.repartition(7), p2, iters=5, lr=0.5, seed=11)
+    fit_npz_emission(train, p1, iters=5, lr=0.5)
+    fit_npz_emission(train.repartition(7), p2, iters=5, lr=0.5)
     za, zb = np.load(p1), np.load(p2)
     for k in ("w1", "b1", "w2", "b2"):
         # same data+seed → identical trajectory regardless of layout, up to
@@ -95,7 +95,7 @@ def test_fit_deterministic(spark, tmp_path):
         np.testing.assert_allclose(za[k], zb[k], atol=1e-6)
     # same layout → bit-identical
     p3 = str(tmp_path / "c.npz")
-    fit_npz_emission(train, p3, iters=5, lr=0.5, seed=11)
+    fit_npz_emission(train, p3, iters=5, lr=0.5)
     zc = np.load(p3)
     for k in ("w1", "b1", "w2", "b2"):
         assert np.array_equal(za[k], zc[k]), k
@@ -143,7 +143,7 @@ def test_fit_crf_descends_and_decodes_like_teacher(spark, tmp_path):
     seqs = teacher_sequences(docs).persist()
     path = str(tmp_path / "crf_joint.npz")
     with obs.recording() as log:
-        fit_crf_npz(seqs, path, iters=20, lr=0.8, seed=7)
+        fit_crf_npz(seqs, path, iters=20, lr=0.8)
     hist = _losses(log)
 
     assert len(hist) == 20 and hist[-1] < 0.6 * hist[0], (hist[0], hist[-1])

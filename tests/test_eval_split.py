@@ -29,11 +29,12 @@ def test_error_buckets(spark):
     assert got[("false_positive", "TYPE")] == 1
 
 
-def test_mix_sample_deterministic_and_calibrated(spark):
+def test_mix_sample_deterministic_and_calibrated(spark, monkeypatch):
     """Mix sampler: reproducible keep set (pure hash of id+seed), unlisted
     sources dropped, observed rates near the requested fractions, and the
     keep decision is partitioning-independent."""
-    from x5_ner_spark.operators.split import mix_sample
+    from x5_ner_spark.operators import training_data
+    from x5_ner_spark.operators.training_data import mix_sample
 
     rows = [(i, f"s{i % 2}") for i in range(2000)] + [(9999, "other")]
     docs = spark.createDataFrame(rows, "doc_id long, source string")
@@ -46,20 +47,23 @@ def test_mix_sample_deterministic_and_calibrated(spark):
     s1 = sum(1 for i in a if i % 2 == 1)
     assert s1 == 1000                  # fraction 1.0 keeps everything
     assert 0.25 <= s0 / 1000 <= 0.35   # ~0.3 within binomial noise
-    c = {r["doc_id"] for r in mix_sample(docs, frac, seed=7).collect()}
+    monkeypatch.setattr(training_data, "MIX_SEED", 7)
+    c = {r["doc_id"] for r in mix_sample(docs, frac).collect()}
     assert c != a                      # seed changes the sample
 
 
 def test_pack_documents_semantics(spark):
     """Sequence packing invariants: contiguous per-group offsets, budget-
     aligned pack ids, straddle flag only for docs crossing a boundary."""
-    from x5_ner_spark.operators.split import pack_documents
+    from x5_ner_spark.operators.training_data import pack_documents
 
-    rows = [(i, "a", 30) for i in range(10)] + [(100, "b", 250), (101, "b", 10)]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, n long")
+    sizes = [(i, "a", 30) for i in range(10)] + [(100, "b", 250), (101, "b", 10)]
+    # a text of n words: the packer counts whitespace-separated tokens
+    rows = [(i, src, " ".join(["w"] * n)) for i, src, n in sizes]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     out = sorted(
         (r["group"], r["doc_id"], r["offset"], r["pack_id"], r["spans_packs"])
-        for r in pack_documents(docs, 100, count_col="n").collect()
+        for r in pack_documents(docs, 100).collect()
     )
     a = [r for r in out if r[0] == "a"]
     # contiguous layout: offsets 0,30,60,90,120,... pack = offset // 100

@@ -78,16 +78,9 @@ def test_batch_prob_cache_eviction_keeps_warm_keys(monkeypatch):
 
 
 def test_bad_inference_arguments_fail_at_plan_build(spark):
-    """A bad ``decode`` or ``long_doc`` is refused when the plan is built,
-    by every inference entry point, and without a checkpoint (the chunked
-    wrapper that also checks ``long_doc`` only runs on a provider)."""
-    from x5_ner_spark.operators.decision_log import decision_log
-
+    """A bad ``long_doc`` is refused when the plan is built, and without a
+    checkpoint (the chunked wrapper that also checks ``long_doc`` only runs
+    on a provider)."""
     pages = pages_df(spark, 5)
-    docs = spark.createDataFrame([(1, "молоко")], "doc_id long, text string")
     with pytest.raises(ValueError, match="long_doc"):
         fused.fused_triples(pages, long_doc="windowd")
-    with pytest.raises(ValueError, match="decode"):
-        decision_log(docs, decode="viterbi")
-    with pytest.raises(ValueError, match="long_doc"):
-        decision_log(docs, long_doc="windowd")

@@ -86,16 +86,6 @@ def test_held_out_unseen_tokens_score_finite(spark, docs_df):
     assert rows[0]["nll"] == pytest.approx(want_nll, abs=0)
 
 
-def test_min_count_prunes_to_unseen(spark, docs_df):
-    bg, ctx, v = lm.train_bigram_lm(docs_df, min_count=2)
-    kept = {(r["prev"], r["cur"]) for r in bg.collect()}
-    py_bg, _, _ = _py_model([t for _, t in DOCS])
-    assert kept == {k for k, c in py_bg.items() if c >= 2}
-    # pruned pairs score as count 0, never error
-    rows = lm.score_bigram_nll(docs_df, bg, ctx, v).collect()
-    assert len(rows) == len(DOCS)
-
-
 def test_empty_and_blank_docs_dropped(spark):
     df = spark.createDataFrame([(1, "a b"), (2, ""), (3, "   ")], ["doc_id", "text"])
     got = lm.lm_perplexity(df).collect()

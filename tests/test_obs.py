@@ -74,15 +74,13 @@ def test_jaccard_pairs_records_its_path(spark, monkeypatch, bound, path):
 
 
 @pytest.mark.parametrize(
-    "min_rows, exact, path",
-    [(0, True, "histogram"), (ts.PROFILE_HIST_MIN_ROWS, True, "percentile"),
-     (ts.PROFILE_HIST_MIN_ROWS, False, "approx_percentile")],
+    "min_rows, path", [(0, "histogram"), (ts.PROFILE_HIST_MIN_ROWS, "percentile")],
 )
-def test_numeric_profile_records_its_path(spark, monkeypatch, min_rows, exact, path):
+def test_numeric_profile_records_its_path(spark, monkeypatch, min_rows, path):
     df = spark.range(300).selectExpr("id % 3 AS g", "id * 0.5 AS v")
     monkeypatch.setattr(ts, "PROFILE_HIST_MIN_ROWS", min_rows)
     with obs.recording() as log:
-        ts.numeric_profile(df, "g", "v", exact=exact)
+        ts.numeric_profile(df, "g", "v")
     assert _fields(log, "profile_path") == [{"path": path}]
 
 

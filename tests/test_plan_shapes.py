@@ -118,22 +118,29 @@ def test_plan_shape_pinned(spark, queries, name):
     )
 
 
-def test_decision_log_crf_is_map_only(spark):
-    """The S8 surface under the CRF decoder (r8) keeps decision_log's scale
-    shape: one mapInPandas over the scan, zero exchanges — same pin as the
-    cascade decision_log and crf_decode rows above."""
-    from x5_ner_spark.core.ctx_transformer import write_ctx_checkpoint
-    import tempfile, os
+def _python_rdd_scans(plan) -> list[str]:
+    """The ``Scan ExistingRDD`` nodes of a physical plan whose RDD lineage
+    holds a ``PythonRDD`` (a frame built from a Python list): such a scan
+    starts Python workers on every action, though the table holds no
+    Python logic."""
+    hits, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "RDDScanExec" \
+                and "PythonRDD[" in node.rdd().toDebugString():
+            hits.append(node.simpleString(100))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return hits
 
-    from x5_ner_spark.operators.decision_log import decision_log
 
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    ckpt = os.path.join(tempfile.mkdtemp(), "ctx_plan.npz")
-    write_ctx_checkpoint(ckpt, ["моло", "##ко", "вода"], max_len=160)
-    for kwargs in ({"decode": "crf"}, {"decode": "crf", "emission_npz": ckpt,
-                                       "long_doc": "windowed"}):
-        got = op_counts(decision_log(docs, **kwargs))
-        assert got.get("Exchange", 0) == 0, (kwargs, got)
-        assert got.get("CartesianProduct", 0) == 0, (kwargs, got)
+def test_no_query_scans_a_python_rdd(spark, queries, sf_dir):
+    """Every driver-contract query builds its small tables from pandas (a
+    LocalTableScan). Scans of block RDDs (the lazy ``localCheckpoint`` in
+    tfidf_top_terms and pagerank) are fine."""
+    hits = {
+        name: scans
+        for name, q in sorted(queries.items())
+        if (scans := _python_rdd_scans(q(spark, sf_dir)._jdf.queryExecution().sparkPlan()))
+    }
+    assert hits == {}, hits

@@ -14,6 +14,20 @@ from x5_ner_spark import obs
 from x5_ner_spark.operators import quality_train as qt
 
 
+def featurize_texts(texts: list[str], dim: int, ngrams: int = 1) -> np.ndarray:
+    """(n, dim) binary hashed unigram (+ optional bigram) presence over
+    lowercase whitespace tokens — the python twin of ``qt.bucket_set_col``."""
+    x = np.zeros((len(texts), dim), dtype=np.float64)
+    for r, t in enumerate(texts):
+        toks = [w for w in (t or "").lower().split(" ") if w]
+        for w in toks:
+            x[r, qt.hash_bucket(w, dim)] = 1.0
+        if ngrams >= 2:
+            for a, b in zip(toks, toks[1:]):
+                x[r, qt.hash_bucket(f"{a} {b}", dim)] = 1.0
+    return x
+
+
 def test_gradients_match_finite_differences():
     rng = np.random.RandomState(3)
     x = rng.rand(12, 7)
@@ -56,7 +70,7 @@ def trained(spark, sf_dir):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     labeled = qt.gopher_labels(docs)
     with obs.recording() as log:
-        w, b = qt.fit_quality_classifier(labeled, dim=2048, iters=60, lr=2.0, l2=1e-4)
+        w, b = qt.fit_quality_classifier(labeled, dim=2048, iters=60, lr=2.0)
     history = [f["loss"] for name, f in log if name == "train_loss"]
     return docs, labeled, w, b, history
 
@@ -89,7 +103,7 @@ def test_column_serving_matches_numpy_forward(spark, trained):
         r["doc_id"]: r["q_score"]
         for r in qt.score_quality(spark.createDataFrame(sample), w, b).collect()
     }
-    x = qt.featurize_texts([r["text"] for r in sample], len(w))
+    x = featurize_texts([r["text"] for r in sample], len(w))
     z = x @ w + b
     for r, zi in zip(sample, z):
         want = 1.0 / (1.0 + math.exp(-zi))
@@ -167,7 +181,7 @@ def test_bigram_features_separate_order_dependent_labels(spark):
 
     def acc(ngrams):
         w, b = qt.fit_quality_classifier(df, dim=256, iters=40, ngrams=ngrams)
-        x = qt.featurize_texts(texts, 256, ngrams=ngrams)
+        x = featurize_texts(texts, 256, ngrams=ngrams)
         return float((((x @ w + b) >= 0) == (y >= 0.5)).mean())
 
     assert acc(1) == 0.5

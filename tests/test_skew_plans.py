@@ -54,13 +54,14 @@ def test_plan_guards(spark, sf_dir):
     assert "BroadcastHashJoin" in plan3
 
 
-def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
+def test_ivf_topk_recall_vs_brute_force(spark, sf_dir, monkeypatch):
     from x5_ner_spark.operators import similarity
 
+    monkeypatch.setattr(similarity, "IVF_N_PROBE", 4)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
     bf = {(r["query_id"], r["neighbor_id"]) for r in similarity.brute_force_topk(emb, q, k=3).collect()}
-    ivf = {(r["query_id"], r["neighbor_id"]) for r in similarity.ivf_topk(emb, q, k=3, n_probe=4).collect()}
+    ivf = {(r["query_id"], r["neighbor_id"]) for r in similarity.ivf_topk(emb, q, k=3).collect()}
     # approximate: every IVF hit must be a real corpus vector pair; recall
     # against exact top-3 is reported and must be non-trivial on 64-dim data
     recall = len(bf & ivf) / len(bf)
@@ -128,25 +129,6 @@ def test_map_only_operators_have_no_exchange(spark, sf_dir):
     for name in ("scrub_pii", "decision_log"):
         plan = m.queries()[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, name
-
-
-def test_ivf_refined_recall_not_worse(spark, sf_dir):
-    """One Lloyd iteration must keep cells valid and recall at least as good
-    as the raw seeded sample on the fixture (typically better balance)."""
-    from x5_ner_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5)
-    bf = {(r["query_id"], r["neighbor_id"]) for r in similarity.brute_force_topk(emb, q, k=3).collect()}
-    raw = {(r["query_id"], r["neighbor_id"]) for r in similarity.ivf_topk(emb, q, k=3, n_probe=4).collect()}
-    ref = {(r["query_id"], r["neighbor_id"]) for r in similarity.ivf_topk(emb, q, k=3, n_probe=4, refine_iters=1).collect()}
-    assert len(ref) == 15
-    assert len(bf & ref) >= len(bf & raw) - 1  # allow one-swap jitter, no collapse
-    # determinism of the refined quantizer
-    cents0 = similarity.ivf_centroids(emb)
-    c1 = similarity.ivf_refine_centroids(emb, cents0, 1)
-    c2 = similarity.ivf_refine_centroids(emb, cents0, 1)
-    assert c1 == c2
 
 
 def test_near_dup_clusters_lsh_recall_vs_exact(spark):

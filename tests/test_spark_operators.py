@@ -184,10 +184,6 @@ def test_asof_join_semantics(spark):
     assert out[1]["asof_value"] == 5.0   # equal ts matches (inclusive)
     assert out[2]["asof_value"] == 7.0   # latest prior
     assert out[3]["asof_value"] is None  # nothing at or before -> null
-    # tolerance: 11:00 -> 12:00 gap is 3600s; tolerance 1800 nulls it
-    out_t = {r["event_id"]: r for r in
-             W.asof_join(left, right, "user_id", "ts", ["value"], tolerance_s=1800).collect()}
-    assert out_t[2]["asof_value"] is None and out_t[1]["asof_value"] == 5.0
 
 
 def test_asof_join_tie_determinism(spark):
@@ -375,7 +371,7 @@ def test_pmi_collocations_semantics(spark):
     )
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = [(r["a"], r["b"], r["pmi"]) for r in
-           text_stats.pmi_collocations(docs, min_pair_count=5).collect()]
+           text_stats.pmi_collocations(docs).collect()]
     pairs = {(a, b): p for a, b, p in out}
     assert ("редкая", "пара") not in pairs
     # 'красная икра' is exclusive on 'красная' (c=6) and икра (c=12);

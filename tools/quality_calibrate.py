@@ -4,7 +4,7 @@ cut-off, what fraction of the corpus survives and how well the kept set
 agrees with the (held-out) rule verdict.
 
 Trains on a hash-split 80% of the corpus (portable md5 of doc_id — the
-same split discipline as operators/split.hash_split), evaluates every
+same split discipline as the ``hash_split`` query), evaluates every
 threshold on the held-out 20%, and prints one JSON line per threshold plus
 a summary line with the best-F1 cut. Driver-side sweep is numpy over the
 collected (score, label) pairs of the EVAL SPLIT ONLY — at corpus scale

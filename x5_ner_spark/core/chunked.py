@@ -79,7 +79,7 @@ class ChunkedSeqProvider:
     """Provider-agnostic windowed wrapper for any sequence-level emission
     provider (``seq_level = True`` + ``tokenizer``/``max_len`` from the
     shared WordPiece machinery). Same interface as the wrapped provider, so
-    everything above the provider layer (cascade, CRF decode, post-process,
+    everything above the provider layer (cascade, post-process,
     triples) composes unchanged. Construct per use — it is a thin view over
     the base singleton and shares its caches."""
 

@@ -6,7 +6,8 @@ maximize start_trans[y0] + Σ emissions[t, yt] + Σ trans[y_{t-1}, y_t]
 + end_trans[yT]; decode per sequence with backtracking. NOTE the reference
 COMPUTES the Viterbi path and never consumes it in inference (infer.py:189 is
 a dead assignment — labels come from the probability cascade), which is why
-the engine's CRF path is flag-gated and default-off.
+mention detection never decodes by Viterbi: the engine's one Viterbi surface
+is the ``crf_decode`` operator (operators/crf_decode.py).
 
 Transition parameters come either from a real checkpoint (swap point, same
 shape) or from the deterministic hash-derived stub (:func:`stub_crf_params`)
@@ -41,34 +42,6 @@ def stub_crf_params(num_labels: int = len(BIO_TAGS)):
             for i, prev in enumerate(BIO_TAGS):
                 if not prev.endswith(base) or prev == "O":
                     trans[i, j] -= 4.0
-    return start, trans, end
-
-
-def mle_crf_params(
-    tag_sequences: "list[list[int]]", num_labels: int = len(BIO_TAGS),
-    smoothing: float = 1.0,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """N4-adjacent: estimate (start, trans, end) as log-probabilities from
-    labeled tag sequences — add-k-smoothed bigram MLE, the closed-form
-    transition estimator an HMM/CRF decode consumes. This is deliberately
-    NOT gradient CRF training (the reference trains torch CRF NLL end to end
-    with the encoder, train.py:52-62 — out of engine scope per SURVEY §2.11);
-    it is the distributed-friendly piece: the counts are one bigram count
-    over (prev_tag, tag) pairs, and the result plugs into viterbi_decode
-    unchanged."""
-    start_c = np.full(num_labels, smoothing)
-    end_c = np.full(num_labels, smoothing)
-    trans_c = np.full((num_labels, num_labels), smoothing)
-    for seq in tag_sequences:
-        if not seq:
-            continue
-        start_c[seq[0]] += 1
-        end_c[seq[-1]] += 1
-        for a, b in zip(seq, seq[1:]):
-            trans_c[a, b] += 1
-    start = np.log(start_c / start_c.sum())
-    end = np.log(end_c / end_c.sum())
-    trans = np.log(trans_c / trans_c.sum(axis=1, keepdims=True))
     return start, trans, end
 
 

@@ -14,12 +14,9 @@ from .cascade import decide_word_labels
 from .chunked import check_long_doc, maybe_chunked
 from .numeric import tokenize_with_offsets
 from .postprocess import postprocess
-from .spans import BIO_TAGS as _BIO_TAGS
 from .spans import Span, bio_to_entities, serialize_spans
 from .stub_model import batch_probabilities, word_probabilities
-from .textnorm import has_latin_vowel, is_pure_latin, norm_basic, norm_token_simple
-
-_BIO_IDX = {t: i for i, t in enumerate(_BIO_TAGS)}
+from .textnorm import norm_basic, norm_token_simple
 
 _BATCH_PROB_CACHE: dict[tuple[str, bool], tuple[float, ...]] = {}
 _BATCH_PROB_CACHE_MAX = 1 << 16
@@ -173,201 +170,22 @@ def final_mention_spans_batch(
     return out
 
 
-def _crf_log_record(
-    token_text: str, ws: int, we: int, tag: str, prob_row
-) -> dict:
-    """One S8-schema decision record for a CRF-decoded word: same columns
-    and probability derivations/rounding as the cascade log (so the one
-    decision-log sink serves both decoders), with ``reason='crf_viterbi'``
-    — the CRF path has no rule ladder. The lexicon features are honest
-    constants: Viterbi consults no lexicon, so ``in_lex``/``fuzzy_hit``
-    are False by construction, while the purely lexical predicates
-    (pure_lat/short_lat/has_vowel) are computed as on the cascade path.
-    Called once per decided word — the tag index and imports live at
-    module level (the cascade keeps its own _IDX the same way)."""
-    idx = _BIO_IDX
-    p_o = float(prob_row[idx["O"]])
-    p_bb, p_ib = float(prob_row[idx["B-BRAND"]]), float(prob_row[idx["I-BRAND"]])
-    p_bt, p_it = float(prob_row[idx["B-TYPE"]]), float(prob_row[idx["I-TYPE"]])
-    tok_norm = norm_token_simple(token_text)
-    pure_lat = is_pure_latin(tok_norm)
-    return {
-        "token_text": token_text, "start": ws, "end": we,
-        "label": tag, "reason": "crf_viterbi",
-        "p_brand": round(max(p_bb, p_ib), 3),
-        "p_type": round(max(p_bt, p_it), 3),
-        "in_lex": False, "fuzzy_hit": False,
-        "pure_lat": pure_lat,
-        "short_lat": pure_lat and len(tok_norm) <= 2,
-        "has_vowel": has_latin_vowel(tok_norm),
-        "p_brand_sum": round(p_bb + p_ib, 3),
-        "p_type_sum": round(p_bt + p_it, 3),
-        "p_o": round(p_o, 3),
-    }
-
-
-def crf_mention_spans_batch(
-    texts: list[str],
-    crf_params=None,
-    max_words_per_microbatch: int = 8192,
-    provider=None,
-    logs: list[list[dict]] | None = None,
-) -> list[list[Span]]:
-    """Flag-gated CRF decode path (N1 variant): per-word EMISSIONS (raw
-    logits) → batched Viterbi over a deterministic (or checkpoint-loaded)
-    transition matrix → BIO labels → postprocess. The reference computes
-    this path and then discards it during inference (infer.py:189 dead
-    assignment) — hence a separate opt-in function, not the default. Word
-    segmentation and micro-batching match final_mention_spans_batch.
-
-    ``provider`` composes the checkpoint swap point with Viterbi (VERDICT r7
-    #6): emissions become the LOG of the provider's per-word probability
-    rows — the emission log-likelihood term of the standard linear-chain
-    score. A ``seq_level`` provider (subword/ctx/chunked) also owns word
-    segmentation + truncation, exactly as on the cascade path. None = the
-    pinned stub's raw logits (unchanged historical behavior).
-
-    ``logs``: pass an empty list to collect one decision-record list per
-    text (the S8 surface under the CRF decoder — VERDICT r7 #6): one record
-    per Viterbi-decided word, ``reason='crf_viterbi'``, probability fields
-    from the PROBABILITY rows the emissions derive from (the stub path
-    softmaxes its logits for the log, matching what batch_probabilities
-    serves), recorded pre-postprocess exactly like the cascade log."""
-    import numpy as np
-
-    from .crf import stub_crf_params, viterbi_decode_batch
-    from .spans import BIO_TAGS
-    from .stub_model import batch_logits
-
-    start, trans, end = crf_params if crf_params is not None else stub_crf_params()
-
-    if provider is not None and getattr(provider, "seq_level", False):
-        per_doc = provider.word_probs_for_texts(
-            ["" if not t else t for t in texts]
-        )
-        seq_seqs = []
-        seq_words: list[list[tuple[int, int]] | None] = []
-        seq_probs = []
-        for t, (wspans, probs) in zip(texts, per_doc):
-            if not t or not t.strip() or not wspans:
-                seq_words.append(None)
-                continue
-            seq_words.append(wspans)
-            seq_probs.append(probs)
-            seq_seqs.append(np.log(np.clip(np.array(probs), 1e-12, None)))
-        paths_seq = viterbi_decode_batch(seq_seqs, start, trans, end)
-        it_seq = iter(paths_seq)
-        it_probs = iter(seq_probs)
-        out_seq: list[list[Span]] = []
-        for t, words in zip(texts, seq_words):
-            if words is None:
-                out_seq.append([])
-                if logs is not None:
-                    logs.append([])
-                continue
-            labels = [BIO_TAGS[i] for i in next(it_seq)]
-            probs = next(it_probs)
-            raw = [(ws, we, lab) for (ws, we), lab in zip(words, labels)]
-            if logs is not None:
-                logs.append([
-                    _crf_log_record(t[ws:we], ws, we, lab, row)
-                    for (ws, we, lab), row in zip(raw, probs)
-                ])
-            out_seq.append(postprocess(t, raw) if raw else [])
-        return out_seq
-
-    words_per_text: list[list[tuple[int, int]] | None] = []
-    keys_per_text: list[list[tuple[str, bool]] | None] = []
-    keys: list[tuple[str, bool]] = []
-    for t in texts:
-        if not t or not t.strip():
-            words_per_text.append(None)
-            keys_per_text.append(None)
-            continue
-        words = [(s, e) for _, s, e in tokenize_with_offsets(t)]
-        tkeys = [(norm_token_simple(t[s:e]), i > 0) for i, (s, e) in enumerate(words)]
-        words_per_text.append(words)
-        keys_per_text.append(tkeys)
-        keys.extend(tkeys)
-
-    if provider is None:
-        compute = batch_logits
-    else:
-        # word-level checkpoint provider: log-probability emissions
-        compute = lambda ch: np.log(
-            np.clip(np.asarray(provider.batch_probabilities(ch)), 1e-12, None)
-        )
-    uniq = list(dict.fromkeys(keys))
-    emis: dict[tuple[str, bool], "np.ndarray"] = {}
-    for lo in range(0, len(uniq), max_words_per_microbatch):
-        chunk = uniq[lo : lo + max_words_per_microbatch]
-        mat = compute(chunk)
-        for k, row in zip(chunk, mat):
-            emis[k] = row
-
-    probs_of = None
-    if logs is not None:
-        # the probability view of the same emissions: softmax undoes the
-        # stub's raw logits; a provider's emissions are log(probs) already
-        def probs_of(row):  # noqa: E306
-            if provider is None:
-                e = np.exp(row - row.max())
-                return e / e.sum()
-            return np.exp(row)
-
-    seqs = [
-        np.stack([emis[k] for k in tkeys]) if tkeys else None
-        for tkeys in keys_per_text
-    ]
-    paths = viterbi_decode_batch([s for s in seqs if s is not None], start, trans, end)
-    it = iter(paths)
-    out: list[list[Span]] = []
-    for t, words, s in zip(texts, words_per_text, seqs):
-        if s is None:
-            out.append([])
-            if logs is not None:
-                logs.append([])
-            continue
-        labels = [BIO_TAGS[i] for i in next(it)]
-        raw: list[Span] = []
-        rows: list = []
-        for (ws, we), lab, erow in zip(words, labels, s):
-            while ws < we and t[ws].isspace():
-                ws += 1
-            while ws < we and t[we - 1].isspace():
-                we -= 1
-            if ws < we:
-                raw.append((ws, we, lab))
-                rows.append(erow)
-        if logs is not None:
-            logs.append([
-                _crf_log_record(t[ws:we], ws, we, lab, probs_of(erow))
-                for (ws, we, lab), erow in zip(raw, rows)
-            ])
-        out.append(postprocess(t, raw) if raw else [])
-    return out
-
-
 def mention_detector(
     brand_lexicon=frozenset(),
     *,
-    decode: str = "cascade",
     emission_npz: str | None = None,
     long_doc: str = "truncate",
-    chunk_stride: int | None = None,
 ):
     """The per-worker set-up every Arrow inference entry point shares.
 
-    Call it where the plan is built: a bad ``decode`` or ``long_doc`` fails
-    there, before any job runs. It returns ``load``, which a worker calls
-    once per partition. ``load()`` unwraps ``brand_lexicon`` (a frozenset,
-    or a ``sparkContext.broadcast`` handle), builds its sorted list, gets
-    the ``emission_npz`` provider (read once per worker process by
-    ``provider_for``; chunked under ``long_doc='windowed'``, core/chunked.py)
-    and returns ``detect(texts, logs=None)``: the final spans of each text,
-    by the cascade or, under ``decode='crf'``, by Viterbi."""
-    if decode not in ("cascade", "crf"):
-        raise ValueError(f"decode must be 'cascade' or 'crf', got {decode!r}")
+    Call it where the plan is built: a bad ``long_doc`` fails there, before
+    any job runs. It returns ``load``, which a worker calls once per
+    partition. ``load()`` unwraps ``brand_lexicon`` (a frozenset, or a
+    ``sparkContext.broadcast`` handle), builds its sorted list, gets the
+    ``emission_npz`` provider (read once per worker process by
+    ``provider_for``; chunked under ``long_doc='windowed'``,
+    core/chunked.py) and returns ``detect(texts, logs=None)``: the final
+    spans of each text, by the cascade."""
     check_long_doc(long_doc)
 
     def load():
@@ -378,11 +196,7 @@ def mention_detector(
         if emission_npz is not None:
             from .emission import provider_for
 
-            provider = maybe_chunked(provider_for(emission_npz), long_doc, chunk_stride)
-        if decode == "crf":
-            return lambda texts, logs=None: crf_mention_spans_batch(
-                texts, provider=provider, logs=logs
-            )
+            provider = maybe_chunked(provider_for(emission_npz), long_doc)
         return lambda texts, logs=None: final_mention_spans_batch(
             texts, lex, lex_list, logs=logs, provider=provider
         )

@@ -36,32 +36,10 @@ LOG_COLUMNS = [f.split(" ")[0] for f in LOG_SCHEMA.split(", ")]
 log_values = itemgetter(*LOG_COLUMNS[1:])
 
 
-def decision_log(
-    docs: DataFrame,
-    brand_lexicon=frozenset(),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    emission_npz: str | None = None,
-    decode: str = "cascade",
-    long_doc: str = "truncate",
-    chunk_stride: int | None = None,
-) -> DataFrame:
-    """(id, text) table → per-word decision-log rows. ``brand_lexicon`` may
-    be a frozenset or a ``sparkContext.broadcast`` handle. ``emission_npz``
-    swaps the emission model for a weights-on-disk checkpoint
-    (core/emission.py) so the log reflects the DEPLOYED model's
-    probabilities, consistent with fused_triples.
-
-    ``decode='crf'`` logs the Viterbi decoder instead of the rule cascade
-    (VERDICT r7 #6): same schema, ``reason='crf_viterbi'``, lexicon flags
-    honest-False (Viterbi consults no lexicon — the lexicon arg is unused
-    there). ``long_doc='windowed'`` + ``chunk_stride`` apply the chunked
-    long-document wrapper to sequence-level checkpoints, as in
-    fused_triples (core/chunked.py)."""
-    load = mention_detector(
-        brand_lexicon, decode=decode, emission_npz=emission_npz,
-        long_doc=long_doc, chunk_stride=chunk_stride,
-    )
+def decision_log(docs: DataFrame, brand_lexicon=frozenset()) -> DataFrame:
+    """(doc_id, text) table → per-word decision-log rows. ``brand_lexicon``
+    may be a frozenset or a ``sparkContext.broadcast`` handle."""
+    load = mention_detector(brand_lexicon)
 
     def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         detect = load()
@@ -76,7 +54,7 @@ def decision_log(
             yield pd.DataFrame(rows, columns=LOG_COLUMNS)
 
     keyed = docs.select(
-        F.col(id_col).cast("long").alias("_log_id"),
-        F.col(text_col).alias("_log_text"),
+        F.col("doc_id").cast("long").alias("_log_id"),
+        F.col("text").alias("_log_text"),
     )
     return keyed.mapInPandas(gen, LOG_SCHEMA)

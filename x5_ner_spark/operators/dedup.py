@@ -624,8 +624,9 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     token. (A fully map-only HOF-``aggregate`` variant was measured 19%
     SLOWER despite its zero-exchange plan: higher-order-function lambdas are
     interpreted per element, while this shape's when/sum expressions stay in
-    whole-stage codegen. Same finding as minhash_signatures.)"""
-    docs = scan_parallel(docs)
+    whole-stage codegen. Same finding as minhash_signatures.) No scan
+    valve: the groupBy shuffles right after the tokenize, and at sf0.1 the
+    valve made it slower."""
     toks = docs.select(
         "doc_id", F.explode(simple_tokens_col(F.lower("text"))).alias("t")
     )

@@ -122,7 +122,6 @@ def fit_crf_npz(
     hidden: int = 32,
     iters: int = 30,
     lr: float = 0.5,
-    seed: int = 7,
 ) -> str:
     """JOINT gradient training of the emission MLP and the linear-chain CRF
     (start/trans/end) by exact NLL — the full analog of the reference's
@@ -130,14 +129,15 @@ def fit_crf_npz(
     way as :func:`fit_npz_emission`: per-partition (nll, gradient) sums in
     the shared gradient pass (forward-backward per sequence, chain rule
     through the MLP via core.emission.mlp_backward), driver update, weights
-    rebroadcast by closure. Saves an npz holding BOTH the provider weights and the CRF
-    parameters (its ``crf_start``, ``crf_trans`` and ``crf_end`` arrays
-    feed ``crf_mention_spans_batch``)."""
+    rebroadcast by closure. Saves an npz holding BOTH the provider weights
+    and the CRF parameters (``crf_start``, ``crf_trans`` and ``crf_end``).
+    Both trainers start from the seed-7 init of
+    ``core.emission.init_mlp_params``."""
     from ..core.crf import crf_nll_and_grads
     from ..core.spans import BIO_TAGS
 
     c = len(BIO_TAGS)
-    params = E.init_mlp_params(n_features, hidden, seed)
+    params = E.init_mlp_params(n_features, hidden)
     params["start"] = np.zeros(c)
     params["trans"] = np.zeros((c, c))
     params["end"] = np.zeros(c)
@@ -195,13 +195,12 @@ def fit_npz_emission(
     hidden: int = 32,
     iters: int = 40,
     lr: float = 0.5,
-    seed: int = 7,
 ) -> str:
     """train(token, cont, label_idx) → gradient-descended weights saved at
-    ``out_path`` (NpzMlpProvider layout). Deterministic given (data, seed):
+    ``out_path`` (NpzMlpProvider layout). Deterministic given the data:
     per-partition gradient sums are added in sorted partition order before
     the update. Returns the saved path."""
-    params = E.init_mlp_params(n_features, hidden, seed)
+    params = E.init_mlp_params(n_features, hidden)
 
     def grad_part(snapshot: dict, batches):
         tot_loss, tot_n, acc = 0.0, 0, None

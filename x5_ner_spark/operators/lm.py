@@ -21,10 +21,8 @@ sequence of exact-rounded IEEE ops on both engines.
 Scale notes (10^12 docs): the bigram-count table is vocabulary² in the
 worst case but Zipf-bounded in practice; both count aggregations are
 map-side combined so the shuffle carries distinct keys, not token
-occurrences. The scoring joins shuffle on (prev, cur) / prev — at corpus
-scale pass min_count to prune the broadcast-unfriendly tail of the count
-table (pruned bigrams score as unseen, the standard KenLM-pruning trade).
-Nothing collects rows to the driver.
+occurrences. The scoring joins shuffle on (prev, cur) / prev. Nothing
+collects rows to the driver.
 """
 
 from __future__ import annotations
@@ -72,17 +70,13 @@ def _bigram_rows(docs: DataFrame, text_col: str) -> DataFrame:
 
 
 def train_bigram_lm(
-    docs: DataFrame, text_col: str = "text", min_count: int = 1
+    docs: DataFrame, text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame, int]:
     """Count model from a training corpus: (bigram_counts[prev, cur, c_bg],
     context_counts[prev, c_ctx], vocab_size V). V = distinct predicted
-    tokens (BOS excluded — it is never predicted). min_count > 1 prunes the
-    bigram tail (pruned pairs score as unseen); context counts and V stay
-    unpruned so the smoothing denominator is unchanged."""
+    tokens (BOS excluded — it is never predicted)."""
     bg = _bigram_rows(docs, text_col)
     bg_counts = bg.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c_bg"))
-    if min_count > 1:
-        bg_counts = bg_counts.where(F.col("c_bg") >= min_count)
     ctx_counts = bg.groupBy("prev").agg(F.count(F.lit(1)).alias("c_ctx"))
     vocab_size = bg.select("cur").distinct().count()
     return bg_counts, ctx_counts, int(vocab_size)

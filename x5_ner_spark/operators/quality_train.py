@@ -14,7 +14,7 @@ array_distinct), persists the (buckets, label) table, then iterates
 vectorized sparse gradient passes over the bucket arrays (``np.add.at``
 scatter — no tokenization, no md5, no Python string work per iteration).
 Train/serve feature parity is therefore BY CONSTRUCTION, not by twin-code
-discipline; the python twin ``featurize_texts`` exists for tests.
+discipline; its python twin ``featurize_texts`` lives in the tests.
 
 Features: BINARY hashed unigram presence (dim buckets, md5-based portable
 hash — the python twin of functions.columns.portable_hash32, so the numpy
@@ -53,7 +53,6 @@ from .gradient import gradient_sums, training_set
 __all__ = [
     "hash_bucket",
     "bucket_set_col",
-    "featurize_texts",
     "featurize_table",
     "lexicon_quality_model",
     "gopher_labels",
@@ -65,6 +64,10 @@ __all__ = [
     "save_quality_npz",
     "load_quality_npz",
 ]
+
+L2 = 1e-4
+"""L2 penalty of the logistic regression, applied by the driver once per
+step."""
 
 
 def bucket_set_col(
@@ -109,20 +112,6 @@ def hash_bucket(token: str, dim: int) -> int:
     """Python twin of ``pmod(portable_hash32(token), dim)`` — first 8 hex
     digits of md5, as the Column helper computes it."""
     return int(hashlib.md5(token.encode("utf-8")).hexdigest()[:8], 16) % dim
-
-
-def featurize_texts(texts: list[str], dim: int, ngrams: int = 1) -> np.ndarray:
-    """(n, dim) binary hashed unigram (+ optional bigram) presence over
-    lowercase whitespace tokens — the python twin of ``bucket_set_col``."""
-    x = np.zeros((len(texts), dim), dtype=np.float64)
-    for r, t in enumerate(texts):
-        toks = [w for w in (t or "").lower().split(" ") if w]
-        for w in toks:
-            x[r, hash_bucket(w, dim)] = 1.0
-        if ngrams >= 2:
-            for a, b in zip(toks, toks[1:]):
-                x[r, hash_bucket(f"{a} {b}", dim)] = 1.0
-    return x
 
 
 def _loss_and_grads(
@@ -246,13 +235,12 @@ def fit_quality_classifier(
     dim: int = 2048,
     iters: int = 80,
     lr: float = 2.0,
-    l2: float = 1e-4,
     ngrams: int = 1,
 ) -> tuple[np.ndarray, float]:
     """train(text, label) → (w, b): featurize once (``featurize_table``),
     then ``fit_from_features``."""
     return fit_from_features(
-        featurize_table(train, dim, ngrams), dim, iters=iters, lr=lr, l2=l2,
+        featurize_table(train, dim, ngrams), dim, iters=iters, lr=lr,
     )
 
 
@@ -261,7 +249,6 @@ def fit_from_features(
     dim: int = 2048,
     iters: int = 80,
     lr: float = 2.0,
-    l2: float = 1e-4,
 ) -> tuple[np.ndarray, float]:
     """(buckets, label) → (w, b) by full-batch gradient descent over the
     persisted feature table: each iteration is one cheap Spark job
@@ -304,8 +291,8 @@ def fit_from_features(
             )
             g /= float(n_total)
             obs.event("train_loss", trainer="quality", iter=it,
-                      loss=loss_sum / n_total + 0.5 * l2 * float(w @ w))
-            w = w - lr * (g[:dim] + l2 * w)
+                      loss=loss_sum / n_total + 0.5 * L2 * float(w @ w))
+            w = w - lr * (g[:dim] + L2 * w)
             b = b - lr * g[dim]
     return w, b
 

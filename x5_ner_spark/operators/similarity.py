@@ -156,59 +156,26 @@ def _cell_scores(vcol: Column, cents: list[tuple[int, list[float]]]) -> Column:
     ])
 
 
-def ivf_refine_centroids(
-    corpus: DataFrame, cents: list[tuple[int, list[float]]], n_iters: int = 1,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Lloyd refinement of the seeded-sample quantizer: assign every corpus
-    vector to its nearest cell (same inlined argmax as ivf_topk — map-only),
-    then recompute each cell's centroid as the element-wise mean (posexplode
-    → avg per (cell, dim) → reassemble; ONE shuffle per iteration, keyed on
-    (cell_id, dim) so no skew even with unbalanced cells). Cells that lose
-    all members keep their previous centroid. Deterministic given the seed
-    sample; improves cell balance / recall over raw sampling."""
-    for _ in range(n_iters):
-        assigned = corpus.select(
-            F.col(vec_col).alias("v"),
-            (-F.array_max(_cell_scores(F.col(vec_col), cents))["neg_cell"]).alias("cell_id"),
-        )
-        per_dim = (
-            assigned.select("cell_id", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cell_id", "dim")
-            .agg(F.avg("x").alias("m"))
-        )
-        new = (
-            per_dim.groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_dm"))
-            .withColumn("centroid", F.transform("_dm", lambda s: s["m"]))
-            .select("cell_id", "centroid")
-            .collect()
-        )
-        updated = {int(r["cell_id"]): [float(x) for x in r["centroid"]] for r in new}
-        cents = [(cid, updated.get(cid, cv)) for cid, cv in cents]
-    return cents
+IVF_N_PROBE = 2
+"""Cells each ``ivf_topk`` query probes."""
 
 
 def ivf_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 3, n_cells: int = 8,
-    n_probe: int = 2, id_col: str = "vec_id", vec_col: str = "embedding",
-    refine_iters: int = 0,
+    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style approximate top-k: seeded-sample quantizer
     (:func:`ivf_centroids`), corpus rows assigned to their nearest cell by an
     array-argmax over inlined centroids (zero Exchange on the corpus side —
     plan-asserted in tests/test_skew_plans.py), queries probe their
-    ``n_probe`` nearest cells, exact cosine rescoring inside probed cells.
+    ``IVF_N_PROBE`` nearest cells, exact cosine rescoring inside probed
+    cells.
 
     At 100 TB: assignment is a map-only pass over the corpus; the search
-    shuffles only on cell_id with |query|·n_probe probe rows broadcast.
-    ``refine_iters`` > 0 runs that many Lloyd iterations on the quantizer
-    (:func:`ivf_refine_centroids`) before assignment — the training path a
-    production IVF index uses; 0 keeps the oracle-mirrored raw sample."""
+    shuffles only on cell_id with |query|·IVF_N_PROBE probe rows broadcast.
+    The quantizer is the oracle-mirrored raw sample."""
     cents = ivf_centroids(corpus, n_cells, id_col, vec_col)
     corpus = scan_parallel(corpus)
-    if refine_iters:
-        cents = ivf_refine_centroids(corpus, cents, refine_iters, id_col, vec_col)
 
     c_assigned = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -216,7 +183,7 @@ def ivf_topk(
         (-F.array_max(_cell_scores(F.col(vec_col), cents))["neg_cell"]).alias("cell_id"),
     )
     # probe list: ascending struct sort is (cos asc, cell_id desc); reversed
-    # → (cos desc, cell_id asc); slice the first n_probe
+    # → (cos desc, cell_id asc); slice the first IVF_N_PROBE
     q_assigned = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -224,7 +191,7 @@ def ivf_topk(
             F.explode(
                 F.slice(
                     F.reverse(F.array_sort(_cell_scores(F.col(vec_col), cents))),
-                    1, n_probe,
+                    1, IVF_N_PROBE,
                 )
             ).alias("probe"),
         )

@@ -15,7 +15,6 @@ def pack_documents(
     budget_tokens: int,
     group_col: str = "source",
     id_col: str = "doc_id",
-    count_col: str | None = None,
 ) -> DataFrame:
     """Sequence packing — assign documents to fixed-token-budget training
     packs (the standard LLM-pretraining batching step): within each
@@ -28,11 +27,7 @@ def pack_documents(
     the pack its start falls into (documented greedy-contiguous semantics;
     ``spans_packs`` marks it). Emits (id, group, n_tokens, offset, pack_id,
     spans_packs)."""
-    n_tok = (
-        F.col(count_col)
-        if count_col
-        else F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-    ).cast("long")
+    n_tok = F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long")
     d = docs.select(
         F.col(id_col), F.col(group_col).alias("group"), n_tok.alias("n_tokens")
     )
@@ -49,17 +44,20 @@ def pack_documents(
     )
 
 
+MIX_SEED = 42
+"""Salt of ``mix_sample``'s keep hash."""
+
+
 def mix_sample(
     docs: DataFrame,
     fractions: dict[str, float],
     source_col: str = "source",
     id_col: str = "doc_id",
-    seed: int = 42,
 ) -> DataFrame:
     """Training-mix sampler: per-source deterministic Bernoulli sampling at
     the given fractions — how a 100 TB corpus is downweighted into a
     training mixture (e.g. {'web': 0.1, 'wiki': 1.0}). The keep decision is
-    a pure hash of (id, seed), so it is reproducible across runs, engines
+    a pure hash of (id, ``MIX_SEED``), so it is reproducible across runs, engines
     (md5-based portable_hash32), partitionings and resumes — no RNG state,
     no sampleBy nondeterminism. Map-only: the filter rides the scan;
     unlisted sources drop (explicit mixture contract). Fraction granularity
@@ -70,7 +68,7 @@ def mix_sample(
         thresh = int(round(min(max(frac, 0.0), 1.0) * million))
         cond = (F.col(source_col) == src) & (
             portable_hash32(
-                F.concat(F.col(id_col).cast("string"), F.lit(f"#mix{seed}"))
+                F.concat(F.col(id_col).cast("string"), F.lit(f"#mix{MIX_SEED}"))
             ) % million < thresh
         )
         expr = cond if expr is None else (expr | cond)

@@ -102,15 +102,14 @@ def zip_join(a: DataFrame, b: DataFrame, order_cols: list[str], compare_col: str
 
 def asof_join(
     left: DataFrame, right: DataFrame, key: str, ts: str,
-    value_cols: list[str], tolerance_s: int | None = None,
+    value_cols: list[str],
 ) -> DataFrame:
     """As-of join — the temporal operator Spark's DataFrame API lacks: each
     left row picks the LATEST right row with right.ts <= left.ts per key
     (DuckDB/pandas ASOF semantics, inclusive). Implemented as union + keyed
     window with last(ignorenulls) — ONE shuffle on the key, no range
     cross-join, no per-key collect; ties at equal ts resolve right-before-
-    left so an exactly-simultaneous right row matches. ``tolerance_s`` nulls
-    matches older than the window (pandas merge_asof tolerance).
+    left so an exactly-simultaneous right row matches.
 
     Tie rule (deterministic): among right rows tied on (key, ts), the row
     with the GREATEST (value_cols) tuple wins — the window order carries the
@@ -145,15 +144,6 @@ def asof_join(
     for c in value_cols:
         out = out.withColumn(f"_asof_{c}", F.col("_asof_row")[c])
     out = out.withColumn("_asof_ts", F.col("_asof_row._ts")).drop("_asof_row", "_side")
-    if tolerance_s is not None:
-        stale = (
-            F.unix_timestamp(F.col(ts)) - F.unix_timestamp(F.col("_asof_ts"))
-        ) > tolerance_s
-        for c in value_cols:
-            out = out.withColumn(
-                f"_asof_{c}", F.when(stale, F.lit(None)).otherwise(F.col(f"_asof_{c}"))
-            )
-        out = out.withColumn("_asof_ts", F.when(stale, F.lit(None)).otherwise(F.col("_asof_ts")))
     renames = {f"_asof_{c}": f"asof_{c}" for c in value_cols}
     for old, new in {**renames, "_asof_ts": "asof_ts"}.items():
         out = out.withColumnRenamed(old, new)

@@ -30,7 +30,6 @@ def fused_triples(
     brand_lexicon=frozenset(),
     emission_npz: str | None = None,
     long_doc: str = "truncate",
-    chunk_stride: int | None = None,
 ) -> DataFrame:
     """pages(url, html, text, ...) → (subj, pred, obj, url).
 
@@ -46,10 +45,7 @@ def fused_triples(
     — full web pages get analyzed past the reference's 160-piece truncation
     (ref infer.py:165-171; VERDICT r7 #1). Default 'truncate' = pinned
     reference behavior."""
-    load = mention_detector(
-        brand_lexicon, emission_npz=emission_npz, long_doc=long_doc,
-        chunk_stride=chunk_stride,
-    )
+    load = mention_detector(brand_lexicon, emission_npz=emission_npz, long_doc=long_doc)
     cols = pages.select(
         "url",
         "html" if "html" in pages.columns else F.lit(None).cast("binary").alias("html"),

@@ -314,7 +314,7 @@ def main() -> None:
         print(_fit(args, extract.run(pages)))
         return
 
-    out = run_pipeline(
+    run_pipeline(
         spark, pages, out_root=out_dir, brand_lexicon=lex,
         n_buckets=n_buckets, run_id=str(cfg["run_id"]),
         emission_npz=args.emission_npz,
@@ -322,7 +322,12 @@ def main() -> None:
         quality_npz=args.quality_npz,
         quality_min=args.quality_min,
     )
-    print({k: v.count() for k, v in out.items()})
+    # the committed row counts, from the manifests: counting the returned
+    # frames would run the pipeline again, its caches already released
+    print({
+        stage: graph.read_manifest(spark, out_dir, stage).groupBy().sum("n_rows").first()[0]
+        for stage in ("triples", "nodes", "edges")
+    })
 
 
 if __name__ == "__main__":
